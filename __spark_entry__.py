@@ -310,7 +310,6 @@ def _crawl(spark: SparkSession, sf_dir: str):
         pages,
         gen_robots(spark),
         allowed_host_suffix=".example.com",
-        use_bloom=True,
     )
     return engine.run(gen_seeds(spark, n), max_depth=CRAWL_DEPTH)
 
@@ -380,7 +379,6 @@ def q_crawl_redirects(spark: SparkSession, sf_dir: str) -> DataFrame:
         materialized_pages(spark, n),
         gen_robots(spark),
         allowed_host_suffix=".example.com",
-        use_bloom=True,
         redirects=gen_redirects(spark, n),
     ).run(gen_seeds(spark, n), max_depth=CRAWL_DEPTH)
     return res.url_seen.select(
@@ -390,7 +388,7 @@ def q_crawl_redirects(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_crawl_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Standalone stored-frontier leg (bench cell): the SAME BFS crawl run
-    the 10^10 cluster way — politeness pop active, ``pop_impl="threshold"``,
+    the 10^10 cluster way — politeness pop active (the threshold pop),
     and the frontier PERSISTED each epoch as a host-bucketed parquet table
     that the next epoch pops FROM (plans/crawl.CrawlEngine
     frontier_store_dir; the 'Iceberg scan = free materialization' claim,
@@ -407,8 +405,6 @@ def q_crawl_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
         materialized_pages(spark, n),
         gen_robots(spark),
         allowed_host_suffix=".example.com",
-        use_bloom=True,
-        pop_impl="threshold",
         frontier_store_dir=store,
         epoch_seconds=1e9,
     ).run(gen_seeds(spark, n), max_depth=CRAWL_DEPTH, politeness=True)
@@ -444,8 +440,6 @@ def q_crawl_hardened(spark: SparkSession, sf_dir: str) -> DataFrame:
         HZ.gen_hazard_pages(spark, m),
         HZ.gen_hazard_robots(spark),
         allowed_host_suffix=None,
-        use_bloom=True,
-        pop_impl="threshold",
         politeness_grain="domain",
         epoch_seconds=HZ.HAZ_EPOCH_SECONDS,
         redirects=HZ.gen_hazard_redirects(spark, m),
@@ -574,7 +568,7 @@ def q_politeness_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     seq and the run ends on the first no-progress epoch — closed-form:
     per-host rank < 200, all epoch_seen=0.
     'stored' (r5) — the 'drain' leg run the 10^10 cluster way: BINDING
-    budgets, ``pop_impl="threshold"``, frontier persisted per epoch as a
+    budgets, the threshold pop, frontier persisted per epoch as a
     host-bucketed parquet table the next epoch pops FROM
     (q_drain_stored); deferred hot-host overflow provably survives the
     store/scan round-trip — same closed-form oracle as 'drain'.
@@ -588,7 +582,7 @@ def q_politeness_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = materialized_pages(spark, _DRAIN_M)
     engine = CrawlEngine(
         spark, pages, robots=None, allowed_host_suffix=".example.com",
-        use_bloom=True, epoch_seconds=_DRAIN_EPOCH_SECONDS,
+        epoch_seconds=_DRAIN_EPOCH_SECONDS,
     )
     res = engine.run(seeds, max_depth=1, politeness=True, max_epochs=4)
     drain = res.url_seen.select(
@@ -621,7 +615,7 @@ def q_drain_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = materialized_pages(spark, _DRAIN_M)
     engine = CrawlEngine(
         spark, pages, robots=None, allowed_host_suffix=".example.com",
-        use_bloom=True, epoch_seconds=_DRAIN_EPOCH_SECONDS,
+        epoch_seconds=_DRAIN_EPOCH_SECONDS,
     )
     res = engine.run(
         seeds, max_depth=1, politeness=True, max_epochs=4, max_pages=_DRAIN_CAP
@@ -650,8 +644,8 @@ def q_drain_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = f"/tmp/sg_frontier_store_drain_{os.path.basename(sf_dir.rstrip('/'))}"
     engine = CrawlEngine(
         spark, pages, robots=None, allowed_host_suffix=".example.com",
-        use_bloom=True, epoch_seconds=_DRAIN_EPOCH_SECONDS,
-        pop_impl="threshold", frontier_store_dir=store,
+        epoch_seconds=_DRAIN_EPOCH_SECONDS,
+        frontier_store_dir=store,
     )
     res = engine.run(seeds, max_depth=1, politeness=True, max_epochs=4)
     return res.url_seen.select(
@@ -675,7 +669,7 @@ def q_drain_host_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = materialized_pages(spark, _DRAIN_M)
     engine = CrawlEngine(
         spark, pages, robots=None, allowed_host_suffix=".example.com",
-        use_bloom=True, epoch_seconds=_DRAIN_EPOCH_SECONDS,
+        epoch_seconds=_DRAIN_EPOCH_SECONDS,
     )
     res = engine.run(
         seeds, max_depth=1, politeness=True, max_epochs=4,
@@ -1061,8 +1055,8 @@ def q_composite_prior(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_urlseen_antijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1: bloom-prefiltered anti-join membership over n synthetic URLs —
     running the SHARDED bloom build+probe (the 10^10-key deployment shape,
-    operators/urlseen.py ShardedBloom); lossless, so the oracle is the same
-    exact set difference."""
+    operators/urlseen.build_bloom_sharded); lossless, so the oracle is the
+    same exact set difference."""
     from mcp_crawl4ai_rag_spark.operators.urlseen import build_bloom_sharded
 
     n = _lineitem_count(spark, sf_dir)
@@ -7452,7 +7446,6 @@ def entry(spark: SparkSession) -> DataFrame:
         gen_pages(spark, n),
         gen_robots(spark),
         allowed_host_suffix=".example.com",
-        use_bloom=True,
     )
     res = engine.run(gen_seeds(spark, n), max_depth=CRAWL_DEPTH, politeness=True)
     docs = res.fetched.select(

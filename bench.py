@@ -240,36 +240,17 @@ def frontier_epoch(
     the window exchanges actually carry:
     - "count" (headline metric, comparable across rounds): popped.count();
       Catalyst column-prunes the two-phase pop's exchanges to the narrow
-      ranking keys, so both pop impls shuffle near-identical bytes
-      (measured: BENCH/bench_r3_pop_shuffle_bytes.json).
+      ranking keys (measured: BENCH/bench_r3_pop_shuffle_bytes.json).
     - "noop": noop-sink both popped and deferred at FULL width — the
       engine-faithful shape (plans/crawl.py checkpoints popped with all
       columns and feeds deferred to the next epoch), where the two-phase
-      exchanges must carry URL strings and the threshold pop's
-      zero-wide-row-shuffle property matters."""
+      exchanges must carry URL strings."""
     from pyspark.sql import functions as F
 
     from mcp_crawl4ai_rag_spark.functions.urls import url_hash
     from mcp_crawl4ai_rag_spark.operators.politeness import (
         attach_budgets,
         pop_per_host,
-        pop_per_host_threshold,
-    )
-
-    # SPARK_GRAFT_POP_IMPL=threshold re-measures the epoch through the
-    # zero-wide-row-shuffle threshold pop for A/B comparison. Default is
-    # the two-phase pop: the interleaved paired A/B (BENCH/
-    # bench_r3_ab_pairs_postfix.json, median twophase/threshold 0.51)
-    # showed it wins wall-clock on one box — its exchanges double as
-    # materialization for the dual popped/deferred read, while the
-    # threshold DAG pays an explicit localCheckpoint. The threshold pop
-    # shuffles a small fraction of the BYTES (BENCH/
-    # bench_r3_pop_shuffle_bytes.json) and is the stored-frontier /
-    # real-network-shuffle shape; outputs are pinned identical in tests.
-    pop = (
-        pop_per_host_threshold
-        if os.environ.get("SPARK_GRAFT_POP_IMPL") == "threshold"
-        else pop_per_host
     )
     from mcp_crawl4ai_rag_spark.operators.urlseen import anti_join_seen, build_bloom
 
@@ -318,7 +299,7 @@ def frontier_epoch(
     t_bloom = time.time() - t0
     fresh = anti_join_seen(frontier, url_seen, bloom)
     with_b = attach_budgets(fresh, None, None, epoch_seconds=budget_seconds)
-    popped, deferred = pop(with_b, None)
+    popped, deferred = pop_per_host(with_b, None)
     if consumer == "noop":
         popped.write.format("noop").mode("overwrite").save()
         deferred.write.format("noop").mode("overwrite").save()
@@ -364,9 +345,8 @@ def stored_epoch_time(spark, n: int, reps: int = 2) -> float:
     the frontier lives in a host-BUCKETED parquet table
     (CrawlEngine._store_frontier — one definition), the timed region is
     bloom+anti-join dedup → budget attach → THRESHOLD pop straight off
-    the table scan (materialize=False: the table IS the
-    materialization), with BOTH pop outputs consumed at FULL width (the
-    engine-faithful shape, where the bucket layout's zero-Exchange pop
+    the table scan (the table IS the materialization), with BOTH pop
+    outputs consumed at FULL width (the engine-faithful shape, where the bucket layout's zero-Exchange pop
     actually matters; tools/stored_pop_witness.py measures the pop at
     0 shuffled bytes vs 626 MB for the in-memory two-phase). The table
     write itself is untimed — on the deployment cluster the previous
@@ -402,7 +382,7 @@ def stored_epoch_time(spark, n: int, reps: int = 2) -> float:
     td = tempfile.mkdtemp(prefix="bench_stored_frontier_")
     eng = CrawlEngine(
         spark, urls(spark.range(0)).limit(0),
-        frontier_store_dir=td, pop_impl="threshold",
+        frontier_store_dir=td,
     )
     stored = eng._store_frontier(0, urls(spark.range(0, n, 1, SHUFFLE_PARTITIONS)))
     url_seen = urls(spark.range(0, n, 3, SHUFFLE_PARTITIONS)).select(
@@ -415,7 +395,7 @@ def stored_epoch_time(spark, n: int, reps: int = 2) -> float:
         bloom = build_bloom(url_seen, "url_hash", expected=n // 3)
         fresh = anti_join_seen(stored, url_seen, bloom)
         with_b = attach_budgets(fresh, None, None, epoch_seconds=budget_seconds)
-        popped, deferred = pop_per_host_threshold(with_b, None, materialize=False)
+        popped, deferred = pop_per_host_threshold(with_b, None)
         popped.write.format("noop").mode("overwrite").save()
         deferred.write.format("noop").mode("overwrite").save()
         return time.time() - t0

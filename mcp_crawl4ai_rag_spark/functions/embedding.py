@@ -113,30 +113,6 @@ def with_embeddings_cached(
     return with_fp.join(uniq, "__text_md5").drop("__text_md5")
 
 
-def embed_texts_mapinpandas(
-    df: DataFrame,
-    text_col: str = "content",
-    out_col: str = "embedding",
-    dim: int = EMBEDDING_DIM,
-) -> DataFrame:
-    """mapInPandas variant — the shape a remote-API embedder needs (one
-    client per partition, batched requests; reference EMBEDDING_BATCH_SIZE
-    twins ``spark.sql.execution.arrow.maxRecordsPerBatch``)."""
-    from pyspark.sql.types import StructField, StructType
-
-    # copy — StructType.add mutates the DataFrame's cached schema object
-    schema_out = StructType(
-        df.schema.fields + [StructField(out_col, ArrayType(FloatType()))]
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf[out_col] = _embed_batch(_clip_series(pdf[text_col]), dim)
-            yield pdf
-
-    return df.mapInPandas(gen, schema=schema_out)
-
-
 def embed_query(query: str, contextual: bool = False, dim: int = EMBEDDING_DIM) -> list[float]:
     """Query-side embedding; when ``contextual`` the reference prepends a
     search prompt (src/utils.py:552-561)."""

@@ -1,23 +1,15 @@
 """Vector math over ``array<float>`` columns.
 
 Covers the reference's pgvector surface (cosine distance top-k,
-crawled_pages.sql:49-61) with two execution strategies:
-
-- ``cosine_expr``: pure Catalyst expression (zip_with + aggregate) — stays in
-  whole-stage codegen, ideal inside filters/joins at small dims;
-- ``cosine_udf``: Arrow-batched numpy matmul — one BLAS GEMV per Arrow batch,
-  the fast path for wide scans (1536-dim × millions of rows).
-
-Both compute in float64 and agree to ~1e-7; oracle comparisons round to 4dp.
+crawled_pages.sql:49-61) as pure Catalyst expressions (zip_with +
+aggregate) that stay in whole-stage codegen, inside filters and joins too.
+They compute in float64; oracle comparisons round to 4dp.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType
 
 
 def dot_expr(a: Column, b: Column) -> Column:
@@ -40,27 +32,3 @@ def cosine_expr(a: Column, b: Column) -> Column:
     """Cosine similarity as a Catalyst expression (1 - pgvector's ``<=>``,
     reference crawled_pages.sql:57)."""
     return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
-
-
-def cosine_udf(query_vec: list[float]):
-    """Arrow-batched cosine similarity against a fixed query vector.
-
-    The query vector is captured in the UDF closure (broadcast with the
-    task binary — a few KB); each Arrow batch becomes one numpy matrix and
-    one GEMV. No per-row Python.
-    """
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = np.linalg.norm(q)
-
-    @F.pandas_udf(DoubleType())
-    def _cos(vecs: pd.Series) -> pd.Series:
-        mat = np.vstack(vecs.to_numpy())  # (batch, dim) float32 → float64 below
-        mat = mat.astype(np.float64, copy=False)
-        dots = mat @ q
-        norms = np.linalg.norm(mat, axis=1)
-        denom = norms * qn
-        # guard zero vectors
-        out = np.where(denom > 0, dots / np.where(denom == 0, 1.0, denom), 0.0)
-        return pd.Series(out)
-
-    return _cos

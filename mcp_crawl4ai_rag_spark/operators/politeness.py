@@ -26,8 +26,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .. import SER_CKPT_LEVEL as _SER_LEVEL  # single engine-wide definition
-
 from ..config import (
     DEFAULT_SALT_LANES,
     EPOCH_SECONDS,
@@ -141,7 +139,6 @@ def pop_per_host_threshold(
     frontier: DataFrame,
     budgets: DataFrame | None,
     salt_lanes: int = DEFAULT_SALT_LANES,
-    materialize: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """:func:`pop_per_host` with ZERO wide-row shuffle — identical output
     whenever the (depth, priority, seq) order tuple is unique per host,
@@ -170,19 +167,16 @@ def pop_per_host_threshold(
     bloom fold bitsets; this stays the shape at N→4N executors because the
     threshold table grows with hosts, not with frontier rows.
 
-    ``materialize`` (default True): the threshold plan is a DAG, not a
+    Pops from a STORED or materialized frontier: the plan is a DAG, not a
     line — the narrow ranking branch and the wide filter branch both read
     ``frontier``, and Spark executes them as separate jobs (the thresholds
-    must exist before the broadcast). With a lazy input whose lineage
-    carries the epoch's bloom probe + exact anti-join, that upstream runs
-    TWICE — measured 1.3-2x slower than the old two-phase pop on the 16M
-    frontier epoch (BENCH/bench_r3_ab_pairs.json) despite shuffling a
-    fraction of the bytes. An eager localCheckpoint here pins the deduped
-    frontier once so both branches scan materialized blocks; on a real
-    cluster the equivalent is popping from the frontier TABLE (Iceberg
-    scan), where the second read is a column-pruned scan, not a recompute.
-    Pass ``materialize=False`` only when the caller hands in an
-    already-materialized (checkpointed/cached) frontier.
+    must exist before the broadcast). Over a stored table (the engine's
+    ``frontier_store_dir`` mode) the second read is a column-pruned scan;
+    over a lazy input whose lineage carries the epoch's bloom probe + exact
+    anti-join, that upstream would run TWICE (measured 1.3-2x slower than
+    :func:`pop_per_host` on the 16M frontier epoch, BENCH/
+    bench_r3_ab_pairs.json), which is why the engine pops an in-memory
+    frontier with :func:`pop_per_host` instead.
     """
     if budgets is None and "budget" not in frontier.columns:
         return frontier, frontier.limit(0)
@@ -191,8 +185,6 @@ def pop_per_host_threshold(
         fr = frontier
     else:
         fr = frontier.join(F.broadcast(budgets), on="host", how="left")
-    if materialize:
-        fr = fr.localCheckpoint(eager=True, storageLevel=_SER_LEVEL)
 
     tup = F.struct(F.col("depth"), F.col("priority"), F.col("seq"))
     # Unlimited hosts (budget NULL) pop everything — they need no

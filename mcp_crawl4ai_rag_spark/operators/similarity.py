@@ -17,9 +17,8 @@ Exact arithmetic notes: all dot products fold left-to-right in float64 via
 reproduces every sum bit-for-bit; similarities are rounded to 4dp at the
 output boundary only.
 
-The wide-scan fast path (one BLAS GEMV per Arrow batch) is
-functions/vectors.cosine_udf; these builders default to the pure-Catalyst
-expression so the whole plan stays in codegen at oracle-testable scale.
+The builders use the pure-Catalyst cosine (functions/vectors.cosine_expr),
+so the whole plan stays in codegen.
 """
 
 from __future__ import annotations

@@ -10,8 +10,8 @@ construction (property-tested), so the split is lossless.
 
 Scale notes (10^10 URLs): a monolithic 1%-FPP bloom for 1e10 keys is ~12 GB —
 too big to broadcast. :func:`build_bloom_sharded` is the deployment shape:
-the bitset is sharded by ``pmod(url_hash, n_shards)`` so each fold task and
-each probing executor holds one m/S-bit shard (see :class:`ShardedBloom`).
+the bitset is sharded by ``pmod(url_hash, n_shards)`` so each fold task
+holds one m/S-bit shard (``BloomFilter(n_shards=S)``).
 Raising FPP for the pre-filter role also helps (a 10% FPP filter is 5x
 smaller and still removes 90% of the join traffic). The exact anti-join
 stays bucketed on ``url_hash`` so state and probes co-locate.
@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import math
 from collections.abc import Iterator
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 import numpy as np
 import pandas as pd
@@ -56,18 +56,43 @@ def _indices(hashes: np.ndarray, m: int, k: int) -> np.ndarray:
 
 @dataclass
 class BloomFilter:
-    """Immutable bitset bloom over int64 hashes."""
+    """Bitset bloom over int64 hashes, optionally sharded by hash.
 
-    bits: np.ndarray  # uint8 array, m bits packed
-    m: int
+    With ``n_shards > 1`` the filter is ``n_shards`` m-bit shards laid end
+    to end in ``bits``: hash ``h`` lives only in shard ``pmod(h, n_shards)``
+    (the 10^10-key deployment shape, see :func:`build_bloom_sharded`). A
+    probe is one fancy-index gather over ``bits`` either way, so a
+    sharded probe costs what a monolithic one does."""
+
+    bits: np.ndarray  # uint8, n_shards packed m-bit shards end to end
+    m: int  # bits per shard
     k: int
+    n_shards: int = 1
 
     @classmethod
-    def sized_for(cls, n_items: int, fpp: float = BLOOM_FPP) -> "BloomFilter":
-        n = max(n_items, 1)
+    def sized_for(
+        cls, n_items: int, fpp: float = BLOOM_FPP, n_shards: int = 1
+    ) -> "BloomFilter":
+        # a shard holds ~1/n_shards of the keys (+1 covers the remainder)
+        n = max(n_items if n_shards == 1 else n_items // n_shards + 1, 1)
         m = max(64, int(-n * math.log(fpp) / (math.log(2) ** 2)))
         k = max(1, round(m / n * math.log(2)))
-        return cls(bits=np.zeros((m + 7) // 8, dtype=np.uint8), m=m, k=k)
+        bits = np.zeros(n_shards * ((m + 7) // 8), dtype=np.uint8)
+        return cls(bits=bits, m=m, k=k, n_shards=n_shards)
+
+    @property
+    def bytes_per_shard(self) -> int:
+        return (self.m + 7) // 8
+
+    def _positions(self, hashes: np.ndarray) -> np.ndarray:
+        """(k, n) bit positions into ``bits``: the double-hash probes within
+        the shard, offset to the hash's shard when sharded."""
+        idx = _indices(hashes, self.m, self.k)
+        if self.n_shards > 1:
+            # numpy's floored mod == Spark pmod for positive modulus
+            shard = np.mod(hashes.astype(np.int64), self.n_shards)
+            idx += shard * (self.bytes_per_shard * 8)  # broadcasts over k
+        return idx
 
     def add_hashes(self, hashes: np.ndarray) -> None:
         # np.bitwise_or.at is an unbuffered scatter and turns superlinear past
@@ -80,7 +105,7 @@ class BloomFilter:
         # gated on the filter size staying proportional to the batch; huge
         # sparse filters take the sort+reduceat path instead — O(n log n)
         # time, O(n) memory, same resulting bitset (pinned in tests).
-        idx = _indices(hashes, self.m, self.k).ravel()
+        idx = self._positions(hashes).ravel()
         if idx.size >= 1 << 20:
             m_bool_bytes = len(self.bits) * 8
             if m_bool_bytes <= max(1 << 26, idx.size << 4):
@@ -103,25 +128,29 @@ class BloomFilter:
     def contains_hashes(self, hashes: np.ndarray) -> np.ndarray:
         if len(hashes) == 0:
             return np.zeros(0, dtype=bool)
-        idx = _indices(hashes, self.m, self.k)  # (k, n)
+        idx = self._positions(hashes)  # (k, n)
         bit = (self.bits[idx >> 3] >> (idx & 7).astype(np.uint8)) & 1
         return bit.all(axis=0)
 
     def merge(self, other: "BloomFilter") -> "BloomFilter":
-        assert self.m == other.m and self.k == other.k
-        return BloomFilter(bits=np.bitwise_or(self.bits, other.bits), m=self.m, k=self.k)
+        assert (self.m, self.k, self.n_shards) == (other.m, other.k, other.n_shards)
+        return replace(self, bits=np.bitwise_or(self.bits, other.bits))
 
 
 # Above this bitset size build_bloom() delegates to the sharded build: the
-# monolithic fold collects ``fold_partitions`` FULL m-bit bitsets, so driver
-# result bytes grow O(folds × m) — at a 1B-URL frontier epoch (333M seen keys,
-# 399 MB bitset × 16 folds ≈ 6.4 GB) the collect blows the default 1 GiB
-# spark.driver.maxResultSize (measured: BENCH/bench_r5_ladder_deep.jsonl, the
-# failed 1B rung). The sharded build keeps the collect O(m) TOTAL, at the cost
-# of one narrow repartition of (hash, shard) pairs — cheap relative to a
-# >64 MB driver merge, and the honest 10^10 deployment shape anyway.
-BLOOM_AUTO_SHARD_BYTES = 64 * 1024 * 1024
+# monolithic fold collects one FULL bitset per fold task, so the driver
+# receives _FOLD_PARTITIONS × bitset bytes. The default
+# spark.driver.maxResultSize is 1 GiB; 16 folds × 32 MiB = 512 MiB keeps the
+# collect at half of it (at 64 MiB it was 16 × 64 MiB = the whole limit; the
+# 1B-URL rung, 399 MB × 16 ≈ 6.4 GB, measurably failed:
+# BENCH/bench_r5_ladder_deep.jsonl). The sharded build keeps the collect O(m)
+# TOTAL, at the cost of one narrow repartition of (hash, shard) pairs.
+BLOOM_AUTO_SHARD_BYTES = 32 * 1024 * 1024
 _BLOOM_SHARD_TARGET_BYTES = 32 * 1024 * 1024
+# Fold tasks per filter build: each carries a FULL filter, so cost (alloc +
+# driver collect) is O(folds × m) while the hashing itself is cheap —
+# coalescing to ~16 folds is a ~10x win over folding on 64+ scan partitions.
+_FOLD_PARTITIONS = 16
 
 
 def build_bloom(
@@ -129,32 +158,22 @@ def build_bloom(
     hash_col: str,
     expected: int | None = None,
     fpp: float = BLOOM_FPP,
-    fold_partitions: int = 16,
-) -> "BloomFilter | ShardedBloom":
-    """Distributed build: each partition folds its Arrow batches into a local
-    bitset (mapInPandas), the driver ORs the per-partition bitsets. One pass,
-    no shuffle; only bitsets cross to the driver.
-
-    ``fold_partitions`` bounds the number of per-partition bitsets: each fold
-    task carries a FULL m-bit bitset, so cost (alloc + driver collect) is
-    O(partitions × m) while the hashing itself is cheap — coalescing to ~16
-    folds is a ~10x win over folding on 64+ scan partitions. Once the bitset
-    exceeds ``BLOOM_AUTO_SHARD_BYTES`` the build auto-delegates to
+) -> BloomFilter:
+    """Distributed build: each of ``_FOLD_PARTITIONS`` tasks folds its Arrow
+    batches into a local bitset (mapInPandas), the driver ORs the bitsets.
+    One pass, no shuffle; only bitsets cross to the driver. Once the bitset
+    exceeds ``BLOOM_AUTO_SHARD_BYTES`` the build delegates to
     :func:`build_bloom_sharded` (collect O(m) total across shard-sized
-    bitsets); probes are polymorphic (:func:`bloom_maybe_contains` takes
-    either), so callers never need to pick."""
+    bitsets); both return a :class:`BloomFilter`, so callers never pick."""
     if expected is None:
         expected = df.count()
-    proto = BloomFilter.sized_for(expected, fpp)
-    m, k = proto.m, proto.k
-    bitset_bytes = (m + 7) // 8
-    if bitset_bytes > BLOOM_AUTO_SHARD_BYTES:
-        n_shards = max(8, -(-bitset_bytes // _BLOOM_SHARD_TARGET_BYTES))
+    out = BloomFilter.sized_for(expected, fpp)
+    m, k = out.m, out.k
+    if len(out.bits) > BLOOM_AUTO_SHARD_BYTES:
+        n_shards = max(8, -(-len(out.bits) // _BLOOM_SHARD_TARGET_BYTES))
         return build_bloom_sharded(
             df, hash_col, n_shards=n_shards, expected=expected, fpp=fpp
         )
-    if fold_partitions:
-        df = df.select(hash_col).coalesce(fold_partitions)
 
     def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         local = BloomFilter(bits=np.zeros((m + 7) // 8, dtype=np.uint8), m=m, k=k)
@@ -166,54 +185,10 @@ def build_bloom(
         if seen_any:
             yield pd.DataFrame({"bits": [local.bits.tobytes()]})
 
-    parts = df.select(hash_col).mapInPandas(fold, schema="bits binary").collect()
-    out = proto
-    for row in parts:
+    folds = df.select(hash_col).coalesce(_FOLD_PARTITIONS)
+    for row in folds.mapInPandas(fold, schema="bits binary").collect():
         out.bits |= np.frombuffer(row["bits"], dtype=np.uint8)
     return out
-
-
-@dataclass
-class ShardedBloom:
-    """Bit-space-sharded bloom: shard ``s`` holds only hashes with
-    ``pmod(hash, n_shards) == s``, each in its own m/S-bit bitset.
-
-    This is the 10^10-key deployment shape promised in the module notes: a
-    monolithic 1%-FPP bloom over 1e10 keys is ~12 GB — too big to collect or
-    broadcast — but S=1024 shards are ~12 MB each, built by repartitioning
-    the seen-set on the shard key so every fold task allocates exactly one
-    shard-sized bitset and the driver collect stays O(m) total. On a real
-    cluster the frontier is bucketed by ``pmod(url_hash, B)`` with S | B, so
-    probes are shard-aligned: each executor needs only its own shard. In
-    local mode the probe closure carries all shards (equivalent, since one
-    machine holds everything anyway)."""
-
-    shards: list[BloomFilter]
-    n_shards: int
-
-    def contains_hashes(self, hashes: np.ndarray) -> np.ndarray:
-        # Single-gather probe over the CONCATENATED shard bitsets: shard s
-        # occupies bytes [s*bpp, (s+1)*bpp), so the global byte index is
-        # s*bpp + (in-shard bit >> 3) — one vectorized fancy-index for the
-        # whole batch. The earlier per-shard mask/gather/scatter loop cost
-        # ~2x the whole frontier epoch at 256M URLs (BENCH/
-        # bench_r5_ladder_deep.jsonl, 214.7s vs 117.7s monolithic); this
-        # path prices the sharded probe the same as the monolithic one.
-        h = hashes.astype(np.int64)
-        if len(h) == 0:
-            return np.zeros(0, dtype=bool)
-        flat = getattr(self, "_flat", None)
-        if flat is None or len(flat) != len(self.shards[0].bits) * self.n_shards:
-            flat = np.concatenate([bf.bits for bf in self.shards])
-            self._flat = flat
-        m, k = self.shards[0].m, self.shards[0].k
-        bpp = len(self.shards[0].bits)
-        # numpy's floored mod == Spark pmod for positive modulus
-        shard_of = np.mod(h, self.n_shards).astype(np.int64)
-        idx = _indices(h, m, k)  # (k, n) bit positions within the shard
-        byte_idx = (idx >> 3) + shard_of * bpp  # broadcasts over the k rows
-        bit = (flat[byte_idx] >> (idx & 7).astype(np.uint8)) & 1
-        return bit.all(axis=0)
 
 
 def build_bloom_sharded(
@@ -222,17 +197,19 @@ def build_bloom_sharded(
     n_shards: int = 8,
     expected: int | None = None,
     fpp: float = BLOOM_FPP,
-) -> ShardedBloom:
+) -> BloomFilter:
     """Distributed sharded build: repartition the seen-set on
     ``pmod(hash, n_shards)`` so each task sees (mostly) one shard, fold each
-    shard's hashes into its own m/S-bit bitset, OR same-shard bitsets on the
-    driver. Lossless per shard (same zero-false-negative property as the
-    monolithic build — property-tested)."""
+    shard's hashes into its own m-bit bitset, OR each into its shard's slice
+    of the result on the driver. A monolithic 1%-FPP bloom over 1e10 keys is
+    ~12 GB — too big to collect from every fold — but each of S=1024
+    shards is ~12 MB, so every fold task allocates shard-sized bitsets and
+    the driver collect stays O(m) total. Lossless per shard (same
+    zero-false-negative property as the monolithic build — property-tested)."""
     if expected is None:
         expected = df.count()
-    per_shard = max(expected // n_shards + 1, 1)
-    proto = BloomFilter.sized_for(per_shard, fpp)
-    m, k = proto.m, proto.k
+    out = BloomFilter.sized_for(expected, fpp, n_shards)
+    m, k, bps = out.m, out.k, out.bytes_per_shard
 
     sharded = df.select(
         F.col(hash_col).alias("h"),
@@ -249,61 +226,27 @@ def build_bloom_sharded(
             for s in np.unique(sh):
                 bf = local.setdefault(
                     int(s),
-                    BloomFilter(
-                        bits=np.zeros((m + 7) // 8, dtype=np.uint8), m=m, k=k
-                    ),
+                    BloomFilter(bits=np.zeros(bps, dtype=np.uint8), m=m, k=k),
                 )
                 bf.add_hashes(h[sh == s])
         for s, bf in local.items():
             yield pd.DataFrame({"shard": [s], "bits": [bf.bits.tobytes()]})
 
-    parts = sharded.mapInPandas(fold, schema="shard int, bits binary").collect()
-    shards = [
-        BloomFilter(bits=np.zeros((m + 7) // 8, dtype=np.uint8), m=m, k=k)
-        for _ in range(n_shards)
-    ]
-    for row in parts:
-        shards[row["shard"]].bits |= np.frombuffer(row["bits"], dtype=np.uint8)
-    return ShardedBloom(shards=shards, n_shards=n_shards)
+    for row in sharded.mapInPandas(fold, schema="shard int, bits binary").collect():
+        s = row["shard"]
+        out.bits[s * bps : (s + 1) * bps] |= np.frombuffer(row["bits"], dtype=np.uint8)
+    return out
 
 
-def bloom_maybe_contains(bloom: "BloomFilter | ShardedBloom", hash_col: Column) -> Column:
-    """Arrow-batched membership probe column (broadcast via task closure).
-    Accepts the monolithic filter or the sharded one (probe routes each hash
-    to its shard's bitset)."""
-    if isinstance(bloom, ShardedBloom):
-        # Ship ONE concatenated bitset and probe it with the same
-        # single-gather arithmetic as ShardedBloom.contains_hashes —
-        # frombuffer per Arrow batch is zero-copy, and no per-batch shard
-        # reconstruction or per-shard routing loop survives in the hot path.
-        flat_payload = b"".join(bf.bits.tobytes() for bf in bloom.shards)
-        m, k, n_shards = bloom.shards[0].m, bloom.shards[0].k, bloom.n_shards
-        bpp = len(bloom.shards[0].bits)
-
-        @F.pandas_udf(BooleanType())
-        def _probe_sharded(h: pd.Series) -> pd.Series:
-            flat = np.frombuffer(flat_payload, dtype=np.uint8)
-            hv = h.to_numpy(dtype=np.int64)
-            if len(hv) == 0:
-                return pd.Series(np.zeros(0, dtype=bool))
-            shard_of = np.mod(hv, n_shards).astype(np.int64)
-            idx = _indices(hv, m, k)
-            byte_idx = (idx >> 3) + shard_of * bpp
-            bit = (flat[byte_idx] >> (idx & 7).astype(np.uint8)) & 1
-            return pd.Series(bit.all(axis=0))
-
-        return _probe_sharded(hash_col)
-
-    # Serialize the bitset ONCE into the task closure: tobytes() inside the
-    # UDF would memcpy the full m-bit array on every ~10k-row Arrow batch
-    # (measured ~1600 copies x 6.4 MB per 16M-row epoch pass).
-    payload_bits, m, k = bloom.bits.tobytes(), bloom.m, bloom.k
+def maybe_contains(filt, hash_col: Column) -> Column:
+    """Arrow-batched membership probe column for any filter with
+    ``contains_hashes`` (bloom, sharded or not; cuckoo, sharded or not).
+    The filter rides in the UDF closure, so it is serialized once per task
+    and each Arrow batch probes it in place — no per-batch copy."""
 
     @F.pandas_udf(BooleanType())
     def _probe(h: pd.Series) -> pd.Series:
-        # frombuffer over the closure bytes is zero-copy (read-only view)
-        bf = BloomFilter(bits=np.frombuffer(payload_bits, dtype=np.uint8), m=m, k=k)
-        return pd.Series(bf.contains_hashes(h.to_numpy(dtype=np.int64)))
+        return pd.Series(filt.contains_hashes(h.to_numpy(dtype=np.int64)))
 
     return _probe(hash_col)
 
@@ -311,13 +254,13 @@ def bloom_maybe_contains(bloom: "BloomFilter | ShardedBloom", hash_col: Column) 
 def anti_join_seen(
     candidates: DataFrame,
     url_seen: DataFrame,
-    bloom: "BloomFilter | ShardedBloom | CuckooFilter | ShardedCuckoo | None" = None,
+    bloom: "BloomFilter | CuckooFilter | ShardedCuckoo | None" = None,
 ) -> DataFrame:
     """Rows of ``candidates`` whose (url_hash, canonical_url) is NOT in
     ``url_seen`` — the J1/J2 visited-membership kernel (SURVEY.md §2.3).
 
-    With an approximate-membership prefilter over url_seen's hashes (bloom,
-    sharded bloom, or cuckoo), the definitely-new rows skip the shuffle
+    With an approximate-membership prefilter over url_seen's hashes (bloom
+    or cuckoo, sharded or not), the definitely-new rows skip the shuffle
     entirely; only maybe-seen rows join. Lossless: none of the filters has
     false negatives (the cuckoo build raises on overflow to guarantee it).
     """
@@ -327,13 +270,8 @@ def anti_join_seen(
             on=["url_hash", "canonical_url"],
             how="left_anti",
         )
-    probe = (
-        cuckoo_maybe_contains
-        if isinstance(bloom, (CuckooFilter, ShardedCuckoo))
-        else bloom_maybe_contains
-    )
     flagged = candidates.withColumn(
-        "__maybe_seen", probe(bloom, F.col("url_hash"))
+        "__maybe_seen", maybe_contains(bloom, F.col("url_hash"))
     )
     definitely_new = flagged.where(~F.col("__maybe_seen")).drop("__maybe_seen")
     maybe = flagged.where(F.col("__maybe_seen")).drop("__maybe_seen")
@@ -349,7 +287,6 @@ def build_cuckoo(
     df: DataFrame,
     hash_col: str,
     capacity: int | None = None,
-    fold_partitions: int = 16,
 ) -> "CuckooFilter":
     """Distributed cuckoo build, same shape as :func:`build_bloom`: each
     fold task inserts its Arrow batches into a local table, the driver
@@ -369,8 +306,6 @@ def build_cuckoo(
         capacity = max(df.count() * 2, 8)
     proto = CuckooFilter(capacity=capacity)
     n_buckets = proto.n_buckets
-    if fold_partitions:
-        df = df.select(hash_col).coalesce(fold_partitions)
 
     def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         local = CuckooFilter(capacity=n_buckets * 4)
@@ -382,7 +317,8 @@ def build_cuckoo(
         if seen_any:
             yield pd.DataFrame({"table": [local.table.tobytes()]})
 
-    parts = df.select(hash_col).mapInPandas(fold, schema="table binary").collect()
+    folds = df.select(hash_col).coalesce(_FOLD_PARTITIONS)
+    parts = folds.mapInPandas(fold, schema="table binary").collect()
     out = proto
     for row in parts:
         other = CuckooFilter(capacity=n_buckets * 4)
@@ -398,7 +334,7 @@ class ShardedCuckoo:
     """Hash-space-sharded cuckoo: shard ``s`` holds only hashes with
     ``pmod(hash, n_shards) == s``, each in its own capacity/S table.
 
-    Same deployment argument as :class:`ShardedBloom`: at the 10^10-URL
+    Same deployment argument as :func:`build_bloom_sharded`: at the 10^10-URL
     north-rule scale a monolithic cuckoo table is ~40 GB and the
     :func:`build_cuckoo` driver merge re-inserts every fingerprint on one
     machine. Sharding makes each fold task allocate exactly one
@@ -474,43 +410,6 @@ def build_cuckoo_sharded(
         )
         shards[row["shard"]] = shards[row["shard"]].merge(other)
     return ShardedCuckoo(shards=shards, n_shards=n_shards)
-
-
-def cuckoo_maybe_contains(
-    cuckoo: "CuckooFilter | ShardedCuckoo", hash_col: Column
-) -> Column:
-    """Arrow-batched cuckoo membership probe (vectorized two-bucket gather).
-    Accepts the monolithic filter or the sharded one (probe routes each
-    hash to its shard's table)."""
-    if isinstance(cuckoo, ShardedCuckoo):
-        payload = [cf.table.tobytes() for cf in cuckoo.shards]
-        n_buckets = cuckoo.shards[0].n_buckets
-        n_shards = cuckoo.n_shards
-
-        @F.pandas_udf(BooleanType())
-        def _probe_sharded(h: pd.Series) -> pd.Series:
-            shards = []
-            for b in payload:
-                cf = CuckooFilter(capacity=n_buckets * 4)
-                cf.table = np.frombuffer(b, dtype=np.uint16).reshape(n_buckets, 4)
-                shards.append(cf)
-            sc = ShardedCuckoo(shards=shards, n_shards=n_shards)
-            return pd.Series(sc.contains_hashes(h.to_numpy(dtype=np.int64)))
-
-        return _probe_sharded(hash_col)
-
-    table_bytes = cuckoo.table.tobytes()
-    n_buckets = cuckoo.n_buckets
-
-    @F.pandas_udf(BooleanType())
-    def _probe(h: pd.Series) -> pd.Series:
-        cf = CuckooFilter(capacity=n_buckets * 4)
-        cf.table = np.frombuffer(table_bytes, dtype=np.uint16).reshape(
-            n_buckets, 4
-        )
-        return pd.Series(cf.contains_hashes(h.to_numpy(dtype=np.int64)))
-
-    return _probe(hash_col)
 
 
 # ---------------------------------------------------------------------------

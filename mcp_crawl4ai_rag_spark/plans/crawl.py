@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 
 from .. import SER_CKPT_LEVEL as _SER_LEVEL  # single engine-wide definition
 
-from ..config import BLOOM_MIN_SEEN, DEFAULT_SALT_LANES
+from ..config import BLOOM_MIN_SEEN
 from ..functions.urls import (
     canonical_url,
     comparison_normalize,
@@ -75,6 +75,9 @@ from ..operators.politeness import (
 from ..operators.urlseen import anti_join_seen, build_bloom
 from ..sources.checkpoint import CheckpointManager
 
+# Buckets of the stored frontier table (bucketed by host): parallelism of
+# the stored pop, which runs inside the buckets with no exchange.
+_FRONTIER_STORE_BUCKETS = 16
 _FRONTIER_COLS = ["canonical_url", "url_hash", "host", "path", "depth", "priority", "seq"]
 _URL_SEEN_SCHEMA = (
     "url_hash long, canonical_url string, host string, depth int, seq long, epoch_seen int"
@@ -119,8 +122,21 @@ class CrawlEngine:
     allowed_host_suffix : discovered links must have a host with this suffix
         (crawl boundary for multi-host crawls; single-host boundaries come
         from ``prefix``).
-    use_bloom : bloom-prefilter the URL-seen anti-join (north_star).
     checkpoint_dir : per-epoch snapshot directory; enables resume().
+    epoch_seconds : crawl time one epoch stands for (sets per-host budgets).
+    url_scorer, link_filter : Column hooks on discovered URLs (priority,
+        keep-iff-true).
+    redirects : (from_url, to_url) table followed hop by hop across epochs.
+    template_guard_cap : drop discovered URLs whose template family has
+        already scheduled more than this many URLs.
+    frontier_store_dir : persist each epoch's frontier as a host-bucketed
+        table and pop it with the threshold pop; unset, the frontier stays
+        in memory and the salted two-phase pop runs.
+    politeness_grain : "host" or "domain" (registrable domain) budgets.
+
+    The physical plan is the engine's own choice: the URL-seen anti-join is
+    bloom-prefiltered once url_seen reaches ``BLOOM_MIN_SEEN`` rows, and
+    the pop follows ``frontier_store_dir``.
     """
 
     def __init__(
@@ -130,25 +146,19 @@ class CrawlEngine:
         robots: DataFrame | None = None,
         *,
         allowed_host_suffix: str | None = None,
-        use_bloom: bool = True,
-        salt_lanes: int = DEFAULT_SALT_LANES,
         checkpoint_dir: str | None = None,
         epoch_seconds: float | None = None,
-        pop_impl: str = "twophase",
         url_scorer=None,
         link_filter=None,
         redirects=None,
         template_guard_cap=None,
         frontier_store_dir: str | None = None,
-        frontier_store_buckets: int = 16,
         politeness_grain: str = "host",
     ):
         self.spark = spark
         self.pages = pages
         self.robots = robots
         self.allowed_host_suffix = allowed_host_suffix
-        self.use_bloom = use_bloom
-        self.salt_lanes = salt_lanes
         self.ckpt = CheckpointManager(spark, checkpoint_dir) if checkpoint_dir else None
         self.epoch_seconds = epoch_seconds
         # Best-first hook (crawl4ai BestFirstCrawlingStrategy's url_scorer):
@@ -205,21 +215,6 @@ class CrawlEngine:
         # the counter is rebuilt once from the checkpointed url_seen.
         # ``None`` (default) = behavior unchanged.
         self.template_guard_cap = template_guard_cap
-        # "twophase" (default): salted two-phase window pop — the measured
-        # local/wall-clock winner (interleaved paired A/B, BENCH/
-        # bench_r3_ab_pairs_postfix.json: median twophase/threshold 0.51)
-        # because its exchanges double as materialization (shuffle-file
-        # reuse feeds the popped/deferred dual read for free), while the
-        # threshold pop's DAG must pay an explicit localCheckpoint.
-        # "threshold": zero wide-row-shuffle pop — 0.31x the epoch's total
-        # shuffled bytes under full-width materialization (~8.6x fewer on
-        # the pop's own exchanges; BENCH/bench_r3_pop_shuffle_bytes.json,
-        # consumer="noop" cells); the right shape when the frontier is
-        # popped from a STORED table (Iceberg scan = free materialization)
-        # or when shuffle crosses a real network instead of one box's bus.
-        if pop_impl not in ("twophase", "threshold"):
-            raise ValueError(f"pop_impl must be twophase|threshold, got {pop_impl!r}")
-        self.pop_impl = pop_impl
         # STORED-FRONTIER mode (the 10^10 cluster shape, executed): with
         # ``frontier_store_dir`` set, each epoch's frontier is persisted as
         # a parquet table BUCKETED BY host (sorted by the pop order inside
@@ -228,10 +223,8 @@ class CrawlEngine:
         # as bucketed parquet, README Iceberg note):
         #   * the threshold pop's dual read (narrow ranking branch + wide
         #     filter branch) becomes two COLUMN-PRUNED scans of one table —
-        #     no localCheckpoint, no full-width materialization, no
-        #     recompute of the epoch lineage (pop_per_host_threshold's
-        #     ``materialize`` concern disappears: the table IS the
-        #     materialization);
+        #     no full-width materialization, no recompute of the epoch
+        #     lineage: the table IS the materialization;
         #   * the scan's bucket layout (HashPartitioning on host) satisfies
         #     every downstream clustering the pop needs — the per-(host,
         #     lane) rank window, the per-host rank window, and the
@@ -240,8 +233,13 @@ class CrawlEngine:
         # Output is bit-identical to the in-memory run (gate-checked:
         # __spark_entry__ crawl_bfs_visited 'stored' + politeness_drain
         # 'stored' legs share the in-memory legs' oracles).
+        # Without a store the salted two-phase pop runs: on one box it wins
+        # wall-clock (interleaved paired A/B, BENCH/
+        # bench_r3_ab_pairs_postfix.json: median twophase/threshold 0.51)
+        # because its exchanges double as materialization for the
+        # popped/deferred dual read, which the threshold pop would have to
+        # pay for with a full-width checkpoint.
         self.frontier_store_dir = frontier_store_dir
-        self.frontier_store_buckets = frontier_store_buckets
         # Politeness GRAIN: "host" throttles per hostname (the reference's
         # RateLimiter grain); "domain" throttles per registrable domain
         # (eTLD+1 via functions/urls.registrable_domain) — the grain real
@@ -320,7 +318,7 @@ class CrawlEngine:
         (
             frontier.select(*_FRONTIER_COLS)
             .write.format("parquet")
-            .bucketBy(self.frontier_store_buckets, "host")
+            .bucketBy(_FRONTIER_STORE_BUCKETS, "host")
             .sortBy("depth", "priority", "seq")
             .mode("overwrite")
             .option("path", os.path.join(self.frontier_store_dir, f"ep{epoch}"))
@@ -637,7 +635,7 @@ class CrawlEngine:
             # below that the exact anti-join alone is cheaper.
             bloom = (
                 build_bloom(url_seen, "url_hash", expected=max(seen_count, 1))
-                if (self.use_bloom and seen_count >= BLOOM_MIN_SEEN)
+                if seen_count >= BLOOM_MIN_SEEN
                 else None
             )
             cand_count = frontier_count
@@ -686,27 +684,14 @@ class CrawlEngine:
                         )
                         .drop("scheduled")
                     )
-                # Pop impl is a measured choice, not a guess — see the
-                # __init__ docs: twophase wins wall-clock on one box
-                # (exchange = free materialization), threshold wins
-                # shuffled BYTES (wide URL rows never enter an exchange)
-                # and is selected for stored-frontier / real-network runs.
-                if self.pop_impl == "threshold":
-                    # stored mode: the frontier is a bucketed table scan —
-                    # the dual read is two column-pruned scans, so the
-                    # explicit localCheckpoint materialization is skipped
-                    # (the "Iceberg scan = free materialization" claim,
-                    # now actually executed)
-                    popped, deferred = pop_per_host_threshold(
-                        with_b,
-                        None,
-                        self.salt_lanes,
-                        materialize=self.frontier_store_dir is None,
-                    )
+                # The pop follows storage (see __init__): a stored frontier
+                # is a bucketed table scan, so the threshold pop's dual read
+                # is two column-pruned scans and no row is shuffled; an
+                # in-memory frontier takes the two-phase pop.
+                if self.frontier_store_dir is not None:
+                    popped, deferred = pop_per_host_threshold(with_b, None)
                 else:
-                    popped, deferred = pop_per_host(
-                        with_b, None, self.salt_lanes
-                    )
+                    popped, deferred = pop_per_host(with_b, None)
                 if domain_grain:
                     popped = popped.withColumn(
                         "host", F.col("__host_hostgrain")

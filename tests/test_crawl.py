@@ -44,42 +44,42 @@ def test_url_seen_matches_oracle(spark, corpus):
     assert got_fetched == set(want_fetched)
 
 
-def test_pop_impl_knob_engine_identical(spark, corpus):
-    """The engine's pop_impl knob ("twophase" default vs "threshold", the
-    stored-frontier/cluster shape) must be a pure physical choice: same
-    visited set, same (url, depth, seq) tuples, same lineage counters."""
+def test_bloom_and_exact_paths_agree(spark, corpus, monkeypatch):
+    """The engine's bloom-prefiltered URL-seen anti-join is a pure physical
+    choice. At N=300 url_seen never reaches BLOOM_MIN_SEEN, so the gate is
+    lowered to 1 and the bloom is built from epoch 1 on; the visited set,
+    schedule epochs, seq order and lineage must equal the default run's
+    (exact anti-join only)."""
+    from mcp_crawl4ai_rag_spark.plans import crawl as crawl_mod
+
     seeds = gen_seeds(spark, N)
     robots = gen_robots(spark)
-    a = CrawlEngine(
-        spark, corpus, robots=robots, allowed_host_suffix=".example.com",
-        epoch_seconds=30.0, pop_impl="twophase",
-    ).run(seeds, max_depth=3)
-    b = CrawlEngine(
-        spark, corpus, robots=robots, allowed_host_suffix=".example.com",
-        epoch_seconds=30.0, pop_impl="threshold",
-    ).run(seeds, max_depth=3)
-    sa = {(r["canonical_url"], r["depth"], r["seq"]) for r in a.url_seen.collect()}
-    sb = {(r["canonical_url"], r["depth"], r["seq"]) for r in b.url_seen.collect()}
-    assert sa == sb
-    la = [tuple(r) for r in a.lineage.orderBy("epoch").collect()]
-    lb = [tuple(r) for r in b.lineage.orderBy("epoch").collect()]
-    assert la == lb
-    with pytest.raises(ValueError):
-        CrawlEngine(spark, corpus, pop_impl="bogus")
 
+    def run():
+        return CrawlEngine(
+            spark, corpus, robots=robots, allowed_host_suffix=".example.com"
+        ).run(seeds, max_depth=3)
 
-def test_bloom_and_exact_paths_agree(spark, corpus):
-    seeds = gen_seeds(spark, N)
-    robots = gen_robots(spark)
-    a = CrawlEngine(
-        spark, corpus, robots=robots, allowed_host_suffix=".example.com", use_bloom=True
-    ).run(seeds, max_depth=3)
-    b = CrawlEngine(
-        spark, corpus, robots=robots, allowed_host_suffix=".example.com", use_bloom=False
-    ).run(seeds, max_depth=3)
-    sa = {(r["canonical_url"], r["depth"], r["seq"]) for r in a.url_seen.collect()}
-    sb = {(r["canonical_url"], r["depth"], r["seq"]) for r in b.url_seen.collect()}
-    assert sa == sb
+    exact = run()
+    builds = []
+    real_build = crawl_mod.build_bloom
+
+    def counting_build(*args, **kwargs):
+        builds.append(1)
+        return real_build(*args, **kwargs)
+
+    monkeypatch.setattr(crawl_mod, "BLOOM_MIN_SEEN", 1)
+    monkeypatch.setattr(crawl_mod, "build_bloom", counting_build)
+    bloomed = run()
+    assert len(builds) == bloomed.epochs_run - 1  # every epoch after the first
+    key = lambda res: {  # noqa: E731
+        (r["canonical_url"], r["depth"], r["seq"], r["epoch_seen"])
+        for r in res.url_seen.collect()
+    }
+    assert key(bloomed) == key(exact)
+    assert [tuple(r) for r in bloomed.lineage.orderBy("epoch").collect()] == [
+        tuple(r) for r in exact.lineage.orderBy("epoch").collect()
+    ]
 
 
 def test_ordering_contract_deterministic(spark, corpus):
@@ -1060,11 +1060,11 @@ def test_stored_frontier_engine_bit_identical(spark, corpus, tmp_path):
     robots = gen_robots(spark)
     base = CrawlEngine(
         spark, corpus, robots=robots, allowed_host_suffix=".example.com",
-        epoch_seconds=30.0, pop_impl="twophase",
+        epoch_seconds=30.0,
     ).run(seeds, max_depth=3, politeness=True)
     stored = CrawlEngine(
         spark, corpus, robots=robots, allowed_host_suffix=".example.com",
-        epoch_seconds=30.0, pop_impl="threshold",
+        epoch_seconds=30.0,
         frontier_store_dir=str(tmp_path / "frontier"),
     ).run(seeds, max_depth=3, politeness=True)
     assert stored.epochs_run >= 3, "the stored shape must span >=3 epochs"
@@ -1091,7 +1091,7 @@ def test_stored_frontier_resume_identity(spark, corpus, tmp_path):
     def eng(store, ckpt):
         return CrawlEngine(
             spark, corpus, robots=robots, allowed_host_suffix=".example.com",
-            epoch_seconds=30.0, pop_impl="threshold",
+            epoch_seconds=30.0,
             frontier_store_dir=str(tmp_path / store), checkpoint_dir=str(tmp_path / ckpt),
         )
 
@@ -1125,13 +1125,10 @@ def test_stored_frontier_threshold_pop_zero_exchange(spark, tmp_path):
         F.lit(0).alias("priority"),
         F.col("id").alias("seq"),
     )
-    eng = CrawlEngine(
-        spark, fr.limit(0), frontier_store_dir=str(tmp_path / "fr"),
-        pop_impl="threshold",
-    )
+    eng = CrawlEngine(spark, fr.limit(0), frontier_store_dir=str(tmp_path / "fr"))
     stored = eng._store_frontier(0, fr)
     with_b = stored.withColumn("budget", F.lit(100))
-    popped, deferred = pop_per_host_threshold(with_b, None, materialize=False)
+    popped, deferred = pop_per_host_threshold(with_b, None)
     plan = popped._jdf.queryExecution().executedPlan().toString()
     assert "Exchange hashpartitioning" not in plan, plan[:1500]
     scans = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
@@ -1152,8 +1149,6 @@ def _hazard_engine(spark, m, tmp_path, store=None, ckpt=None, **over):
     kw = dict(
         robots=HZ.gen_hazard_robots(spark),
         allowed_host_suffix=None,
-        use_bloom=True,
-        pop_impl="threshold",
         politeness_grain="domain",
         epoch_seconds=HZ.HAZ_EPOCH_SECONDS,
         redirects=HZ.gen_hazard_redirects(spark, m),

@@ -10,8 +10,8 @@ from mcp_crawl4ai_rag_spark.operators.urlseen import (
     BloomFilter,
     CuckooFilter,
     anti_join_seen,
-    bloom_maybe_contains,
     build_bloom,
+    maybe_contains,
 )
 
 
@@ -49,7 +49,7 @@ def test_bloom_merge():
 def test_distributed_build_and_probe(spark):
     df = spark.range(0, 2000, 1, 8).select(F.xxhash64("id").alias("url_hash"))
     bloom = build_bloom(df, "url_hash", expected=2000)
-    probed = df.withColumn("hit", bloom_maybe_contains(bloom, F.col("url_hash")))
+    probed = df.withColumn("hit", maybe_contains(bloom, F.col("url_hash")))
     assert probed.where(~F.col("hit")).count() == 0  # zero false negatives
 
 
@@ -94,27 +94,44 @@ def test_cuckoo_capacity_power_of_two(cap):
 
 
 def test_sharded_bloom_zero_false_negatives_across_shards():
-    from mcp_crawl4ai_rag_spark.operators.urlseen import ShardedBloom
-
     rng = np.random.default_rng(7)
     xs = rng.integers(-(2**62), 2**62, 4000, dtype=np.int64)
     S = 8
     per = BloomFilter.sized_for(len(xs) // S + 1, 0.01)
-    sb = ShardedBloom(
-        shards=[
-            BloomFilter(bits=np.zeros_like(per.bits), m=per.m, k=per.k)
-            for _ in range(S)
-        ],
-        n_shards=S,
+    sb = BloomFilter(
+        bits=np.zeros(S * len(per.bits), dtype=np.uint8), m=per.m, k=per.k, n_shards=S
     )
+    sb.add_hashes(xs)
+    # shard s occupies its own byte slice and holds exactly the bits a
+    # one-shard filter over the keys with pmod(h, S) == s would hold
     shard_of = np.mod(xs, S)
+    bps = sb.bytes_per_shard
     for s in range(S):
-        sb.shards[s].add_hashes(xs[shard_of == s])
+        one = BloomFilter(bits=np.zeros_like(per.bits), m=per.m, k=per.k)
+        one.add_hashes(xs[shard_of == s])
+        assert np.array_equal(sb.bits[s * bps : (s + 1) * bps], one.bits)
     assert sb.contains_hashes(xs).all()  # no false negative crosses a shard
     # and membership is shard-local: a hash added to shard s must not be
     # reported present when routed (its own mod decides — sanity of routing)
     others = np.setdiff1d(rng.integers(-(2**62), 2**62, 20000, dtype=np.int64), xs)
     assert sb.contains_hashes(others).mean() < 0.03
+
+
+def test_sharded_bloom_probe_sees_in_place_merge():
+    """Probe, OR-merge more keys into the bitset in place, probe again: the
+    second probe must find every merged key. A probe that reads a snapshot
+    of the bits taken at its first call misses them (false negatives,
+    which would silently drop unseen URLs from the frontier)."""
+    rng = np.random.default_rng(17)
+    xs = rng.integers(-(2**62), 2**62, 4000, dtype=np.int64)
+    first, later = xs[:2000], xs[2000:]
+    sb = BloomFilter.sized_for(len(xs), 0.01, n_shards=8)
+    sb.add_hashes(first)
+    assert sb.contains_hashes(first).all()  # first probe
+    more = BloomFilter.sized_for(len(xs), 0.01, n_shards=8)
+    more.add_hashes(later)
+    sb.bits |= more.bits  # in-place merge after the probe
+    assert sb.contains_hashes(xs).all()  # zero false negatives
 
 
 def test_sharded_build_probe_and_antijoin(spark):
@@ -129,7 +146,8 @@ def test_sharded_build_probe_and_antijoin(spark):
         F.xxhash64(F.concat(F.lit("u"), (F.col("id") * 2))).alias("url_hash"),
     )
     sb = build_bloom_sharded(seen, "url_hash", n_shards=8, expected=500)
-    hits = seen.withColumn("hit", bloom_maybe_contains(sb, F.col("url_hash")))
+    assert sb.n_shards == 8
+    hits = seen.withColumn("hit", maybe_contains(sb, F.col("url_hash")))
     assert hits.where(~F.col("hit")).count() == 0  # zero false negatives
     exact = set(
         r[0] for r in anti_join_seen(cand, seen, None).select("canonical_url").collect()
@@ -220,10 +238,8 @@ def test_sharded_cuckoo_distributed_build_and_antijoin(spark):
     )
     sc = build_cuckoo_sharded(seen, "url_hash", n_shards=8)
     # zero false negatives through the distributed build + sharded probe
-    from mcp_crawl4ai_rag_spark.operators.urlseen import cuckoo_maybe_contains
-
     misses = seen.withColumn(
-        "hit", cuckoo_maybe_contains(sc, F.col("url_hash"))
+        "hit", maybe_contains(sc, F.col("url_hash"))
     ).where(~F.col("hit"))
     assert misses.count() == 0
     exact = set(
@@ -316,14 +332,18 @@ def test_bloom_sparse_reduceat_path_identical_and_bounded():
 
 
 def test_build_bloom_auto_shards_above_driver_budget(spark, monkeypatch):
-    """Above BLOOM_AUTO_SHARD_BYTES build_bloom must return the sharded
-    filter (collect O(m) total, the 10^10 shape) instead of collecting
-    fold_partitions full-width bitsets — the monolithic collect measurably
-    blows spark.driver.maxResultSize at a 1B-URL epoch (the failed 1B rung
-    in BENCH/bench_r5_ladder_deep.jsonl). Threshold shrunk so the switch is
-    exercised at test scale; anti-join output must be bit-identical to the
-    exact anti-join either way."""
+    """Above BLOOM_AUTO_SHARD_BYTES build_bloom must return a sharded
+    filter (collect O(m) total, the 10^10 shape) instead of collecting one
+    full-width bitset per fold — the monolithic collect measurably blows
+    spark.driver.maxResultSize at a 1B-URL epoch (the failed 1B rung in
+    BENCH/bench_r5_ladder_deep.jsonl). The gate keeps the worst monolithic
+    collect at half the default 1 GiB limit, and a bitset of exactly the
+    gate size stays monolithic while one byte more shards. Threshold shrunk
+    so the switch is exercised at test scale; anti-join output must be
+    bit-identical to the exact anti-join either way."""
     from mcp_crawl4ai_rag_spark.operators import urlseen as us
+
+    assert us.BLOOM_AUTO_SHARD_BYTES * us._FOLD_PARTITIONS == 512 * 1024 * 1024
 
     cand = spark.range(0, 3000, 1, 8).select(
         F.concat(F.lit("u"), F.col("id")).alias("canonical_url"),
@@ -334,15 +354,20 @@ def test_build_bloom_auto_shards_above_driver_budget(spark, monkeypatch):
         F.xxhash64(F.concat(F.lit("u"), (F.col("id") * 2))).alias("url_hash"),
     )
     mono = build_bloom(seen, "url_hash", expected=1500)
-    assert isinstance(mono, BloomFilter)  # below threshold: unchanged path
+    assert mono.n_shards == 1  # below threshold: unchanged path
+    bitset_bytes = len(mono.bits)
 
-    monkeypatch.setattr(us, "BLOOM_AUTO_SHARD_BYTES", 64)
+    monkeypatch.setattr(us, "BLOOM_AUTO_SHARD_BYTES", bitset_bytes)
+    at_gate = us.build_bloom(seen, "url_hash", expected=1500)
+    assert at_gate.n_shards == 1 and np.array_equal(at_gate.bits, mono.bits)
+
+    monkeypatch.setattr(us, "BLOOM_AUTO_SHARD_BYTES", bitset_bytes - 1)
     monkeypatch.setattr(us, "_BLOOM_SHARD_TARGET_BYTES", 32)
     auto = us.build_bloom(seen, "url_hash", expected=1500)
-    assert isinstance(auto, us.ShardedBloom)
     # ~1500-key bitset is ~1.8 kB → ceil(1.8k/32) ≈ 57 shards ≥ the floor of 8
     assert auto.n_shards >= 8
-    hits = seen.withColumn("hit", bloom_maybe_contains(auto, F.col("url_hash")))
+    assert len(auto.bits) == auto.n_shards * auto.bytes_per_shard
+    hits = seen.withColumn("hit", maybe_contains(auto, F.col("url_hash")))
     assert hits.where(~F.col("hit")).count() == 0  # zero false negatives
     exact = set(
         r[0] for r in anti_join_seen(cand, seen, None).select("canonical_url").collect()

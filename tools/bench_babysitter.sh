@@ -14,8 +14,7 @@
 # Usage:
 #   tools/bench_babysitter.sh <snapshot.json> [ENV=VAL ...]
 # e.g.
-#   tools/bench_babysitter.sh BENCH/bench_r3_scaling_threshold.json SPARK_GRAFT_PHASES=scaling
-#   tools/bench_babysitter.sh BENCH/bench_r3_scaling_threshold.json SPARK_GRAFT_PHASES=scaling SPARK_GRAFT_POP_IMPL=threshold
+#   tools/bench_babysitter.sh BENCH/bench_scaling.json SPARK_GRAFT_PHASES=scaling
 #
 # Never run other Spark work while this is armed: your own load reads as a
 # dirty window and delays the launch (and would pollute a running bench).

@@ -628,18 +628,16 @@ def main():
         checks,
     ))
 
-    # 22. threshold pop from a STORED frontier — the cluster shape that
-    # replaces the single-box localCheckpoint (see pop_per_host_threshold's
-    # materialize doc and BASELINE.md round-3 A/B verdict): both DAG
-    # branches re-scan the persisted table, and Catalyst column-prunes the
+    # 22. threshold pop from a STORED frontier — the cluster shape (see
+    # pop_per_host_threshold's docstring and BASELINE.md round-3 A/B
+    # verdict): both DAG branches re-scan the persisted table, and Catalyst column-prunes the
     # ranking branch's scan to the narrow keys (no URL strings read), so
     # the dual read costs a pruned scan instead of a full-width checkpoint.
     with tempfile.TemporaryDirectory() as td2:
         fr.write.mode("overwrite").parquet(f"{td2}/frontier")
         stored = spark.read.parquet(f"{td2}/frontier")
         popped_s, _def_s = pop_per_host_threshold(
-            _ab(stored, None, None, epoch_seconds=100.0), None,
-            materialize=False,
+            _ab(stored, None, None, epoch_seconds=100.0), None
         )
         sp_plan = formatted(popped_s)
     checks = [
@@ -656,7 +654,7 @@ def main():
         if "canonical_url" in block or ", path" in block:
             checks.append(("never", f"WIDE COLUMN IN EXCHANGE ({node_id}) — URL strings entered a shuffle"))
     sections.append((
-        "Threshold pop from a stored frontier (materialize=False; ranking branch is a column-pruned scan)",
+        "Threshold pop from a stored frontier (ranking branch is a column-pruned scan)",
         sp_plan,
         checks,
     ))
@@ -671,12 +669,10 @@ def main():
     from mcp_crawl4ai_rag_spark.plans.crawl import CrawlEngine as _CE
 
     with tempfile.TemporaryDirectory() as td3:
-        eng_s = _CE(
-            spark, fr.limit(0), frontier_store_dir=td3, pop_impl="threshold"
-        )
+        eng_s = _CE(spark, fr.limit(0), frontier_store_dir=td3)
         stored_b = eng_s._store_frontier(0, fr)
         popped_b, _def_b = pop_per_host_threshold(
-            stored_b.withColumn("budget", F.lit(50)), None, materialize=False
+            stored_b.withColumn("budget", F.lit(50)), None
         )
         sb_plan = formatted(popped_b)
     checks = [

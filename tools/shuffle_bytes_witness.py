@@ -1,32 +1,30 @@
-"""Load-insensitive pop A/B witness: total shuffle bytes, not wall-clock.
+"""Load-insensitive frontier-epoch witness: total shuffle bytes, not
+wall-clock.
 
 This host takes multi-hour co-tenant memory-bus pressure (BASELINE.md
 round-3 section), which makes wall-clock cells noisy even when interleaved.
 Shuffle BYTES are immune to ambient load: they are a property of the plan
-and the data, so they witness the threshold pop's design claim directly —
-wide URL rows (canonical_url/path strings, ~100+ B/row) never enter an
-exchange, only narrow key tuples and the O(hosts) threshold table do.
-
-The claim is CONSUMER-SHAPE dependent, so each impl is measured under
-both frontier_epoch consumers (see bench.frontier_epoch):
+and the data. The epoch's shuffle is CONSUMER-SHAPE dependent, so the
+two-phase pop epoch is measured under both frontier_epoch consumers (see
+bench.frontier_epoch):
 
 - consumer="count" (the headline bench shape): popped.count() lets
-  Catalyst column-prune the two-phase pop's window exchanges down to the
-  narrow ranking keys, so both impls shuffle near-identical bytes — the
-  epoch's shuffle is dominated by the bloom build + exact anti-join.
+  Catalyst column-prune the pop's window exchanges down to the narrow
+  ranking keys — the epoch's shuffle is dominated by the bloom build +
+  exact anti-join.
 - consumer="noop" (the engine-faithful shape, plans/crawl.py: popped is
   checkpointed at full width and deferred feeds the next epoch): the
-  two-phase exchanges must carry the URL strings; the threshold pop still
-  shuffles only narrow keys.
+  two-phase exchanges must carry the URL strings.
 
-For each (impl, consumer) cell (fresh JVM each) this records, summed over
-every completed stage of the app via the Spark UI REST API:
+The threshold pop is compared in tools/stored_pop_witness.py. For each
+consumer cell (fresh JVM each) this records, summed over every completed
+stage of the app via the Spark UI REST API:
 
     shuffle_write_bytes, shuffle_read_bytes, records written/read,
     plus the epoch's wall seconds (incidental, NOT the evidence here).
 
 Usage:  python tools/shuffle_bytes_witness.py [n_urls] [out.json]
-        (defaults: 4_000_000, BENCH/bench_r3_pop_shuffle_bytes.json)
+        (defaults: 4_000_000, BENCH/bench_pop_shuffle_bytes.json)
 """
 
 from __future__ import annotations
@@ -88,11 +86,7 @@ def app_stage_totals(spark) -> dict:
     return tot
 
 
-def run_cell(impl: str, consumer: str, n: int) -> dict:
-    if impl == "threshold":
-        os.environ["SPARK_GRAFT_POP_IMPL"] = "threshold"
-    else:
-        os.environ.pop("SPARK_GRAFT_POP_IMPL", None)
+def run_cell(consumer: str, n: int) -> dict:
     spark = _mk_spark_with_ui(bench.CPUS)
     # single epoch, no warmup rep: bytes are deterministic, reps only add
     # identical copies of the same exchanges to the app totals
@@ -100,7 +94,6 @@ def run_cell(impl: str, consumer: str, n: int) -> dict:
     tot = app_stage_totals(spark)
     spark.stop()
     return {
-        "impl": impl,
         "consumer": consumer,
         "n_urls": n,
         "wall_sec_incidental": round(sec, 2),
@@ -111,38 +104,25 @@ def run_cell(impl: str, consumer: str, n: int) -> dict:
 
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 4_000_000
-    out_path = sys.argv[2] if len(sys.argv) > 2 else "BENCH/bench_r3_pop_shuffle_bytes.json"
-    cells = [
-        run_cell(impl, consumer, n)
-        for consumer in ("count", "noop")
-        for impl in ("threshold", "twophase")
-    ]
+    out_path = sys.argv[2] if len(sys.argv) > 2 else "BENCH/bench_pop_shuffle_bytes.json"
+    cells = [run_cell(consumer, n) for consumer in ("count", "noop")]
     for c in cells:
         print(
-            f"{c['impl']}/{c['consumer']}: "
+            f"{c['consumer']}: "
             f"shuffle_write={c['shuffle_write_bytes'] / 1e6:.1f} MB "
             f"read={c['shuffle_read_bytes'] / 1e6:.1f} MB "
             f"(wall {c['wall_sec_incidental']}s incidental)",
             flush=True,
         )
-    ratios = {}
-    for consumer in ("count", "noop"):
-        thr = next(c for c in cells if c["impl"] == "threshold" and c["consumer"] == consumer)
-        two = next(c for c in cells if c["impl"] == "twophase" and c["consumer"] == consumer)
-        ratios[consumer] = round(
-            thr["shuffle_write_bytes"] / max(two["shuffle_write_bytes"], 1), 4
-        )
     out = {
-        "design": "fresh JVM per (impl, consumer) cell, one frontier epoch, "
+        "design": "fresh JVM per consumer cell, one frontier epoch, "
         "totals summed over completed stages via the UI REST API; bytes are "
         "load-insensitive",
         "job": f"frontier_epoch n={n} at local[{bench.CPUS}]",
         "cells": cells,
-        "threshold_over_twophase_write_bytes": ratios,
     }
     with open(out_path, "w") as f:
         json.dump(out, f, indent=1)
-    print(json.dumps({"threshold_over_twophase_write_bytes": ratios}))
 
 
 if __name__ == "__main__":

@@ -7,8 +7,7 @@ is structural and load-insensitive, so it is witnessed in BYTES, not
 wall-clock (the shuffle_bytes_witness methodology):
 
 - stored_threshold: CrawlEngine._store_frontier writes the frontier
-  bucketed by host; pop_per_host_threshold(materialize=False) pops from
-  the table scan. The bucket layout satisfies every clustering the pop
+  bucketed by host; pop_per_host_threshold pops from the table scan. The bucket layout satisfies every clustering the pop
   needs, so the pop must shuffle ~ZERO bytes — only the O(hosts)
   threshold broadcast moves.
 - inmem_threshold: the same pop over a localCheckpointed frontier —
@@ -71,9 +70,7 @@ def run_cell(mode: str, n: int) -> dict:
     td = None
     if mode == "stored_threshold":
         td = tempfile.mkdtemp(prefix="stored_pop_witness_")
-        eng = CrawlEngine(
-            spark, fr.limit(0), frontier_store_dir=td, pop_impl="threshold"
-        )
+        eng = CrawlEngine(spark, fr.limit(0), frontier_store_dir=td)
         src = eng._store_frontier(0, fr)
     else:
         src = fr.localCheckpoint(
@@ -87,9 +84,7 @@ def run_cell(mode: str, n: int) -> dict:
     if mode == "inmem_twophase":
         popped, deferred = pop_per_host(with_b, None)
     else:
-        popped, deferred = pop_per_host_threshold(
-            with_b, None, materialize=False
-        )
+        popped, deferred = pop_per_host_threshold(with_b, None)
     # engine-faithful consumer: both sides materialized at FULL width
     popped.write.format("noop").mode("overwrite").save()
     deferred.write.format("noop").mode("overwrite").save()

@@ -49,7 +49,6 @@ def main() -> int:
         pages,
         robots=gen_robots(spark),
         allowed_host_suffix=".example.com",
-        use_bloom=True,  # executor-side Arrow bloom fold must import the pkg
     ).run(gen_seeds(spark, 500), max_depth=4)
     n_seen, n_fetched = res.url_seen.count(), res.fetched.count()
     assert (n_seen, n_fetched) == (114, 107), (n_seen, n_fetched)
