@@ -1073,12 +1073,13 @@ def q_urlseen_antijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_urlseen_cuckoo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1 with the CUCKOO prefilter (north_star's deletable membership
-    filter): SHARDED distributed build (pmod(hash, S) shard repartition,
-    per-shard tables, O(capacity/S)-per-shard driver merge — the same shape
-    build_bloom_sharded uses, so the 10^10-key build never materializes a
-    monolithic table) + vectorized two-bucket probe. Lossless like the
-    bloom (build raises on overflow), so the oracle is the identical exact
-    set difference."""
+    filter): SHARDED distributed build through the fold every filter
+    shares (pmod(hash, S) shard repartition, shard-sized local tables, each
+    re-inserted into its slice of one CuckooFilter(n_shards=S) on the
+    driver, O(capacity/S) per shard — so the 10^10-key build never
+    materializes a monolithic table) + one-gather two-bucket probe.
+    Lossless like the bloom (build raises on overflow), so the oracle is
+    the identical exact set difference."""
     from mcp_crawl4ai_rag_spark.operators.urlseen import build_cuckoo_sharded
 
     n = _lineitem_count(spark, sf_dir) // 3

@@ -27,7 +27,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: F401  (module convention)
 from pyspark.sql.types import StringType
 
@@ -141,8 +141,3 @@ def extract_markdown(
     """Adds ``out_col`` with the markdown extraction of ``html_col`` — one
     stateless Arrow projection, trivially parallel at any scale."""
     return df.withColumn(out_col, extract_markdown_udf()(F.col(html_col)))
-
-
-def markdown_of_column(html: Column) -> Column:
-    """Expression form for inline use inside selects."""
-    return extract_markdown_udf()(html)

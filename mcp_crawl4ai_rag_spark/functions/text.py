@@ -247,13 +247,6 @@ def gopher_pass_expr(stats: Column) -> Column:
     )
 
 
-def ngrams_expr(text: Column | str, n: int = 3) -> Column:
-    """Distinct character n-grams of the raw text (for Jaccard dedup)."""
-    c = F.col(text) if isinstance(text, str) else text
-    idx = F.sequence(F.lit(1), F.greatest(F.length(c) - F.lit(n - 1), F.lit(0)))
-    return F.array_distinct(F.transform(idx, lambda i: F.substring(c, i, n)))
-
-
 def word_shingles_expr(text: Column | str, k: int = 3) -> Column:
     """Distinct k-word shingles (for MinHash). A document shorter than k
     words yields one shingle containing all its words."""

@@ -1,17 +1,23 @@
-"""URL-seen membership: Bloom pre-filter + exact anti-join, cuckoo add-on.
+"""URL-seen membership: Bloom or cuckoo pre-filter + exact anti-join.
 
 Replaces the reference's in-memory ``visited: set`` + ``threading.Lock``
 (src/crawl4ai_mcp.py:980-1004) with the north_star design: a Bloom filter
 over 64-bit hashes of canonical URLs built with vectorized numpy over Arrow
 batches, used as a *pre-filter* that routes the definitely-new majority
 around the exact anti-join. The anti-join on ``(url_hash, canonical_url)``
-remains the authority — the Bloom filter has zero false negatives by
-construction (property-tested), so the split is lossless.
+remains the authority — the filters have zero false negatives by
+construction (property-tested), so the split is lossless. The cuckoo
+filter is the deletable alternative (frontier retraction).
+
+Both filters are one type each (:class:`BloomFilter`, :class:`CuckooFilter`)
+with an ``n_shards`` field, built by one fold (:func:`_fold`) and probed by
+one Arrow UDF (:func:`maybe_contains`).
 
 Scale notes (10^10 URLs): a monolithic 1%-FPP bloom for 1e10 keys is ~12 GB —
-too big to broadcast. :func:`build_bloom_sharded` is the deployment shape:
-the bitset is sharded by ``pmod(url_hash, n_shards)`` so each fold task
-holds one m/S-bit shard (``BloomFilter(n_shards=S)``).
+too big to broadcast. Sharding is the deployment shape: the filter is
+sharded by ``pmod(url_hash, n_shards)`` so each fold task holds one
+shard-sized local; ``build_bloom``/``build_cuckoo`` shard on their own
+above ``AUTO_SHARD_BYTES``.
 Raising FPP for the pre-filter role also helps (a 10% FPP filter is 5x
 smaller and still removes 90% of the join traffic). The exact anti-join
 stays bucketed on ``url_hash`` so state and probes co-locate.
@@ -19,9 +25,11 @@ stays bucketed on ``url_hash`` so state and probes co-locate.
 
 from __future__ import annotations
 
+import copy
 import math
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass, replace
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -136,21 +144,246 @@ class BloomFilter:
         assert (self.m, self.k, self.n_shards) == (other.m, other.k, other.n_shards)
         return replace(self, bits=np.bitwise_or(self.bits, other.bits))
 
+    # -- fold surface (see _fold): empty local, payload, driver merge --
 
-# Above this bitset size build_bloom() delegates to the sharded build: the
-# monolithic fold collects one FULL bitset per fold task, so the driver
-# receives _FOLD_PARTITIONS × bitset bytes. The default
-# spark.driver.maxResultSize is 1 GiB; 16 folds × 32 MiB = 512 MiB keeps the
-# collect at half of it (at 64 MiB it was 16 × 64 MiB = the whole limit; the
-# 1B-URL rung, 399 MB × 16 ≈ 6.4 GB, measurably failed:
-# BENCH/bench_r5_ladder_deep.jsonl). The sharded build keeps the collect O(m)
-# TOTAL, at the cost of one narrow repartition of (hash, shard) pairs.
-BLOOM_AUTO_SHARD_BYTES = 32 * 1024 * 1024
-_BLOOM_SHARD_TARGET_BYTES = 32 * 1024 * 1024
-# Fold tasks per filter build: each carries a FULL filter, so cost (alloc +
+    @classmethod
+    def _empty(cls, m: int, k: int) -> "BloomFilter":
+        return cls(bits=np.zeros((m + 7) // 8, dtype=np.uint8), m=m, k=k)
+
+    def _local_maker(self) -> Callable[[], "BloomFilter"]:
+        """Picklable maker of an empty one-shard filter of this shard
+        geometry; it carries m and k, never the bitset."""
+        return partial(BloomFilter._empty, self.m, self.k)
+
+    def _payload(self) -> bytes:
+        return self.bits.tobytes()
+
+    def _merge_payload(self, shard: int, payload: bytes) -> None:
+        """OR a one-shard local's bitset into shard ``shard``."""
+        bps = self.bytes_per_shard
+        self.bits[shard * bps : (shard + 1) * bps] |= np.frombuffer(
+            payload, dtype=np.uint8
+        )
+
+
+# ---------------------------------------------------------------------------
+# Cuckoo filter — deletable approximate membership (north_star add-on).
+# ---------------------------------------------------------------------------
+
+_U64 = 0xFFFFFFFFFFFFFFFF
+_ALT_MUL = 0x5BD1E995  # murmur2 multiplier: fingerprint → alt-bucket offset
+
+
+class CuckooFilter:
+    """Bucketed cuckoo filter over int64 hashes (16-bit fingerprints,
+    4 slots/bucket), optionally sharded by hash like :class:`BloomFilter`.
+    Supports delete — which a Bloom filter cannot — for frontier
+    *retraction* (e.g. un-marking URLs whose politeness lease expired).
+
+    ``table`` holds ``n_shards`` tables of ``n_buckets`` buckets end to end:
+    hash ``h`` lives only in shard ``pmod(h, n_shards)``. Within a shard its
+    bucket comes from bits 16-47 of ``h`` and its fingerprint from bits
+    48-63, so neither shares bits with the shard selector's low bits (the
+    in-shard bucket ranges over the whole shard for every shard count).
+    The alternate bucket flips only in-shard bucket bits, so probe, insert,
+    delete and merge are one code path for any shard count, and a probe is
+    one numpy gather either way."""
+
+    def __init__(self, capacity: int, n_shards: int = 1):
+        n_buckets = 1
+        while n_buckets * 4 < capacity // n_shards:
+            n_buckets *= 2
+        self.n_buckets = max(n_buckets, 2)  # per shard
+        self.n_shards = n_shards
+        self.table = np.zeros((n_shards * self.n_buckets, 4), dtype=np.uint16)
+        self.max_kicks = 500
+
+    def _locate(self, hashes: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """(fingerprint, primary bucket into ``table``) per int64 hash."""
+        u = hashes.view(np.uint64)
+        fp = (u >> np.uint64(48)).astype(np.uint16)
+        fp[fp == 0] = 1  # 0 marks an empty slot
+        b = ((u >> np.uint64(16)) & np.uint64(self.n_buckets - 1)).astype(np.int64)
+        if self.n_shards > 1:
+            # numpy's floored mod == Spark pmod for positive modulus
+            b += np.mod(hashes, self.n_shards) * self.n_buckets
+        return fp, b
+
+    def _locate_one(self, h: int) -> tuple[int, int]:
+        fp, b = self._locate(np.array([h & _U64], dtype=np.uint64).view(np.int64))
+        return int(fp[0]), int(b[0])
+
+    def _alt_bucket(self, bucket, fp):
+        """The other legal bucket of ``fp``: flips in-shard bits only, and
+        is an involution, so (b, alt(b)) is the same pair from either end."""
+        return bucket ^ ((fp * _ALT_MUL) & (self.n_buckets - 1))
+
+    def _insert_fp(self, bucket: int, fp: int) -> bool:
+        """Store ``fp`` in ``bucket`` or its alternate, kicking residents to
+        their alternates when both are full. False if the table is full."""
+        for b in (bucket, self._alt_bucket(bucket, fp)):
+            empty = np.flatnonzero(self.table[b] == 0)
+            if len(empty):
+                self.table[b, empty[0]] = fp
+                return True
+        # seeded by the in-shard bucket: a shard's layout is the same at
+        # any shard index
+        seed = ((bucket % self.n_buckets) << 16) | fp
+        rng = np.random.Generator(np.random.PCG64(seed))
+        b = bucket
+        for _ in range(self.max_kicks):
+            slot = int(rng.integers(0, 4))
+            fp, self.table[b, slot] = int(self.table[b, slot]), fp
+            b = self._alt_bucket(b, fp)
+            empty = np.flatnonzero(self.table[b] == 0)
+            if len(empty):
+                self.table[b, empty[0]] = fp
+                return True
+        return False
+
+    def insert(self, h: int) -> bool:
+        fp, b = self._locate_one(h)
+        return self._insert_fp(b, fp)
+
+    def contains(self, h: int) -> bool:
+        fp, b1 = self._locate_one(h)
+        return bool(
+            (self.table[b1] == fp).any()
+            or (self.table[self._alt_bucket(b1, fp)] == fp).any()
+        )
+
+    def delete(self, h: int) -> bool:
+        fp, b1 = self._locate_one(h)
+        for b in (b1, self._alt_bucket(b1, fp)):
+            hit = np.flatnonzero(self.table[b] == fp)
+            if len(hit):
+                self.table[b, hit[0]] = 0
+                return True
+        return False
+
+    # -- vectorized / distributed surface (north_star: Arrow-batched probes) --
+
+    def add_hashes(self, hashes: np.ndarray) -> None:
+        """Insert a hash batch; raises if the table overflows (an overflowed
+        cuckoo loses membership → false negatives, which would silently
+        break the lossless prefilter contract)."""
+        fp, b = self._locate(hashes.astype(np.int64))
+        for bucket, f in zip(b.tolist(), fp.tolist()):
+            if not self._insert_fp(bucket, f):
+                raise RuntimeError(
+                    "cuckoo filter overflow — size capacity for the seen-set"
+                )
+
+    def contains_hashes(self, hashes: np.ndarray) -> np.ndarray:
+        """Vectorized membership: both candidate buckets of every hash in
+        one numpy gather — no per-row Python, no per-shard loop."""
+        if len(hashes) == 0:
+            return np.zeros(0, dtype=bool)
+        fp, b1 = self._locate(hashes.astype(np.int64))
+        both = np.stack([b1, self._alt_bucket(b1, fp.astype(np.int64))])
+        return (self.table[both] == fp[:, None]).any(axis=(0, 2))
+
+    def _reinsert(self, table: np.ndarray, first_bucket: int) -> None:
+        """Re-insert ``table``'s occupied slots, its bucket b landing at
+        ``first_bucket + b``. Sound because a stored (bucket, fp) pair
+        re-inserted at either legal bucket stays findable (alt is an
+        involution); raises on overflow rather than drop a member."""
+        bs, slots = np.nonzero(table)
+        for b, fp in zip((bs + first_bucket).tolist(), table[bs, slots].tolist()):
+            if not self._insert_fp(b, fp):
+                raise RuntimeError("cuckoo merge overflow")
+
+    def merge(self, other: "CuckooFilter") -> "CuckooFilter":
+        """Union by fingerprint re-insertion; a fingerprint's two buckets
+        share a shard, so each shard merges into its own slice."""
+        assert (self.n_buckets, self.n_shards) == (other.n_buckets, other.n_shards)
+        out = copy.deepcopy(self)
+        out._reinsert(other.table, 0)
+        return out
+
+    # -- fold surface (see _fold): empty local, payload, driver merge --
+
+    def _local_maker(self) -> Callable[[], "CuckooFilter"]:
+        """Picklable maker of an empty one-shard table of this shard
+        geometry; it carries the bucket count, never the table."""
+        return partial(CuckooFilter, 4 * self.n_buckets)
+
+    def _payload(self) -> bytes:
+        return self.table.tobytes()
+
+    def _merge_payload(self, shard: int, payload: bytes) -> None:
+        """Re-insert a one-shard local's fingerprints into shard ``shard``."""
+        table = np.frombuffer(payload, dtype=np.uint16).reshape(-1, 4)
+        self._reinsert(table, shard * self.n_buckets)
+
+
+# ---------------------------------------------------------------------------
+# Distributed builds: one fold for every filter and shard count
+# ---------------------------------------------------------------------------
+
+# Above this size a filter is built sharded: the one-shard fold collects one
+# FULL filter per fold task, so the driver receives _FOLD_PARTITIONS × filter
+# bytes. The default spark.driver.maxResultSize is 1 GiB; 16 folds × 32 MiB =
+# 512 MiB keeps the collect at half of it (at 64 MiB it was 16 × 64 MiB = the
+# whole limit; the 1B-URL bloom rung, 399 MB × 16 ≈ 6.4 GB, measurably failed:
+# BENCH/bench_r5_ladder_deep.jsonl). The sharded fold keeps the collect O(m)
+# TOTAL, at the cost of one narrow repartition of the hashes.
+AUTO_SHARD_BYTES = 32 * 1024 * 1024
+_SHARD_TARGET_BYTES = 32 * 1024 * 1024
+# Fold tasks per one-shard build: each carries a FULL filter, so cost (alloc +
 # driver collect) is O(folds × m) while the hashing itself is cheap —
 # coalescing to ~16 folds is a ~10x win over folding on 64+ scan partitions.
 _FOLD_PARTITIONS = 16
+
+
+def _auto_shards(nbytes: int) -> int:
+    """Shard count for a filter whose one-shard form is ``nbytes``: one up
+    to ``AUTO_SHARD_BYTES``, else ~``_SHARD_TARGET_BYTES`` shards (≥ 8)."""
+    if nbytes <= AUTO_SHARD_BYTES:
+        return 1
+    return max(8, -(-nbytes // _SHARD_TARGET_BYTES))
+
+
+def _fold(
+    df: DataFrame, hash_col: str, out: "BloomFilter | CuckooFilter"
+) -> "BloomFilter | CuckooFilter":
+    """Fill the empty filter ``out`` with ``df[hash_col]`` and return it —
+    the one distributed build behind every builder.
+
+    Each task folds its Arrow batches into one local filter per shard it
+    sees (made by ``out._local_maker()``, so only shard geometry rides in
+    the closure) and yields ``(shard, payload)``; the driver merges each
+    payload into that shard of ``out`` (bloom: bitwise OR; cuckoo:
+    fingerprint re-insertion). One shard coalesces to ``_FOLD_PARTITIONS``
+    tasks, no shuffle. More shards repartition on ``pmod(hash, n_shards)``
+    so each task (mostly) sees one shard, allocates shard-sized locals, and
+    the driver collect stays O(filter) in total."""
+    n_shards = out.n_shards
+    hashes = df.select(hash_col)
+    if n_shards == 1:
+        hashes = hashes.coalesce(_FOLD_PARTITIONS)
+    else:
+        hashes = hashes.repartition(
+            n_shards, F.pmod(F.col(hash_col), F.lit(n_shards))
+        )
+    new_local = out._local_maker()
+
+    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        local = {}
+        for pdf in batches:
+            h = pdf[hash_col].to_numpy(dtype=np.int64)
+            shard = np.mod(h, n_shards)  # == the repartition's pmod
+            for s in np.unique(shard).tolist():
+                if s not in local:
+                    local[s] = new_local()
+                local[s].add_hashes(h[shard == s])
+        for s, filt in local.items():
+            yield pd.DataFrame({"shard": [s], "payload": [filt._payload()]})
+
+    schema = "shard int, payload binary"
+    for row in hashes.mapInPandas(fold, schema=schema).collect():
+        out._merge_payload(row["shard"], row["payload"])
+    return out
 
 
 def build_bloom(
@@ -159,36 +392,14 @@ def build_bloom(
     expected: int | None = None,
     fpp: float = BLOOM_FPP,
 ) -> BloomFilter:
-    """Distributed build: each of ``_FOLD_PARTITIONS`` tasks folds its Arrow
-    batches into a local bitset (mapInPandas), the driver ORs the bitsets.
-    One pass, no shuffle; only bitsets cross to the driver. Once the bitset
-    exceeds ``BLOOM_AUTO_SHARD_BYTES`` the build delegates to
-    :func:`build_bloom_sharded` (collect O(m) total across shard-sized
-    bitsets); both return a :class:`BloomFilter`, so callers never pick."""
+    """Distributed bloom build (see :func:`_fold`): one pass, only bitsets
+    cross to the driver. Once the bitset exceeds ``AUTO_SHARD_BYTES`` the
+    filter is sharded (:func:`build_bloom_sharded`, collect O(m) total);
+    either way it is a :class:`BloomFilter`, so callers never pick."""
     if expected is None:
         expected = df.count()
-    out = BloomFilter.sized_for(expected, fpp)
-    m, k = out.m, out.k
-    if len(out.bits) > BLOOM_AUTO_SHARD_BYTES:
-        n_shards = max(8, -(-len(out.bits) // _BLOOM_SHARD_TARGET_BYTES))
-        return build_bloom_sharded(
-            df, hash_col, n_shards=n_shards, expected=expected, fpp=fpp
-        )
-
-    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        local = BloomFilter(bits=np.zeros((m + 7) // 8, dtype=np.uint8), m=m, k=k)
-        seen_any = False
-        for pdf in batches:
-            if len(pdf):
-                seen_any = True
-                local.add_hashes(pdf[hash_col].to_numpy(dtype=np.int64))
-        if seen_any:
-            yield pd.DataFrame({"bits": [local.bits.tobytes()]})
-
-    folds = df.select(hash_col).coalesce(_FOLD_PARTITIONS)
-    for row in folds.mapInPandas(fold, schema="bits binary").collect():
-        out.bits |= np.frombuffer(row["bits"], dtype=np.uint8)
-    return out
+    n_shards = _auto_shards(len(BloomFilter.sized_for(expected, fpp).bits))
+    return build_bloom_sharded(df, hash_col, n_shards, expected, fpp)
 
 
 def build_bloom_sharded(
@@ -198,51 +409,63 @@ def build_bloom_sharded(
     expected: int | None = None,
     fpp: float = BLOOM_FPP,
 ) -> BloomFilter:
-    """Distributed sharded build: repartition the seen-set on
-    ``pmod(hash, n_shards)`` so each task sees (mostly) one shard, fold each
-    shard's hashes into its own m-bit bitset, OR each into its shard's slice
-    of the result on the driver. A monolithic 1%-FPP bloom over 1e10 keys is
-    ~12 GB — too big to collect from every fold — but each of S=1024
-    shards is ~12 MB, so every fold task allocates shard-sized bitsets and
-    the driver collect stays O(m) total. Lossless per shard (same
-    zero-false-negative property as the monolithic build — property-tested)."""
+    """Distributed bloom build with ``n_shards`` m/S-bit shards. A
+    monolithic 1%-FPP bloom over 1e10 keys is ~12 GB — too big to collect
+    from every fold — but each of S=1024 shards is ~12 MB, so every fold
+    task allocates shard-sized bitsets and the driver collect stays O(m)
+    total. Lossless per shard (same zero-false-negative property as the
+    one-shard build — property-tested)."""
     if expected is None:
         expected = df.count()
-    out = BloomFilter.sized_for(expected, fpp, n_shards)
-    m, k, bps = out.m, out.k, out.bytes_per_shard
+    return _fold(df, hash_col, BloomFilter.sized_for(expected, fpp, n_shards))
 
-    sharded = df.select(
-        F.col(hash_col).alias("h"),
-        F.pmod(F.col(hash_col), F.lit(n_shards)).cast("int").alias("__shard"),
-    ).repartition(n_shards, "__shard")
 
-    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        local: dict[int, BloomFilter] = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            h = pdf["h"].to_numpy(dtype=np.int64)
-            sh = pdf["__shard"].to_numpy()  # one conversion per batch
-            for s in np.unique(sh):
-                bf = local.setdefault(
-                    int(s),
-                    BloomFilter(bits=np.zeros(bps, dtype=np.uint8), m=m, k=k),
-                )
-                bf.add_hashes(h[sh == s])
-        for s, bf in local.items():
-            yield pd.DataFrame({"shard": [s], "bits": [bf.bits.tobytes()]})
+def build_cuckoo(
+    df: DataFrame,
+    hash_col: str,
+    capacity: int | None = None,
+) -> CuckooFilter:
+    """Distributed cuckoo build (see :func:`_fold`), sharded like
+    :func:`build_bloom` once the table exceeds ``AUTO_SHARD_BYTES``.
 
-    for row in sharded.mapInPandas(fold, schema="shard int, bits binary").collect():
-        s = row["shard"]
-        out.bits[s * bps : (s + 1) * bps] |= np.frombuffer(row["bits"], dtype=np.uint8)
-    return out
+    Sized at 2x the seen-set by default: cuckoo tables degrade (eviction
+    loops) near full occupancy, and an overflow would mean false negatives
+    — both build and merge raise instead of degrading silently.
+
+    Probes are fully vectorized (one numpy gather per batch); insertion is
+    per-hash inside the Arrow batch because cuckoo eviction chains are
+    inherently sequential — construction cost, not query-path cost. The
+    bloom remains the default prefilter; the cuckoo buys deletability
+    (frontier retraction) at that build premium."""
+    if capacity is None:
+        capacity = max(df.count() * 2, 8)
+    n_shards = _auto_shards(CuckooFilter(capacity).table.nbytes)
+    return build_cuckoo_sharded(df, hash_col, n_shards, capacity)
+
+
+def build_cuckoo_sharded(
+    df: DataFrame,
+    hash_col: str,
+    n_shards: int = 8,
+    capacity: int | None = None,
+) -> CuckooFilter:
+    """Distributed cuckoo build with ``n_shards`` capacity/S tables. At the
+    10^10-URL scale a monolithic table is ~40 GB and its driver merge
+    re-inserts every fingerprint on one machine; sharded, each fold task
+    allocates shard-sized tables and the driver merge is O(capacity/S) per
+    shard. Lossless (build and merge raise on overflow, so zero false
+    negatives — property-tested across shards)."""
+    if capacity is None:
+        capacity = max(df.count() * 2, 8)
+    return _fold(df, hash_col, CuckooFilter(capacity, n_shards))
 
 
 def maybe_contains(filt, hash_col: Column) -> Column:
     """Arrow-batched membership probe column for any filter with
-    ``contains_hashes`` (bloom, sharded or not; cuckoo, sharded or not).
-    The filter rides in the UDF closure, so it is serialized once per task
-    and each Arrow batch probes it in place — no per-batch copy."""
+    ``contains_hashes`` (a :class:`BloomFilter` or :class:`CuckooFilter`,
+    any shard count). The filter rides in the UDF closure, so it is
+    serialized once per task and each Arrow batch probes it in place — no
+    per-batch copy."""
 
     @F.pandas_udf(BooleanType())
     def _probe(h: pd.Series) -> pd.Series:
@@ -254,13 +477,13 @@ def maybe_contains(filt, hash_col: Column) -> Column:
 def anti_join_seen(
     candidates: DataFrame,
     url_seen: DataFrame,
-    bloom: "BloomFilter | CuckooFilter | ShardedCuckoo | None" = None,
+    bloom: "BloomFilter | CuckooFilter | None" = None,
 ) -> DataFrame:
     """Rows of ``candidates`` whose (url_hash, canonical_url) is NOT in
     ``url_seen`` — the J1/J2 visited-membership kernel (SURVEY.md §2.3).
 
     With an approximate-membership prefilter over url_seen's hashes (bloom
-    or cuckoo, sharded or not), the definitely-new rows skip the shuffle
+    or cuckoo, any shard count), the definitely-new rows skip the shuffle
     entirely; only maybe-seen rows join. Lossless: none of the filters has
     false negatives (the cuckoo build raises on overflow to guarantee it).
     """
@@ -281,260 +504,6 @@ def anti_join_seen(
         how="left_anti",
     )
     return definitely_new.unionByName(survivors)
-
-
-def build_cuckoo(
-    df: DataFrame,
-    hash_col: str,
-    capacity: int | None = None,
-) -> "CuckooFilter":
-    """Distributed cuckoo build, same shape as :func:`build_bloom`: each
-    fold task inserts its Arrow batches into a local table, the driver
-    unions the tables by fingerprint re-insertion. All tables share one
-    bucket count so (bucket, alt) geometry is identical everywhere.
-
-    Sized at 2x the seen-set by default: cuckoo tables degrade (eviction
-    loops) near full occupancy, and an overflow would mean false negatives
-    — both build and merge raise instead of degrading silently.
-
-    Probes are fully vectorized (two numpy gathers per batch); insertion is
-    per-hash inside the Arrow batch because cuckoo eviction chains are
-    inherently sequential — construction cost, not query-path cost. The
-    bloom remains the default prefilter; the cuckoo buys deletability
-    (frontier retraction) at that build premium."""
-    if capacity is None:
-        capacity = max(df.count() * 2, 8)
-    proto = CuckooFilter(capacity=capacity)
-    n_buckets = proto.n_buckets
-
-    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        local = CuckooFilter(capacity=n_buckets * 4)
-        seen_any = False
-        for pdf in batches:
-            if len(pdf):
-                seen_any = True
-                local.add_hashes(pdf[hash_col].to_numpy(dtype=np.int64))
-        if seen_any:
-            yield pd.DataFrame({"table": [local.table.tobytes()]})
-
-    folds = df.select(hash_col).coalesce(_FOLD_PARTITIONS)
-    parts = folds.mapInPandas(fold, schema="table binary").collect()
-    out = proto
-    for row in parts:
-        other = CuckooFilter(capacity=n_buckets * 4)
-        other.table = np.frombuffer(row["table"], dtype=np.uint16).reshape(
-            n_buckets, 4
-        ).copy()
-        out = out.merge(other)
-    return out
-
-
-@dataclass
-class ShardedCuckoo:
-    """Hash-space-sharded cuckoo: shard ``s`` holds only hashes with
-    ``pmod(hash, n_shards) == s``, each in its own capacity/S table.
-
-    Same deployment argument as :func:`build_bloom_sharded`: at the 10^10-URL
-    north-rule scale a monolithic cuckoo table is ~40 GB and the
-    :func:`build_cuckoo` driver merge re-inserts every fingerprint on one
-    machine. Sharding makes each fold task allocate exactly one
-    shard-sized table and keeps the driver merge O(capacity/S) per shard
-    — the same fix build_bloom_sharded applied to the bloom in round 1.
-    Delete (the reason the cuckoo exists) routes to one shard."""
-
-    shards: list[CuckooFilter]
-    n_shards: int
-
-    def _shard_of(self, hashes: np.ndarray) -> np.ndarray:
-        # numpy's floored mod == Spark pmod for positive modulus
-        return np.mod(hashes.astype(np.int64), self.n_shards)
-
-    def contains_hashes(self, hashes: np.ndarray) -> np.ndarray:
-        h = hashes.astype(np.int64)
-        shard_of = self._shard_of(h)
-        out = np.zeros(len(h), dtype=bool)
-        for s in np.unique(shard_of):
-            mask = shard_of == s
-            out[mask] = self.shards[int(s)].contains_hashes(h[mask])
-        return out
-
-    def delete(self, h: int) -> bool:
-        return self.shards[int(np.mod(np.int64(h), self.n_shards))].delete(h)
-
-
-def build_cuckoo_sharded(
-    df: DataFrame,
-    hash_col: str,
-    n_shards: int = 8,
-    capacity: int | None = None,
-) -> "ShardedCuckoo":
-    """Distributed sharded cuckoo build, mirror of
-    :func:`build_bloom_sharded`: repartition the seen-set on
-    ``pmod(hash, n_shards)`` so each task sees (mostly) one shard, insert
-    each shard's hashes into its own capacity/S table, merge same-shard
-    tables on the driver by fingerprint re-insertion. Lossless per shard
-    (build and merge raise on overflow, so zero false negatives —
-    property-tested across shards)."""
-    if capacity is None:
-        capacity = max(df.count() * 2, 8)
-    per_shard = max(capacity // n_shards, 8)
-    proto = CuckooFilter(capacity=per_shard)
-    n_buckets = proto.n_buckets
-
-    sharded = df.select(
-        F.col(hash_col).alias("h"),
-        F.pmod(F.col(hash_col), F.lit(n_shards)).cast("int").alias("__shard"),
-    ).repartition(n_shards, "__shard")
-
-    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        local: dict[int, CuckooFilter] = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            h = pdf["h"].to_numpy(dtype=np.int64)
-            sh = pdf["__shard"].to_numpy()
-            for s in np.unique(sh):
-                cf = local.setdefault(int(s), CuckooFilter(capacity=n_buckets * 4))
-                cf.add_hashes(h[sh == s])
-        for s, cf in local.items():
-            yield pd.DataFrame({"shard": [s], "table": [cf.table.tobytes()]})
-
-    parts = sharded.mapInPandas(fold, schema="shard int, table binary").collect()
-    shards = [CuckooFilter(capacity=n_buckets * 4) for _ in range(n_shards)]
-    for row in parts:
-        other = CuckooFilter(capacity=n_buckets * 4)
-        other.table = (
-            np.frombuffer(row["table"], dtype=np.uint16)
-            .reshape(n_buckets, 4)
-            .copy()
-        )
-        shards[row["shard"]] = shards[row["shard"]].merge(other)
-    return ShardedCuckoo(shards=shards, n_shards=n_shards)
-
-
-# ---------------------------------------------------------------------------
-# Cuckoo filter — deletable approximate membership (north_star add-on).
-# ---------------------------------------------------------------------------
-
-
-class CuckooFilter:
-    """Bucketed cuckoo filter over int64 hashes (16-bit fingerprints,
-    4 slots/bucket). Supports delete — which a Bloom filter cannot — for
-    frontier *retraction* (e.g. un-marking URLs whose politeness lease
-    expired). numpy storage; per-partition instances merge by re-insertion."""
-
-    def __init__(self, capacity: int):
-        n_buckets = 1
-        while n_buckets * 4 < capacity:
-            n_buckets *= 2
-        self.n_buckets = max(n_buckets, 2)
-        self.table = np.zeros((self.n_buckets, 4), dtype=np.uint16)
-        self.max_kicks = 500
-
-    def _fp_and_bucket(self, h: int) -> tuple[int, int]:
-        h = h & 0xFFFFFFFFFFFFFFFF
-        fp = (h >> 48) & 0xFFFF
-        fp = fp if fp != 0 else 1
-        return fp, (h & (self.n_buckets - 1))
-
-    def _alt_bucket(self, bucket: int, fp: int) -> int:
-        return (bucket ^ (fp * 0x5BD1E995)) & (self.n_buckets - 1)
-
-    def insert(self, h: int) -> bool:
-        fp, b1 = self._fp_and_bucket(h)
-        for b in (b1, self._alt_bucket(b1, fp)):
-            empty = np.where(self.table[b] == 0)[0]
-            if len(empty):
-                self.table[b, empty[0]] = fp
-                return True
-        # evict loop
-        rng = np.random.Generator(np.random.PCG64(h & 0xFFFFFFFF))
-        b = b1
-        for _ in range(self.max_kicks):
-            slot = int(rng.integers(0, 4))
-            fp, self.table[b, slot] = int(self.table[b, slot]), fp
-            b = self._alt_bucket(b, fp)
-            empty = np.where(self.table[b] == 0)[0]
-            if len(empty):
-                self.table[b, empty[0]] = fp
-                return True
-        return False  # full
-
-    def contains(self, h: int) -> bool:
-        fp, b1 = self._fp_and_bucket(h)
-        return bool(
-            (self.table[b1] == fp).any()
-            or (self.table[self._alt_bucket(b1, fp)] == fp).any()
-        )
-
-    # -- vectorized / distributed surface (north_star: Arrow-batched probes) --
-
-    def add_hashes(self, hashes: np.ndarray) -> None:
-        """Insert a hash batch; raises if the table overflows (an overflowed
-        cuckoo loses membership → false negatives, which would silently
-        break the lossless prefilter contract)."""
-        for h in hashes.astype(np.uint64).tolist():
-            if not self.insert(int(h)):
-                raise RuntimeError(
-                    "cuckoo filter overflow — size capacity for the seen-set"
-                )
-
-    def contains_hashes(self, hashes: np.ndarray) -> np.ndarray:
-        """Vectorized membership: both candidate buckets checked with one
-        numpy gather each — no per-row Python."""
-        if len(hashes) == 0:
-            return np.zeros(0, dtype=bool)
-        h = hashes.astype(np.uint64)
-        fp = ((h >> np.uint64(48)) & np.uint64(0xFFFF)).astype(np.uint16)
-        fp[fp == 0] = 1
-        b1 = (h & np.uint64(self.n_buckets - 1)).astype(np.int64)
-        alt = (
-            b1 ^ (fp.astype(np.int64) * 0x5BD1E995)
-        ) & (self.n_buckets - 1)
-        hit1 = (self.table[b1] == fp[:, None]).any(axis=1)
-        hit2 = (self.table[alt] == fp[:, None]).any(axis=1)
-        return hit1 | hit2
-
-    def merge(self, other: "CuckooFilter") -> "CuckooFilter":
-        """Union by re-inserting the other table's occupied slots. Sound
-        because a fingerprint's two legal buckets are (b, alt(b, fp)) and
-        alt is an involution — a stored (bucket, fp) pair re-inserted at
-        either legal bucket stays findable by contains()."""
-        assert self.n_buckets == other.n_buckets
-        out = CuckooFilter(capacity=self.n_buckets * 4)
-        out.table = self.table.copy()
-        bs, slots = np.nonzero(other.table)  # iterate occupied slots only
-        for b, sl in zip(bs.tolist(), slots.tolist()):
-            if not out._insert_fp(int(b), int(other.table[b, sl])):
-                raise RuntimeError("cuckoo merge overflow")
-        return out
-
-    def _insert_fp(self, bucket: int, fp: int) -> bool:
-        for b in (bucket, self._alt_bucket(bucket, fp)):
-            empty = np.where(self.table[b] == 0)[0]
-            if len(empty):
-                self.table[b, empty[0]] = fp
-                return True
-        rng = np.random.Generator(np.random.PCG64((bucket << 16) | fp))
-        b = bucket
-        for _ in range(self.max_kicks):
-            slot = int(rng.integers(0, 4))
-            fp, self.table[b, slot] = int(self.table[b, slot]), fp
-            b = self._alt_bucket(b, fp)
-            empty = np.where(self.table[b] == 0)[0]
-            if len(empty):
-                self.table[b, empty[0]] = fp
-                return True
-        return False
-
-    def delete(self, h: int) -> bool:
-        fp, b1 = self._fp_and_bucket(h)
-        for b in (b1, self._alt_bucket(b1, fp)):
-            hit = np.where(self.table[b] == fp)[0]
-            if len(hit):
-                self.table[b, hit[0]] = 0
-                return True
-        return False
 
 
 # ---------------------------------------------------------------------------

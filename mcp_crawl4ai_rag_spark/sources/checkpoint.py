@@ -10,9 +10,10 @@ so snapshots are modeled as immutable parquet directories
     <dir>/fetched/epoch=<N>/           (append-only results log)
     <dir>/lineage/epoch=<N>/
 
-which preserves the properties the tests need: atomic-enough publication
-(state.json written last = commit marker), time travel by epoch, and
-idempotent re-execution of a partially written epoch (rewrite, then publish).
+which preserves the properties the tests need: atomic publication
+(state.json written last and swapped in whole = commit marker), time travel
+by epoch, and idempotent re-execution of a partially written epoch (rewrite,
+then publish).
 Swapping to Iceberg replaces write_epoch/load_epoch bodies only.
 """
 
@@ -23,6 +24,24 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+
+
+def write_json_atomic(path: str, obj: dict) -> None:
+    """Publish ``obj`` as the JSON file ``path`` so readers see the old file
+    or the whole new one, never a torn one: fsync a temp file, ``os.replace``
+    it over ``path``, then fsync the directory so the rename itself
+    survives power loss."""
+    tmp = f"{path}.tmp{os.getpid()}"
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh)
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.replace(tmp, path)
+    dfd = os.open(os.path.dirname(path), os.O_RDONLY)
+    try:
+        os.fsync(dfd)
+    finally:
+        os.close(dfd)
 
 
 class CheckpointManager:
@@ -72,8 +91,7 @@ class CheckpointManager:
             os.path.join(self.root, "lineage", f"ep_{epoch}")
         )
         # commit marker LAST — readers only trust epochs that have it
-        with open(os.path.join(d, "state.json"), "w") as f:
-            json.dump({"epoch": epoch, **state}, f)
+        write_json_atomic(os.path.join(d, "state.json"), {"epoch": epoch, **state})
         return (
             self.spark.read.parquet(os.path.join(d, "frontier")),
             self.spark.read.parquet(os.path.join(d, "url_seen")),

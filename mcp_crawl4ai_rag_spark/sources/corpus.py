@@ -569,15 +569,6 @@ def gen_robots_bodies(spark: SparkSession, n_hosts: int = N_HOSTS) -> DataFrame:
     return spark.createDataFrame(rows, "host string, body string")
 
 
-def gen_politeness(spark: SparkSession, n_hosts: int = N_HOSTS) -> DataFrame:
-    rows = [(f"h{h}.example.com", 1.0, 3.0, 60.0, 3) for h in range(n_hosts)]
-    return spark.createDataFrame(
-        rows,
-        "host string, base_delay_min double, base_delay_max double, "
-        "max_delay double, max_retries int",
-    )
-
-
 # ---------------------------------------------------------------------------
 # Oracle SQL fragments (DuckDB) — rendered from the same constants
 # ---------------------------------------------------------------------------

@@ -30,6 +30,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 
 from ..plans.rag import store_documents_incremental
+from .checkpoint import write_json_atomic
 
 
 class DocumentStore:
@@ -57,18 +58,7 @@ class DocumentStore:
 
     def _publish(self, gen: int) -> None:
         """fsync-then-rename manifest swap — the atomic commit point."""
-        tmp = self._manifest_path() + f".tmp{os.getpid()}"
-        with open(tmp, "w") as fh:
-            json.dump({"gen": gen}, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, self._manifest_path())
-        # fsync the directory so the rename itself survives power loss
-        dfd = os.open(self.root, os.O_RDONLY)
-        try:
-            os.fsync(dfd)
-        finally:
-            os.close(dfd)
+        write_json_atomic(self._manifest_path(), {"gen": gen})
 
     # -- read/commit ------------------------------------------------------
 

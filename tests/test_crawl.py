@@ -181,6 +181,63 @@ def test_checkpoint_resume_bit_identical(spark, corpus, tmp_path):
     assert f1 == f2
 
 
+def test_checkpoint_torn_marker_falls_back_to_previous_epoch(
+    spark, corpus, tmp_path, monkeypatch
+):
+    """A kill partway through writing epoch 2's commit marker must leave
+    epoch 1 as the latest committed epoch (the torn marker is never
+    visible), and resuming from it must equal an uninterrupted run. A
+    marker written in place leaves a half-written state.json that
+    latest_epoch trusts and resume cannot parse."""
+    import json
+
+    from mcp_crawl4ai_rag_spark.sources.checkpoint import CheckpointManager
+
+    class Killed(BaseException):
+        pass
+
+    real_dump = json.dump
+
+    def torn_dump(obj, fh, *args, **kwargs):
+        if isinstance(obj, dict) and obj.get("epoch") == 2:
+            fh.write(json.dumps(obj)[:10])  # half the marker reaches disk
+            fh.flush()
+            raise Killed()
+        return real_dump(obj, fh, *args, **kwargs)
+
+    seeds = gen_seeds(spark, N)
+    robots = gen_robots(spark)
+    full = CrawlEngine(
+        spark, corpus, robots=robots, allowed_host_suffix=".example.com",
+    ).run(seeds, max_depth=DEPTH)
+
+    part_dir = str(tmp_path / "part")
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(Killed):
+        CrawlEngine(
+            spark, corpus, robots=robots, allowed_host_suffix=".example.com",
+            checkpoint_dir=part_dir,
+        ).run(seeds, max_depth=DEPTH)
+    monkeypatch.setattr(json, "dump", real_dump)
+
+    assert CheckpointManager(spark, part_dir).latest_epoch() == 1
+    resumed = CrawlEngine(
+        spark, corpus, robots=robots, allowed_host_suffix=".example.com",
+        checkpoint_dir=part_dir,
+    ).resume(max_epochs=DEPTH)
+
+    def key(df):
+        return sorted(
+            (r["canonical_url"], r["depth"], r["seq"], r["epoch_seen"])
+            for r in df.collect()
+        )
+
+    assert key(full.url_seen) == key(resumed.url_seen)
+    f1 = sorted((r["canonical_url"], r["epoch"]) for r in full.fetched.collect())
+    f2 = sorted((r["canonical_url"], r["epoch"]) for r in resumed.fetched.collect())
+    assert f1 == f2
+
+
 def test_lineage_schema_and_counts(spark, corpus):
     res = CrawlEngine(
         spark, corpus, robots=gen_robots(spark), allowed_host_suffix=".example.com"

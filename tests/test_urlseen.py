@@ -194,28 +194,42 @@ def test_cuckoo_distributed_build_and_antijoin(spark):
     # retraction: delete then re-probe (the capability bloom cannot offer)
     import numpy as _np
 
-    h = [r["url_hash"] for r in seen.limit(5).collect()]
+    seen_h = [r["url_hash"] for r in seen.collect()]
+    h = seen_h[:5]
     for x in h:
         assert cf.delete(x)
-    assert not cf.contains_hashes(_np.array(h, dtype=_np.int64)).any() or True
+    assert not cf.contains_hashes(_np.array(h, dtype=_np.int64)).any()
+    # deleting a key never takes a neighbour's fingerprint
+    assert cf.contains_hashes(_np.array(seen_h[5:], dtype=_np.int64)).all()
 
 
 def test_sharded_cuckoo_zero_false_negatives_across_shards():
-    from mcp_crawl4ai_rag_spark.operators.urlseen import CuckooFilter, ShardedCuckoo
-
     rng = np.random.default_rng(13)
     xs = np.unique(rng.integers(-(2**62), 2**62, 4000, dtype=np.int64))
     S = 8
     per_cap = 2 * (len(xs) // S + 1)
-    sc = ShardedCuckoo(
-        shards=[CuckooFilter(capacity=per_cap) for _ in range(S)], n_shards=S
-    )
+    sc = CuckooFilter(capacity=S * per_cap, n_shards=S)
+    sc.add_hashes(xs)
+    # shard s occupies its own bucket slice and holds exactly the table a
+    # one-shard filter over the keys with pmod(h, S) == s would hold
     shard_of = np.mod(xs, S)
+    nb = sc.n_buckets
     for s in range(S):
-        sc.shards[s].add_hashes(xs[shard_of == s])
+        one = CuckooFilter(capacity=per_cap)
+        one.add_hashes(xs[shard_of == s])
+        assert one.n_buckets == nb
+        assert np.array_equal(sc.table[s * nb : (s + 1) * nb], one.table)
     assert sc.contains_hashes(xs).all()  # no false negative crosses a shard
     others = np.setdiff1d(rng.integers(-(2**62), 2**62, 20000, dtype=np.int64), xs)
     assert sc.contains_hashes(others).mean() < 0.01  # 16-bit fp FPP
+    # merge re-inserts shard by shard; shard counts must agree
+    half_a = CuckooFilter(capacity=S * per_cap, n_shards=S)
+    half_b = CuckooFilter(capacity=S * per_cap, n_shards=S)
+    half_a.add_hashes(xs[::2])
+    half_b.add_hashes(xs[1::2])
+    assert half_a.merge(half_b).contains_hashes(xs).all()
+    with pytest.raises(AssertionError):
+        half_a.merge(CuckooFilter(capacity=S * per_cap))
     # delete routes to the owning shard and un-members the key
     victims = xs[:5]
     for x in victims:
@@ -223,6 +237,32 @@ def test_sharded_cuckoo_zero_false_negatives_across_shards():
     # (fingerprint collisions within a bucket could keep a deleted key
     # "present"; with 16-bit fps at this load that is vanishingly rare)
     assert sc.contains_hashes(victims).sum() <= 1
+
+
+@pytest.mark.parametrize("n_shards, ref_buckets", [(8, 65536), (6, 131072)])
+def test_sharded_cuckoo_fpp_matches_one_shard(n_shards, ref_buckets):
+    """Sharding must not cost accuracy: a sharded cuckoo's false-positive
+    rate stays within 2x of a one-shard cuckoo with at least as many
+    buckets. Shard and in-shard bucket both taken from the low hash bits
+    put each shard's keys in 1/S of its primary buckets (S = 8), which
+    crowds them into long eviction chains: on this seed that FPP read
+    3.8x the one-shard filter's. S = 6 covers a shard count that is not a
+    power of two (sharded table 3/4 the reference's size)."""
+    rng = np.random.default_rng(13)
+    xs = np.unique(rng.integers(-(2**63), 2**63 - 1, 100_000, dtype=np.int64))
+    probes = np.setdiff1d(
+        rng.integers(-(2**63), 2**63 - 1, 2_000_000, dtype=np.int64), xs
+    )
+    one = CuckooFilter(capacity=4 * ref_buckets)
+    sharded = CuckooFilter(capacity=4 * 65536, n_shards=n_shards)
+    assert one.n_buckets == ref_buckets
+    assert n_shards * sharded.n_buckets <= ref_buckets
+    one.add_hashes(xs)
+    sharded.add_hashes(xs)
+    assert sharded.contains_hashes(xs).all()
+    fpp_one = one.contains_hashes(probes).mean()
+    fpp_sharded = sharded.contains_hashes(probes).mean()
+    assert fpp_sharded <= 2 * fpp_one, (fpp_sharded, fpp_one)
 
 
 def test_sharded_cuckoo_distributed_build_and_antijoin(spark):
@@ -237,6 +277,7 @@ def test_sharded_cuckoo_distributed_build_and_antijoin(spark):
         F.xxhash64(F.concat(F.lit("u"), (F.col("id") * 2))).alias("url_hash"),
     )
     sc = build_cuckoo_sharded(seen, "url_hash", n_shards=8)
+    assert isinstance(sc, CuckooFilter) and sc.n_shards == 8
     # zero false negatives through the distributed build + sharded probe
     misses = seen.withColumn(
         "hit", maybe_contains(sc, F.col("url_hash"))
@@ -332,7 +373,7 @@ def test_bloom_sparse_reduceat_path_identical_and_bounded():
 
 
 def test_build_bloom_auto_shards_above_driver_budget(spark, monkeypatch):
-    """Above BLOOM_AUTO_SHARD_BYTES build_bloom must return a sharded
+    """Above AUTO_SHARD_BYTES build_bloom must return a sharded
     filter (collect O(m) total, the 10^10 shape) instead of collecting one
     full-width bitset per fold — the monolithic collect measurably blows
     spark.driver.maxResultSize at a 1B-URL epoch (the failed 1B rung in
@@ -343,7 +384,7 @@ def test_build_bloom_auto_shards_above_driver_budget(spark, monkeypatch):
     bit-identical to the exact anti-join either way."""
     from mcp_crawl4ai_rag_spark.operators import urlseen as us
 
-    assert us.BLOOM_AUTO_SHARD_BYTES * us._FOLD_PARTITIONS == 512 * 1024 * 1024
+    assert us.AUTO_SHARD_BYTES * us._FOLD_PARTITIONS == 512 * 1024 * 1024
 
     cand = spark.range(0, 3000, 1, 8).select(
         F.concat(F.lit("u"), F.col("id")).alias("canonical_url"),
@@ -357,16 +398,57 @@ def test_build_bloom_auto_shards_above_driver_budget(spark, monkeypatch):
     assert mono.n_shards == 1  # below threshold: unchanged path
     bitset_bytes = len(mono.bits)
 
-    monkeypatch.setattr(us, "BLOOM_AUTO_SHARD_BYTES", bitset_bytes)
+    monkeypatch.setattr(us, "AUTO_SHARD_BYTES", bitset_bytes)
     at_gate = us.build_bloom(seen, "url_hash", expected=1500)
     assert at_gate.n_shards == 1 and np.array_equal(at_gate.bits, mono.bits)
 
-    monkeypatch.setattr(us, "BLOOM_AUTO_SHARD_BYTES", bitset_bytes - 1)
-    monkeypatch.setattr(us, "_BLOOM_SHARD_TARGET_BYTES", 32)
+    monkeypatch.setattr(us, "AUTO_SHARD_BYTES", bitset_bytes - 1)
+    monkeypatch.setattr(us, "_SHARD_TARGET_BYTES", 32)
     auto = us.build_bloom(seen, "url_hash", expected=1500)
     # ~1500-key bitset is ~1.8 kB → ceil(1.8k/32) ≈ 57 shards ≥ the floor of 8
     assert auto.n_shards >= 8
     assert len(auto.bits) == auto.n_shards * auto.bytes_per_shard
+    hits = seen.withColumn("hit", maybe_contains(auto, F.col("url_hash")))
+    assert hits.where(~F.col("hit")).count() == 0  # zero false negatives
+    exact = set(
+        r[0] for r in anti_join_seen(cand, seen, None).select("canonical_url").collect()
+    )
+    with_auto = set(
+        r[0]
+        for r in anti_join_seen(cand, seen, auto).select("canonical_url").collect()
+    )
+    assert exact == with_auto and len(exact) == 1500
+
+
+def test_build_cuckoo_auto_shards_above_driver_budget(spark, monkeypatch):
+    """build_cuckoo shares build_bloom's driver-collect gate: a table of
+    exactly AUTO_SHARD_BYTES stays one-shard, one byte more shards (a
+    one-shard fold collects _FOLD_PARTITIONS full tables). Gate shrunk so
+    the switch is exercised at test scale; anti-join output must be
+    identical to the exact anti-join either way."""
+    from mcp_crawl4ai_rag_spark.operators import urlseen as us
+
+    cand = spark.range(0, 3000, 1, 8).select(
+        F.concat(F.lit("u"), F.col("id")).alias("canonical_url"),
+        F.xxhash64(F.concat(F.lit("u"), F.col("id"))).alias("url_hash"),
+    )
+    seen = spark.range(0, 1500, 1, 8).select(
+        F.concat(F.lit("u"), (F.col("id") * 2)).alias("canonical_url"),
+        F.xxhash64(F.concat(F.lit("u"), (F.col("id") * 2))).alias("url_hash"),
+    )
+    mono = us.build_cuckoo(seen, "url_hash")
+    assert mono.n_shards == 1  # below the gate
+    table_bytes = mono.table.nbytes
+
+    monkeypatch.setattr(us, "AUTO_SHARD_BYTES", table_bytes)
+    at_gate = us.build_cuckoo(seen, "url_hash")
+    assert at_gate.n_shards == 1 and at_gate.table.shape == mono.table.shape
+
+    monkeypatch.setattr(us, "AUTO_SHARD_BYTES", table_bytes - 1)
+    monkeypatch.setattr(us, "_SHARD_TARGET_BYTES", 1024)
+    auto = us.build_cuckoo(seen, "url_hash")
+    assert auto.n_shards >= 8
+    assert auto.table.shape == (auto.n_shards * auto.n_buckets, 4)
     hits = seen.withColumn("hit", maybe_contains(auto, F.col("url_hash")))
     assert hits.where(~F.col("hit")).count() == 0  # zero false negatives
     exact = set(
