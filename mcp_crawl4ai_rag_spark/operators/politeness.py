@@ -98,10 +98,24 @@ def pop_per_host(
     :func:`attach_budgets` zero-shuffle path) with ``budgets=None``.
     ``budgets=None`` with no budget column → pop everything (reference
     level-synchronous mode, src/crawl4ai_mcp.py:993-1011 crawls the whole
-    depth level).
+    depth level) and nothing runs until the caller acts.
+
+    Otherwise the call runs ONE Spark job: the phase-1 frame (input +
+    ``__lane`` + ``__lane_rk``) is materialized with :func:`local_ckpt`,
+    and popped, deferred and both branches of deferred's union read that
+    checkpoint. Left lazy, each of those three consumers would re-run the
+    whole upstream — in the frontier epoch the Arrow bloom probe, the
+    exact anti-join, the budget attach and the wide ``(host, __lane)``
+    exchange — because Spark shares no exchange across separate actions
+    and did not reuse it across the union's branches (9 Python probe
+    passes per frontier epoch instead of 2). What stays lazy is the
+    phase-2 window over the survivors, at most ``lanes × budget`` rows
+    per host. ContextCleaner frees the checkpoint with its last reader.
     """
     if budgets is None and "budget" not in frontier.columns:
         return frontier, frontier.limit(0)
+
+    from .. import local_ckpt
 
     if "budget" in frontier.columns:
         fr = frontier
@@ -112,7 +126,7 @@ def pop_per_host(
     # host's rows spread over salt_lanes parallel window partitions.
     lane = F.pmod(F.col("url_hash"), F.lit(salt_lanes))
     w_lane = Window.partitionBy("host", "__lane").orderBy(*_order())
-    fr = (
+    fr = local_ckpt(
         fr.withColumn("__lane", lane)
         .withColumn("__lane_rk", F.row_number().over(w_lane))
     )
@@ -173,10 +187,12 @@ def pop_per_host_threshold(
     must exist before the broadcast). Over a stored table (the engine's
     ``frontier_store_dir`` mode) the second read is a column-pruned scan;
     over a lazy input whose lineage carries the epoch's bloom probe + exact
-    anti-join, that upstream would run TWICE (measured 1.3-2x slower than
-    :func:`pop_per_host` on the 16M frontier epoch, BENCH/
-    bench_r3_ab_pairs.json), which is why the engine pops an in-memory
-    frontier with :func:`pop_per_host` instead.
+    anti-join, that upstream would run once per branch and once more per
+    side. :func:`pop_per_host` materializes its branch point and runs the
+    upstream exactly once, which is why the engine pops an in-memory
+    frontier with it instead (this pop was already 1.3-2x slower on the
+    16M frontier epoch when pop_per_host still recomputed its upstream
+    per side, BENCH/bench_r3_ab_pairs.json).
     """
     if budgets is None and "budget" not in frontier.columns:
         return frontier, frontier.limit(0)

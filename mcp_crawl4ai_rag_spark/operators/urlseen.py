@@ -465,13 +465,20 @@ def maybe_contains(filt, hash_col: Column) -> Column:
     ``contains_hashes`` (a :class:`BloomFilter` or :class:`CuckooFilter`,
     any shard count). The filter rides in the UDF closure, so it is
     serialized once per task and each Arrow batch probes it in place — no
-    per-batch copy."""
+    per-batch copy.
+
+    The UDF is marked nondeterministic although it is a pure function:
+    Catalyst infers only deterministic predicates across join keys, and
+    without the mark it copied ``_probe(url_hash)`` from the candidates
+    onto url_seen's side of :func:`anti_join_seen` — Python work that
+    scales with url_seen and answers True for every one of its rows (the
+    filter was built from them)."""
 
     @F.pandas_udf(BooleanType())
     def _probe(h: pd.Series) -> pd.Series:
         return pd.Series(filt.contains_hashes(h.to_numpy(dtype=np.int64)))
 
-    return _probe(hash_col)
+    return _probe.asNondeterministic()(hash_col)
 
 
 def anti_join_seen(

@@ -235,10 +235,10 @@ class CrawlEngine:
         # 'stored' legs share the in-memory legs' oracles).
         # Without a store the salted two-phase pop runs: on one box it wins
         # wall-clock (interleaved paired A/B, BENCH/
-        # bench_r3_ab_pairs_postfix.json: median twophase/threshold 0.51)
-        # because its exchanges double as materialization for the
-        # popped/deferred dual read, which the threshold pop would have to
-        # pay for with a full-width checkpoint.
+        # bench_r3_ab_pairs_postfix.json: median twophase/threshold 0.51);
+        # it checkpoints its lane-ranked frame once, so the popped/deferred
+        # dual read and this epoch's next-frontier build share one run of
+        # the probe, anti-join and lane exchange.
         self.frontier_store_dir = frontier_store_dir
         # Politeness GRAIN: "host" throttles per hostname (the reference's
         # RateLimiter grain); "domain" throttles per registrable domain

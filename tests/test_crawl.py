@@ -445,6 +445,68 @@ def test_pop_threshold_attach_budgets_path(spark):
     assert key(d_b) == key(d_a)
 
 
+def test_pop_per_host_evaluates_its_input_once(spark):
+    """pop_per_host materializes its phase-1 frame once and popped,
+    deferred and both branches of deferred's union read it: a counting UDF
+    upstream of the pop sees every row exactly once across both sides'
+    actions, and over a bloom-prefiltered input neither side's plan
+    re-runs the probe."""
+    import pandas as pd
+    from pyspark.sql.types import IntegerType
+
+    from mcp_crawl4ai_rag_spark.operators.politeness import (
+        attach_budgets,
+        pop_per_host,
+    )
+    from mcp_crawl4ai_rag_spark.operators.urlseen import (
+        anti_join_seen,
+        build_bloom,
+    )
+
+    n = 3000
+
+    def urls(ids):
+        u = F.concat(F.lit("https://h"), (F.col("id") % 7), F.lit(".x/p/"), F.col("id"))
+        return ids.select(
+            u.alias("canonical_url"),
+            F.xxhash64(u).alias("url_hash"),
+            F.concat(F.lit("h"), (F.col("id") % 7), F.lit(".x")).alias("host"),
+            F.concat(F.lit("/p/"), F.col("id")).alias("path"),
+            (F.col("id") % 3).cast("int").alias("depth"),
+            F.lit(0).alias("priority"),
+            F.col("id").alias("seq"),
+        )
+
+    frontier = urls(spark.range(0, n, 1, 8))
+    reads = spark.sparkContext.accumulator(0)
+
+    @F.pandas_udf(IntegerType())
+    def counted(p: pd.Series) -> pd.Series:
+        reads.add(len(p))
+        return p
+
+    with_b = attach_budgets(
+        frontier.withColumn("priority", counted("priority")),
+        None, None, epoch_seconds=200.0,
+    )
+    popped, deferred = pop_per_host(with_b, None)
+    n_popped, n_deferred = len(popped.collect()), len(deferred.collect())
+    assert n_popped == 7 * 100 and n_popped + n_deferred == n
+    assert reads.value == n
+
+    seen = urls(spark.range(0, n, 3, 8)).select("url_hash", "canonical_url")
+
+    def epoch(filt):
+        fresh = anti_join_seen(frontier, seen, filt)
+        return pop_per_host(attach_budgets(fresh, None, None, epoch_seconds=200.0), None)
+
+    bloomed = epoch(build_bloom(seen, "url_hash", expected=n // 3))
+    for side in bloomed:
+        assert "ArrowEvalPython" not in side._jdf.queryExecution().sparkPlan().toString()
+    key = lambda df: sorted(r["canonical_url"] for r in df.collect())
+    assert [key(s) for s in bloomed] == [key(s) for s in epoch(None)]
+
+
 def test_checkpoint_resume_politeness_bit_identical(spark, corpus, tmp_path):
     """Kill/resume under politeness budgets + backoff: the resumed run must
     reproduce the uninterrupted schedule exactly, including which epoch each

@@ -73,9 +73,54 @@ def test_anti_join_with_bloom_equals_exact(spark):
     assert len(exact) == 500
 
 
+def _python_eval_leaves(df):
+    """Leaf node names under each ArrowEvalPython node of ``df``'s
+    physical plan (before AQE wraps it)."""
+
+    def leaves(node):
+        kids = node.children()
+        if kids.size() == 0:
+            return [node.nodeName()]
+        return [x for i in range(kids.size()) for x in leaves(kids.apply(i))]
+
+    def walk(node):
+        out = [leaves(node)] if node.nodeName() == "ArrowEvalPython" else []
+        kids = node.children()
+        return out + [x for i in range(kids.size()) for x in walk(kids.apply(i))]
+
+    return walk(df._jdf.queryExecution().sparkPlan())
+
+
+def test_anti_join_never_probes_url_seen(spark):
+    """The bloom is built from url_seen, so probing url_seen's own rows is
+    pure waste: every probe answers True. Only the candidates are probed
+    (once per union branch), and the result equals the exact anti-join."""
+    from mcp_crawl4ai_rag_spark import local_ckpt
+
+    cand = spark.range(0, 1000, 1, 4).select(
+        F.concat(F.lit("u"), F.col("id")).alias("canonical_url"),
+        F.xxhash64(F.concat(F.lit("u"), F.col("id"))).alias("url_hash"),
+    )
+    # a checkpoint scan, so url_seen's leaf is told apart from cand's Range
+    seen = local_ckpt(spark.range(0, 600, 1, 4).select(
+        F.concat(F.lit("u"), (F.col("id") * 3)).alias("canonical_url"),
+        F.xxhash64(F.concat(F.lit("u"), (F.col("id") * 3))).alias("url_hash"),
+    ))
+    bloom = build_bloom(seen, "url_hash", expected=600)
+    fresh = anti_join_seen(cand, seen, bloom)
+    probed = _python_eval_leaves(fresh)
+    assert len(probed) == 2
+    assert all(set(ls) == {"Range"} for ls in probed), probed
+    key = lambda df: sorted(r[0] for r in df.select("canonical_url").collect())
+    assert key(fresh) == key(anti_join_seen(cand, seen, None))
+    assert len(key(fresh)) == 1000 - 334
+
+
 def test_cuckoo_insert_contains_delete():
     cf = CuckooFilter(capacity=1000)
-    xs = [hash(("url", i)) for i in range(500)]
+    # seeded keys: the outcome must not depend on the process's hash salt
+    rng = np.random.default_rng(5)
+    xs = [int(x) for x in rng.integers(-(2**63), 2**63 - 1, 500, dtype=np.int64)]
     for x in xs:
         assert cf.insert(x)
     assert all(cf.contains(x) for x in xs)

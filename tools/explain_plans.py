@@ -942,19 +942,60 @@ def main():
     ))
 
     # crawl_e2e composition gate: PageRank priorities survive the
-    # bloom+anti-join dedup into the budgeted pop, in ONE plan
+    # bloom+anti-join dedup into the budgeted pop. The pop checkpoints its
+    # lane-ranked frame when the query is built, so the dedup and phase 1
+    # ran in that job; the returned plan is phase 2 over the checkpoint.
     e2e = E.q_crawl_e2e(spark, sf_dir)
     e2e_plan = formatted(e2e)
     sections.append((
         "crawl_e2e composition (pagerank -> dedup -> budgets -> pop)",
         e2e_plan,
         [
-            ("LeftAnti", "exact URL-seen anti-join present"),
-            ("ArrowEvalPython", "bloom prefilter is an Arrow-batched probe"),
-            ("row_number", "salted two-phase pop windows"),
+            ("ExistingRDD", "popped reads the pop's checkpointed lane-ranked frame"),
+            ("row_number", "phase-2 per-host pop window"),
+            ("!ArrowEvalPython", "the bloom probe ran once, in the pop's own job"),
             # pagerank's own contrib-join/aggregate shape is audited in the
             # "PageRank round" section — its iterations sit behind a
             # localCheckpoint, so they are not part of this composed plan
+        ],
+    ))
+
+    # frontier epoch: bloom-prefiltered anti_join_seen -> attach_budgets ->
+    # pop_per_host. The probe runs over the candidates only (never over
+    # url_seen, whose rows all probe True), and only inside the pop's one
+    # checkpoint job — neither popped nor deferred re-runs it.
+    from mcp_crawl4ai_rag_spark import local_ckpt
+    from mcp_crawl4ai_rag_spark.operators.politeness import pop_per_host
+    from mcp_crawl4ai_rag_spark.operators.urlseen import anti_join_seen, build_bloom
+
+    ep_seen = local_ckpt(
+        fr.where(F.col("seq") % 3 == 0).select("url_hash", "canonical_url")
+    )
+    ep_fresh = anti_join_seen(
+        fr, ep_seen, build_bloom(ep_seen, "url_hash", expected=200_000 // 3)
+    )
+    aj_plan = formatted(ep_fresh)
+    checks = [
+        ("ArrowEvalPython", "bloom prefilter is an Arrow-batched probe"),
+        ("LeftAnti", "maybe-seen rows take the exact anti-join"),
+    ]
+    if _re.search(r"ArrowEvalPython \(\d+\)\n[ :|]*\+- Scan ExistingRDD", aj_plan):
+        checks.append(("never", "PROBE OVER url_seen — its rows all probe True"))
+    sections.append((
+        "Bloom-prefiltered URL-seen anti-join (probe over the candidates only)",
+        aj_plan,
+        checks,
+    ))
+    ep_popped, ep_deferred = pop_per_host(
+        _ab(ep_fresh, None, None, epoch_seconds=100.0), None
+    )
+    sections.append((
+        "Two-phase pop over the deduped epoch (popped, then deferred)",
+        formatted(ep_popped) + "\n" + formatted(ep_deferred),
+        [
+            ("ExistingRDD", "both sides read the pop's checkpointed lane-ranked frame"),
+            ("!ArrowEvalPython", "neither side re-runs the bloom probe"),
+            ("!LeftAnti", "neither side re-runs the anti-join"),
         ],
     ))
 
