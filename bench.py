@@ -279,7 +279,7 @@ def frontier_epoch(
     # warm both inputs so the timed region is the dedup+pop pipeline only.
     # Serialized level to match the engine's own checkpoints (local_ckpt):
     # the deserialized default's live row objects tax the concurrent bloom
-    # fold ~4x at 32 cores (tools/ckpt_level_ab.py, median 10.8s vs 2.65s).
+    # fold ~4x at 32 cores (BENCH/ckpt_level_ab_32.json, median 10.8s vs 2.65s).
     from pyspark import StorageLevel as _SL
 
     frontier = frontier.localCheckpoint(
@@ -347,7 +347,7 @@ def stored_epoch_time(spark, n: int, reps: int = 2) -> float:
     bloom+anti-join dedup → budget attach → THRESHOLD pop straight off
     the table scan (the table IS the materialization), with BOTH pop
     outputs consumed at FULL width (the engine-faithful shape, where the bucket layout's zero-Exchange pop
-    actually matters; tools/stored_pop_witness.py measures the pop at
+    actually matters; BENCH/bench_r5_stored_pop_bytes.json records the pop at
     0 shuffled bytes vs 626 MB for the in-memory two-phase). The table
     write itself is untimed — on the deployment cluster the previous
     epoch wrote it."""
@@ -459,10 +459,11 @@ def _task_skew(spark, min_stage_id: int, min_tasks: int = 8) -> dict:
     cliffs (hot key, degenerate salting), and a sub-second excess on a
     short wave is host jitter, not data skew. Evidence: the one real catch
     (pipeline_e2e pre-explode-fix) read median 994 / max 8210 ms — 7.2 s
-    excess — while tools/skew_drill.py attribution of every ≥2× trip since
+    excess — while the attribution of every ≥2× trip since
     the fix landed on the 8-task bloom shard-fold collect
     (urlseen.py:227) at median ~300 / max ~620 ms, uniform shuffle reads,
-    ratio drifting 1.36→2.59 across runs with ambient. Returns the worst
+    ratio drifting 1.36→2.59 across runs with ambient
+    (BENCH/skew_drill_crawl_e2e_10x.txt). Returns the worst
     ratio plus the stage it came from — 'no task > 2× median on the
     salted paths' is the pass bar (VERDICT r3 #6)."""
     import json as _json

@@ -63,7 +63,7 @@ def local_ckpt(df, eager: bool = True):
     (``MEMORY_AND_DISK``, deserialized=False) instead of Spark's default
     deserialized level.
 
-    Measured on this engine (tools/ckpt_level_ab.py, interleaved pairs in
+    Measured on this engine (BENCH/ckpt_level_ab_32.json, interleaved pairs in
     one JVM so ambient drift hits both arms): with a 16M-row frontier
     checkpoint resident, a concurrent 32-thread Arrow mapInPandas fold
     takes median 10.8 s over the default deserialized checkpoint

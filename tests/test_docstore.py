@@ -118,3 +118,78 @@ def test_manifest_swap_is_fsynced_rename(spark, store, monkeypatch):
 def test_empty_store_reads_none(store):
     assert store.read() is None
     assert store.current_gen() is None
+
+
+def test_commit_batch_evaluates_its_batch_once(spark, store):
+    """The upsert reads the batch twice (broadcast key set, dedup window);
+    the commit materializes it first, so its Python lineage runs once. The
+    counted UDF produces ``url``, so neither branch can prune it away."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    store.commit_batch(_mk_batch(spark, [(f"u{i}", 0, f"v0:{i}") for i in range(10)]))
+    evals = spark.sparkContext.accumulator(0)
+
+    @pandas_udf("string")
+    def counted_url(url: pd.Series) -> pd.Series:
+        evals.add(len(url))
+        return url
+
+    items = [(f"u{i}", 0, f"v1:{i}") for i in range(0, 30, 2)]
+    batch = _mk_batch(spark, items).withColumn("url", counted_url("url"))
+    got = store.commit_batch(batch)
+    assert evals.value == len(items)
+    want = {f"u{i}": (f"u{i}", 0, f"v0:{i}") for i in range(10)}
+    want.update((r[0], r) for r in items)
+    assert _rows(got) == sorted(want.values())
+
+
+def test_read_and_snapshot_start_no_job_and_keep_the_inferred_schema(
+    spark, store, monkeypatch
+):
+    """Opening a generation reads its schema from the manifest: neither
+    read() nor the snapshot commit_batch returns (nor the store side of the
+    upsert) starts a schema-inference job, and the schema is the one
+    inference would give."""
+    from pyspark.sql import DataFrameReader
+
+    sc = spark.sparkContext
+    group = "docstore-open"
+    real_parquet = DataFrameReader.parquet
+
+    def parquet_in_group(self, *paths, **options):
+        sc.setJobGroup(group, "opening a docstore generation")
+        try:
+            return real_parquet(self, *paths, **options)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    store.commit_batch(_mk_batch(spark, [(f"u{i}", 0, f"v0:{i}") for i in range(5)]))
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet_in_group)
+    snap = store.commit_batch(_mk_batch(spark, [("u1", 0, "v1:1"), ("new", 0, "vn")]))
+    read = store.read()
+    monkeypatch.undo()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    inferred = spark.read.parquet(os.path.join(store.root, "gen_1")).schema
+    assert snap.schema == inferred
+    assert read.schema == inferred
+    assert _rows(read) == _rows(snap) == sorted(
+        [(f"u{i}", 0, f"v0:{i}") for i in (0, 2, 3, 4)] + [("u1", 0, "v1:1"), ("new", 0, "vn")]
+    )
+
+
+def test_manifest_without_schema_still_reads(spark, store):
+    """A ``{"gen": k}`` manifest, written before the manifest carried the
+    schema, reads by inference, and the next commit upgrades it."""
+    store.commit_batch(_mk_batch(spark, [("u0", 0, "v0"), ("u1", 0, "v1")]))
+    with open(os.path.join(store.root, "MANIFEST.json"), "w") as fh:
+        json.dump({"gen": 0}, fh)
+    assert store.current_gen() == 0
+    assert _rows(store.read()) == [("u0", 0, "v0"), ("u1", 0, "v1")]
+    got = store.commit_batch(_mk_batch(spark, [("u1", 0, "v1b")]))
+    assert _rows(got) == [("u0", 0, "v0"), ("u1", 0, "v1b")]
+    with open(os.path.join(store.root, "MANIFEST.json")) as fh:
+        manifest = json.load(fh)
+    assert manifest["gen"] == 1 and "schema" in manifest

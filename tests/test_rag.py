@@ -513,3 +513,32 @@ def test_conditional_recrawl_304_skips_body_and_advances_index(spark):
     assert [(r["url"], r["change_kind"], r["fp"]) for r in st2] == [
         ("u/rogue", "new", None)
     ]
+
+
+def test_search_passes_the_query_vector_as_one_value(store):
+    """The query vector is one expression, not one literal per component
+    (1 536 of them at the default width), and the top-k rows and
+    similarities equal a per-component literal array's."""
+    from mcp_crawl4ai_rag_spark.functions.vectors import cosine_expr
+
+    plan = search_documents(store, "bloom filters")._jdf.queryExecution().analyzed()
+    n_literals = plan.toJSON().count('"class":"org.apache.spark.sql.catalyst.expressions.Literal"')
+    assert 0 < n_literals < 50
+
+    for query in ("spark joins", "python udfs", "bloom filters", "anything else"):
+        qv = embed_query(query, dim=DIM)
+        ref = (
+            store.select(
+                "url",
+                "chunk_number",
+                F.round(
+                    cosine_expr(F.col("embedding"), F.array(*[F.lit(float(x)) for x in qv])), 4
+                ).alias("similarity"),
+            )
+            .orderBy(F.desc("similarity"), "url", "chunk_number")
+            .limit(5)
+        )
+        got = search_documents(store, query, match_count=5, dim=DIM)
+        assert [tuple(r) for r in got.select("url", "chunk_number", "similarity").collect()] == [
+            tuple(r) for r in ref.collect()
+        ]
