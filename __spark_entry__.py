@@ -6719,9 +6719,11 @@ FROM ranked
 
 def q_media_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio resample + video frame sampling + image aspect-bucket batching
-    behind one gate. Schema (kind, media_id, v1, v2, v3, tag): audio →
-    (sr, n_samples, 0, fmt); video → (frame_idx, w, h, ''); aspect_buckets
-    → (bucket_id, batch_idx, pos_in_batch, 'bwxbh')."""
+    + the composed image pipeline (:func:`q_image_e2e`) behind one gate.
+    Schema (kind, media_id, v1, v2, v3, tag): audio → (sr, n_samples, 0,
+    fmt); video → (frame_idx, w, h, ''); aspect_buckets → (bucket_id,
+    batch_idx, pos_in_batch, 'bwxbh'); image_e2e → (shard_id, pos_bytes,
+    item_bytes, '')."""
     aud = q_audio_resample(spark, sf_dir).select(
         F.lit("audio_resample").alias("kind"),
         F.col("audio_id").alias("media_id"),
@@ -6746,7 +6748,15 @@ def q_media_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("pos_in_batch").alias("v3"),
         F.col("bucket").alias("tag"),
     )
-    return aud.unionByName(vid).unionByName(ab)
+    img = q_image_e2e(spark, sf_dir).select(
+        F.lit("image_e2e").alias("kind"),
+        F.col("image_id").alias("media_id"),
+        F.col("shard_id").alias("v1"),
+        F.col("pos_bytes").alias("v2"),
+        F.col("item_bytes").alias("v3"),
+        F.lit("").alias("tag"),
+    )
+    return aud.unionByName(vid).unionByName(ab).unionByName(img)
 
 
 def _oracle_media_transform() -> str:
@@ -6765,7 +6775,12 @@ def _oracle_media_transform() -> str:
         "'aspect_buckets' AS kind, image_id AS media_id, bucket_id AS v1, "
         "batch_idx AS v2, pos_in_batch AS v3, bucket AS tag",
     )
-    return f"{aud}\nUNION ALL\n{vid}\nUNION ALL\n{ab}"
+    img = _tagged(
+        _oracle_image_e2e(),
+        "'image_e2e' AS kind, image_id AS media_id, shard_id AS v1, "
+        "pos_bytes AS v2, item_bytes AS v3, '' AS tag",
+    )
+    return f"{aud}\nUNION ALL\n{vid}\nUNION ALL\n{ab}\nUNION ALL\n{img}"
 
 
 def q_smart_crawl_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7509,7 +7524,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "link_counts": q_link_counts,
         "pipeline_e2e": q_pipeline_e2e,
         "crawl_e2e": q_crawl_e2e,
-        "image_e2e": q_image_e2e,
     }
 
 
@@ -7570,5 +7584,4 @@ def oracle_sql() -> dict[str, str]:
         "link_counts": _oracle_link_counts(),
         "pipeline_e2e": _oracle_pipeline_e2e(),
         "crawl_e2e": _oracle_crawl_e2e(),
-        "image_e2e": _oracle_image_e2e(),
     }

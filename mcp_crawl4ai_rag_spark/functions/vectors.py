@@ -8,8 +8,21 @@ They compute in float64; oracle comparisons round to 4dp.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+
+def vector_lit(values, elem_type: str = "double") -> Column:
+    """A constant vector as ONE expression: a JSON literal that
+    ``from_json`` parses into ``array<elem_type>``, instead of one
+    ``F.lit`` per component. Catalyst analyses every expression of a plan
+    on every query, and a 1 536-component array of literals cost more than
+    the scan it fed. Doubles travel as their shortest round-trip repr, so
+    the parsed values equal the per-component literals exactly."""
+    cast = float if elem_type == "double" else int
+    return F.from_json(F.lit(json.dumps([cast(x) for x in values])), f"array<{elem_type}>")
 
 
 def dot_expr(a: Column, b: Column) -> Column:

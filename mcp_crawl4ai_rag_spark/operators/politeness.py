@@ -104,11 +104,11 @@ def pop_per_host(
     ``__lane`` + ``__lane_rk``) is materialized with :func:`local_ckpt`,
     and popped, deferred and both branches of deferred's union read that
     checkpoint. Left lazy, each of those three consumers would re-run the
-    whole upstream — in the frontier epoch the Arrow bloom probe, the
+    whole upstream — in the frontier epoch the bloom probe join, the
     exact anti-join, the budget attach and the wide ``(host, __lane)``
     exchange — because Spark shares no exchange across separate actions
-    and did not reuse it across the union's branches (9 Python probe
-    passes per frontier epoch instead of 2). What stays lazy is the
+    and did not reuse it across the union's branches (9 probe passes per
+    frontier epoch instead of 2). What stays lazy is the
     phase-2 window over the survivors, at most ``lanes × budget`` rows
     per host. ContextCleaner frees the checkpoint with its last reader.
     """

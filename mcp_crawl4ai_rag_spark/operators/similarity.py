@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from .. import SER_CKPT_LEVEL as _SER_LEVEL  # single engine-wide definition
 
 from ..functions.hashing import py_md5int64
-from ..functions.vectors import cosine_expr
+from ..functions.vectors import cosine_expr, vector_lit
 
 DEFAULT_LSH_PLANES = 8
 
@@ -41,7 +41,7 @@ def hyperplane(p: int, dim: int) -> list[int]:
 
 def _dot_plane(vec_col, plane: list[int]):
     """Σ ±v_d as a left fold in float64 (order-stable across engines)."""
-    arr = F.array(*[F.lit(float(x)) for x in plane])
+    arr = vector_lit(plane)
     return F.aggregate(
         F.zip_with(vec_col, arr, lambda v, w: v.cast("double") * w),
         F.lit(0.0),
@@ -68,7 +68,7 @@ def brute_topk(
 ) -> DataFrame:
     """Exact cosine top-k vs a fixed query vector: (id, sim). Deterministic
     tie-break on id. The reference's T1 operator (SURVEY.md §2.5)."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
+    q = vector_lit(query_vec)
     return (
         embs.select(
             F.col(id_col),
@@ -130,7 +130,7 @@ def quantized_topk(
     if mx == 0.0:
         raise ValueError("zero query vector")
     qq = [int(np.floor(x * 127.0 / mx + 0.5)) for x in q]
-    q_arr = F.array(*[F.lit(int(x)) for x in qq])
+    q_arr = vector_lit(qq, "int")
 
     approx = quantized.select(
         F.col(id_col),
@@ -171,7 +171,7 @@ def quantized_topk(
             F.round(
                 cosine_expr(
                     F.col(vec_col),
-                    F.array(*[F.lit(float(x)) for x in query_vec]),
+                    vector_lit(query_vec),
                 ),
                 4,
             ).alias("sim"),
@@ -309,15 +309,8 @@ def ivf_assign(
     rows = sorted(
         centroids.select("cid", "ce").collect(), key=lambda r: r["cid"]
     )
-    dists = F.array(
-        *[
-            l2sq_expr(
-                F.col(vec_col), F.array(*[F.lit(float(x)) for x in r["ce"]])
-            )
-            for r in rows
-        ]
-    )
-    cid_arr = F.array(*[F.lit(r["cid"]) for r in rows])
+    dists = F.array(*[l2sq_expr(F.col(vec_col), vector_lit(r["ce"])) for r in rows])
+    cid_arr = vector_lit([r["cid"] for r in rows], "int")
     # cids sorted ascending → array_position's first match IS the lowest-cid
     # tie winner; min compares the exact doubles the array holds.
     idx = F.array_position(dists, F.array_min(dists)).cast("int")
@@ -339,7 +332,7 @@ def ivf_topk(
     query, exact cosine only within their inverted lists. ``centroids`` is
     the trained codebook — deterministic here (tests/oracles pass fixed
     rows); at scale it comes from k-means over a sample."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
+    q = vector_lit(query_vec)
     probe = (
         centroids.withColumn("__d", l2sq_expr(F.col("ce"), q))
         .orderBy(F.col("__d").asc(), F.col("cid").asc())
@@ -805,7 +798,7 @@ def pq_codes_expr(codebook_rows, n_sub: int, vec_col: str = "embedding"):
             *[
                 l2sq_expr(
                     x_slice,
-                    F.array(*[F.lit(float(v)) for v in r["ce"][j * sub : (j + 1) * sub]]),
+                    vector_lit(r["ce"][j * sub : (j + 1) * sub]),
                 )
                 for r in rows
             ]
@@ -865,14 +858,9 @@ def _pq_adc_expr(codebook_rows, query_vec: list[float], n_sub: int):
     sub = dim // n_sub
     score = None
     for j in range(n_sub):
-        lut = F.array(
-            *[
-                F.lit(
-                    _py_l2sq(
-                        query_vec[j * sub : (j + 1) * sub],
-                        r["ce"][j * sub : (j + 1) * sub],
-                    )
-                )
+        lut = vector_lit(
+            [
+                _py_l2sq(query_vec[j * sub : (j + 1) * sub], r["ce"][j * sub : (j + 1) * sub])
                 for r in codebook_rows
             ]
         )

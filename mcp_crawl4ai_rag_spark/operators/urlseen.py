@@ -10,14 +10,19 @@ construction (property-tested), so the split is lossless. The cuckoo
 filter is the deletable alternative (frontier retraction).
 
 Both filters are one type each (:class:`BloomFilter`, :class:`CuckooFilter`)
-with an ``n_shards`` field, built by one fold (:func:`_fold`) and probed by
-one Arrow UDF (:func:`maybe_contains`).
+with an ``n_shards`` field, built by one fold (:func:`_fold`, the only
+Python work) and probed inside the JVM: :func:`anti_join_seen` broadcasts
+the filter as one ``array<bigint>`` value (``words()``) and tests each
+candidate with a Spark SQL expression (``sql_contains``) that computes
+exactly what the numpy twin ``contains_hashes`` computes.
 
 Scale notes (10^10 URLs): a monolithic 1%-FPP bloom for 1e10 keys is ~12 GB —
-too big to broadcast. Sharding is the deployment shape: the filter is
-sharded by ``pmod(url_hash, n_shards)`` so each fold task holds one
+too big to broadcast. Sharding is the build's deployment shape: the filter
+is sharded by ``pmod(url_hash, n_shards)`` so each fold task holds one
 shard-sized local; ``build_bloom``/``build_cuckoo`` shard on their own
-above ``AUTO_SHARD_BYTES``.
+above ``AUTO_SHARD_BYTES``. The probe still broadcasts the whole filter,
+so :func:`anti_join_seen` refuses one above ``MAX_PROBE_BYTES`` (512 MiB,
+~440M keys at 1% FPP) before any job starts.
 Raising FPP for the pre-filter role also helps (a 10% FPP filter is 5x
 smaller and still removes 90% of the join traffic). The exact anti-join
 stays bucketed on ``url_hash`` so state and probes co-locate.
@@ -35,27 +40,30 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType
 
 from ..config import BLOOM_FPP
 
-_MIX = np.uint64(0x9E3779B97F4A7C15)  # splitmix64 increment for h2 derivation
+_LOW32 = 0xFFFFFFFF
 
 
 def _indices(hashes: np.ndarray, m: int, k: int) -> np.ndarray:
     """(k, n) bit indices via Kirsch-Mitzenmacher double hashing — pure numpy.
 
-    Division-free beyond the two base modulos: probe j is (h1 + j*h2) mod m
-    computed by iterated add + conditional subtract (both operands < m, so
-    one subtract suffices). Integer division has no SIMD path — the naive
-    37M-modulo broadcast costs ~2.7s for a 5.3M-key build vs ~0.6s here."""
-    h1 = hashes.astype(np.uint64)
-    h2 = h1 * _MIX
-    h2 = (h2 ^ (h2 >> np.uint64(31))) | np.uint64(1)  # odd → full period
+    Probe j is (a + j*b) mod m over the hash's two 32-bit halves: a the
+    high half, b the low half forced odd. Every term stays below
+    (k + 1) * 2^32, so Spark SQL computes the same index without a 64-bit
+    overflow under ANSI arithmetic (:meth:`BloomFilter.sql_contains`).
+    numpy stays division-free beyond the two base modulos: iterated add +
+    conditional subtract (both operands < m, so one subtract suffices).
+    Integer division has no SIMD path — the naive 37M-modulo broadcast
+    costs ~2.7s for a 5.3M-key build vs ~0.6s here."""
+    u = hashes.astype(np.uint64)
+    a = u >> np.uint64(32)
+    b = (u & np.uint64(_LOW32)) | np.uint64(1)
     mm = np.uint64(m)
-    out = np.empty((k, len(h1)), dtype=np.uint64)
-    np.mod(h1, mm, out=out[0])
-    step = h2 % mm
+    out = np.empty((k, len(u)), dtype=np.uint64)
+    np.mod(a, mm, out=out[0])
+    step = b % mm
     for j in range(1, k):
         np.add(out[j - 1], step, out=out[j])
         out[j][out[j] >= mm] -= mm
@@ -139,6 +147,31 @@ class BloomFilter:
         idx = self._positions(hashes)  # (k, n)
         bit = (self.bits[idx >> 3] >> (idx & 7).astype(np.uint8)) & 1
         return bit.all(axis=0)
+
+    def words(self) -> np.ndarray:
+        """``bits`` as little-endian int64 words, zero-padded to a whole
+        word: filter bit g is bit ``g & 63`` of word ``g >> 6``."""
+        padded = np.zeros(-(-len(self.bits) // 8) * 8, dtype=np.uint8)
+        padded[: len(self.bits)] = self.bits
+        return padded.view("<i8")
+
+    def sql_contains(self, h: str, words: str) -> Column:
+        """:meth:`contains_hashes` as a Spark SQL expression over the bigint
+        column ``h`` and the array<bigint> column ``words`` holding
+        :meth:`words`: the k positions of :func:`_indices`, offset to the
+        hash's shard, each one word gather and one bit test. Parsed from
+        one SQL string: built call by call through py4j, the expression
+        took ~80 ms of driver time per epoch."""
+        a = f"shiftrightunsigned({h}, 32)"
+        b = f"(({h} & {_LOW32}L) | 1L)"
+        shard = self.bytes_per_shard * 8
+        base = f" + pmod({h}, {self.n_shards}) * {shard}L" if self.n_shards > 1 else ""
+        terms = []
+        for j in range(self.k):
+            g = f"(pmod({a} + {b} * {j}, {self.m}L){base})"
+            word = f"element_at({words}, cast(shiftright({g}, 6) + 1 AS INT))"
+            terms.append(f"getbit({word}, cast({g} & 63 AS INT)) = 1")
+        return F.expr(" AND ".join(terms))
 
     def merge(self, other: "BloomFilter") -> "BloomFilter":
         assert (self.m, self.k, self.n_shards) == (other.m, other.k, other.n_shards)
@@ -261,7 +294,7 @@ class CuckooFilter:
                 return True
         return False
 
-    # -- vectorized / distributed surface (north_star: Arrow-batched probes) --
+    # -- vectorized / distributed surface --
 
     def add_hashes(self, hashes: np.ndarray) -> None:
         """Insert a hash batch; raises if the table overflows (an overflowed
@@ -282,6 +315,30 @@ class CuckooFilter:
         fp, b1 = self._locate(hashes.astype(np.int64))
         both = np.stack([b1, self._alt_bucket(b1, fp.astype(np.int64))])
         return (self.table[both] == fp[:, None]).any(axis=(0, 2))
+
+    def words(self) -> np.ndarray:
+        """``table`` as one int64 word per bucket, slot s in bits
+        16s..16s+15."""
+        return self.table.astype("<u2", copy=False).view("<i8").ravel()
+
+    def sql_contains(self, h: str, words: str) -> Column:
+        """:meth:`contains_hashes` as a Spark SQL expression over the bigint
+        column ``h`` and the array<bigint> column ``words`` holding
+        :meth:`words`: :meth:`_locate` and :meth:`_alt_bucket` in int64 (no
+        term reaches 2^48), then the fingerprint against the four slots of
+        both buckets. A zero fingerprint reads as 1, so ``greatest``."""
+        mask = self.n_buckets - 1
+        fp = f"greatest(shiftrightunsigned({h}, 48), 1L)"
+        b1 = (
+            f"((shiftrightunsigned({h}, 16) & {mask}L)"
+            f" + pmod({h}, {self.n_shards}) * {self.n_buckets}L)"
+        )
+        b2 = f"({b1} ^ (({fp} * {_ALT_MUL}L) & {mask}L))"
+        terms = []
+        for b in (b1, b2):
+            word = f"element_at({words}, cast({b} + 1 AS INT))"
+            terms += [f"(shiftrightunsigned({word}, {16 * s}) & 65535L) = {fp}" for s in range(4)]
+        return F.expr(" OR ".join(terms))
 
     def _reinsert(self, table: np.ndarray, first_bucket: int) -> None:
         """Re-insert ``table``'s occupied slots, its bucket b landing at
@@ -354,14 +411,18 @@ def _fold(
     sees (made by ``out._local_maker()``, so only shard geometry rides in
     the closure) and yields ``(shard, payload)``; the driver merges each
     payload into that shard of ``out`` (bloom: bitwise OR; cuckoo:
-    fingerprint re-insertion). One shard coalesces to ``_FOLD_PARTITIONS``
-    tasks, no shuffle. More shards repartition on ``pmod(hash, n_shards)``
-    so each task (mostly) sees one shard, allocates shard-sized locals, and
-    the driver collect stays O(filter) in total."""
+    fingerprint re-insertion). One shard coalesces to at most
+    ``_FOLD_PARTITIONS`` tasks and never more than the task slots, so it
+    folds in one wave with no shuffle (each extra task only adds a wave and
+    one more collected filter). More shards repartition on
+    ``pmod(hash, n_shards)`` so each task (mostly) sees one shard,
+    allocates shard-sized locals, and the driver collect stays O(filter)
+    in total."""
     n_shards = out.n_shards
     hashes = df.select(hash_col)
     if n_shards == 1:
-        hashes = hashes.coalesce(_FOLD_PARTITIONS)
+        slots = df.sparkSession.sparkContext.defaultParallelism
+        hashes = hashes.coalesce(min(_FOLD_PARTITIONS, slots))
     else:
         hashes = hashes.repartition(
             n_shards, F.pmod(F.col(hash_col), F.lit(n_shards))
@@ -460,25 +521,30 @@ def build_cuckoo_sharded(
     return _fold(df, hash_col, CuckooFilter(capacity, n_shards))
 
 
-def maybe_contains(filt, hash_col: Column) -> Column:
-    """Arrow-batched membership probe column for any filter with
-    ``contains_hashes`` (a :class:`BloomFilter` or :class:`CuckooFilter`,
-    any shard count). The filter rides in the UDF closure, so it is
-    serialized once per task and each Arrow batch probes it in place — no
-    per-batch copy.
+# The probe ships the filter to every task as ONE broadcast row, and a
+# broadcast is collected through the driver (spark.driver.maxResultSize,
+# 1 GiB by default): the same 512 MiB budget as the fold's worst collect.
+MAX_PROBE_BYTES = 512 * 1024 * 1024
 
-    The UDF is marked nondeterministic although it is a pure function:
-    Catalyst infers only deterministic predicates across join keys, and
-    without the mark it copied ``_probe(url_hash)`` from the candidates
-    onto url_seen's side of :func:`anti_join_seen` — Python work that
-    scales with url_seen and answers True for every one of its rows (the
-    filter was built from them)."""
 
-    @F.pandas_udf(BooleanType())
-    def _probe(h: pd.Series) -> pd.Series:
-        return pd.Series(filt.contains_hashes(h.to_numpy(dtype=np.int64)))
+def _probe_value(spark, filt: "BloomFilter | CuckooFilter") -> DataFrame:
+    """The one-row broadcast frame a probe joins: ``filt.words()`` as
+    ``__filter`` array<bigint>, plus a constant ``__maybe_seen`` = true
+    that every row passing the probe picks up. It reaches the JVM as one
+    Arrow batch, and the probe reads the words in place: a literal array
+    would be deserialized per task."""
+    import pyarrow as pa
 
-    return _probe.asNondeterministic()(hash_col)
+    words = filt.words()
+    if words.nbytes > MAX_PROBE_BYTES:
+        raise ValueError(
+            f"membership filter of {words.nbytes} bytes exceeds the "
+            f"{MAX_PROBE_BYTES}-byte broadcast probe value; raise its fpp "
+            "or anti-join without a prefilter"
+        )
+    col = pa.ListArray.from_arrays(pa.array([0, len(words)], pa.int32()), pa.array(words))
+    row = pa.table({"__filter": col, "__maybe_seen": pa.array([True])})
+    return F.broadcast(spark.createDataFrame(row))
 
 
 def anti_join_seen(
@@ -490,9 +556,21 @@ def anti_join_seen(
     ``url_seen`` — the J1/J2 visited-membership kernel (SURVEY.md §2.3).
 
     With an approximate-membership prefilter over url_seen's hashes (bloom
-    or cuckoo, any shard count), the definitely-new rows skip the shuffle
-    entirely; only maybe-seen rows join. Lossless: none of the filters has
-    false negatives (the cuckoo build raises on overflow to guarantee it).
+    or cuckoo, any shard count), the definitely-new rows skip the exact
+    anti-join entirely; only maybe-seen rows join. Lossless: none of the
+    filters has false negatives (the cuckoo build raises on overflow to
+    guarantee it).
+
+    The probe runs in the JVM: each branch joins the candidates to the one
+    broadcast filter row on the filter's ``sql_contains`` expression (or
+    its negation), so url_seen's side carries no probe. The maybe-seen
+    rows bring the row's ``__maybe_seen`` into the exact anti-join's
+    condition. Without a condition column from the probe row, Catalyst
+    pushes the LeftAnti below the probe join, so every candidate would
+    enter the anti-join (and its shuffle under a sort-merge join). Nothing
+    above a probe join reads the filter words: a maybe-seen branch that
+    did (a tag column computed from them) took 4x the executor CPU, 628
+    against 148 ms over 60k candidates.
     """
     if bloom is None:
         return candidates.join(
@@ -500,15 +578,21 @@ def anti_join_seen(
             on=["url_hash", "canonical_url"],
             how="left_anti",
         )
-    flagged = candidates.withColumn(
-        "__maybe_seen", maybe_contains(bloom, F.col("url_hash"))
+    seen = url_seen.select(
+        F.col("url_hash").alias("__seen_hash"),
+        F.col("canonical_url").alias("__seen_url"),
     )
-    definitely_new = flagged.where(~F.col("__maybe_seen")).drop("__maybe_seen")
-    maybe = flagged.where(F.col("__maybe_seen")).drop("__maybe_seen")
-    survivors = maybe.join(
-        url_seen.select("url_hash", "canonical_url"),
-        on=["url_hash", "canonical_url"],
-        how="left_anti",
+    same = (F.col("url_hash") == F.col("__seen_hash")) & (
+        F.col("canonical_url") == F.col("__seen_url")
+    )
+    probed = candidates.crossJoin(_probe_value(candidates.sparkSession, bloom))
+    hit = bloom.sql_contains("url_hash", "__filter")
+    definitely_new = probed.where(~hit).select(*candidates.columns)
+    survivors = (
+        probed.where(hit)
+        .drop("__filter")
+        .join(seen, same & F.col("__maybe_seen"), "left_anti")
+        .select(*candidates.columns)
     )
     return definitely_new.unionByName(survivors)
 

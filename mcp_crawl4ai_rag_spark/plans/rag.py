@@ -16,8 +16,6 @@ rank); against Iceberg this becomes a MERGE INTO on the same key.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -27,7 +25,7 @@ from ..config import DEFAULT_MATCH_COUNT
 from ..functions.chunking import explode_chunks, with_section_info
 from ..functions.embedding import embed_query, with_embeddings
 from ..functions.urls import url_host
-from ..functions.vectors import cosine_expr
+from ..functions.vectors import cosine_expr, vector_lit
 
 
 def build_chunks(
@@ -492,9 +490,7 @@ def search_documents(
     df = store
     if source_filter is not None:
         df = df.where(F.col("source") == source_filter)
-    # one literal value, not one expression per component: Catalyst analyses
-    # every expression on every query, and 1 536 of them cost more than the scan
-    q = F.from_json(F.lit(json.dumps(qv)), "array<double>")
+    q = vector_lit(qv)
     # contextual-content swap (reference src/utils.py:583-586): when an
     # enriched text was stored for the chunk, return it AS the content
     content = (

@@ -794,3 +794,49 @@ def test_pair_retrieval_recall_identity_and_misses(spark):
     # at k = corpus size every query recovers its pair by exhaustion
     outN = {r["qid"]: r["recall"] for r in pair_retrieval_recall(qs, swapped, 12).collect()}
     assert outN == {i: 1.0 for i in range(12)}
+
+
+def test_vector_constants_pass_as_one_value_each(spark):
+    """Every constant vector a similarity plan carries (query, hyperplanes,
+    centroids, PQ codebook slices and look-up tables, quantized query,
+    centroid ids) is one expression, not one literal per component: at 256
+    dimensions each analyzed plan holds fewer literals than one vector has
+    components, and the values equal numpy's."""
+    from mcp_crawl4ai_rag_spark.operators.similarity import (
+        ivf_assign,
+        ivf_topk,
+        pq_topk,
+        quantize_embeddings,
+        quantized_topk,
+    )
+
+    dim, n = 256, 24
+    v = np.random.Generator(np.random.PCG64(11)).standard_normal((n, dim)).astype(np.float32)
+    big = spark.createDataFrame(
+        [(i, [float(x) for x in v[i]]) for i in range(n)],
+        "vec_id long, embedding array<float>",
+    )
+    cents = big.where(F.col("vec_id") < 6).select(
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
+    )
+    q = [float(x) for x in v[3]]
+    plans = {
+        "brute_topk": brute_topk(big, q, 5),
+        "bucket_expr": big.select(bucket_expr(F.col("embedding"), dim).alias("b")),
+        "quantized_topk": quantized_topk(big, quantize_embeddings(big), q, 5),
+        "ivf_assign": ivf_assign(big, cents),
+        "ivf_topk": ivf_topk(big, cents, q, 5),
+        "pq_topk": pq_topk(big, cents, q, 5, n_sub=4),
+    }
+    for name, df in plans.items():
+        js = df._jdf.queryExecution().analyzed().toJSON()
+        n_lit = js.count('"class":"org.apache.spark.sql.catalyst.expressions.Literal"')
+        assert 0 < n_lit < dim, (name, n_lit)
+
+    sims = sorted(((i, round(_np_cos(v[i], q), 4)) for i in range(n)), key=lambda t: (-t[1], t[0]))
+    assert [(r["vec_id"], r["sim"]) for r in plans["brute_topk"].collect()] == sims[:5]
+    got = {r["vec_id"]: r["cid"] for r in plans["ivf_assign"].collect()}
+    v64 = v.astype(np.float64)
+    for i in range(n):
+        d = ((v64[i] - v64[:6]) ** 2).sum(axis=1)
+        assert got[i] == int(np.argmin(d)), i

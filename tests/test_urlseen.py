@@ -1,6 +1,7 @@
 """Bloom / cuckoo / anti-join membership tests (north_star components)."""
 
 import numpy as np
+import pandas as pd
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -9,10 +10,17 @@ from pyspark.sql import functions as F
 from mcp_crawl4ai_rag_spark.operators.urlseen import (
     BloomFilter,
     CuckooFilter,
+    _probe_value,
     anti_join_seen,
     build_bloom,
-    maybe_contains,
 )
+
+
+def _probed(df, filt):
+    """``df`` plus ``hit``: the JVM membership probe of its ``url_hash``."""
+    return df.crossJoin(_probe_value(df.sparkSession, filt)).select(
+        *df.columns, filt.sql_contains("url_hash", "__filter").alias("hit")
+    )
 
 
 @settings(max_examples=50, deadline=None)
@@ -49,8 +57,41 @@ def test_bloom_merge():
 def test_distributed_build_and_probe(spark):
     df = spark.range(0, 2000, 1, 8).select(F.xxhash64("id").alias("url_hash"))
     bloom = build_bloom(df, "url_hash", expected=2000)
-    probed = df.withColumn("hit", maybe_contains(bloom, F.col("url_hash")))
+    probed = _probed(df, bloom)
     assert probed.where(~F.col("hit")).count() == 0  # zero false negatives
+
+
+def _hash_probes(rng, n):
+    """``n`` random int64 hashes plus the edge cases of the SQL probe's
+    arithmetic: sign bit, all-ones, zero high/low halves and zero cuckoo
+    fingerprints (bits 48-63 clear)."""
+    edges = np.array(
+        [0, 1, -1, -(2**63), 2**63 - 1, 2**32, 2**32 - 1, -(2**32), 2**48 - 1, 12345],
+        dtype=np.int64,
+    )
+    return np.concatenate([edges, rng.integers(-(2**63), 2**63 - 1, n, dtype=np.int64)])
+
+
+@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+@pytest.mark.parametrize("n_shards", [1, 5, 8])
+def test_jvm_probe_equals_numpy_twin(spark, kind, n_shards):
+    """The Spark SQL probe answers exactly what the numpy ``contains_hashes``
+    twin answers, bit for bit, over members, random non-members and the
+    arithmetic edge cases, and never misses a member."""
+    rng = np.random.default_rng(100 + n_shards)
+    members = _hash_probes(rng, 3000)
+    if kind == "bloom":
+        filt = BloomFilter.sized_for(len(members), 0.01, n_shards=n_shards)
+    else:
+        filt = CuckooFilter(capacity=2 * len(members), n_shards=n_shards)
+    filt.add_hashes(members)
+    probes = np.concatenate([members, rng.integers(-(2**63), 2**63 - 1, 20_000, dtype=np.int64)])
+    df = spark.createDataFrame(pd.DataFrame({"url_hash": probes})).repartition(4)
+    got = _probed(df, filt).toPandas()
+    want = filt.contains_hashes(got["url_hash"].to_numpy(dtype=np.int64))
+    assert np.array_equal(got["hit"].to_numpy(dtype=bool), want)
+    assert want[np.isin(got["url_hash"].to_numpy(), members)].all()
+    assert 0 < want.sum() < len(want)  # non-members do miss
 
 
 def test_anti_join_with_bloom_equals_exact(spark):
@@ -73,28 +114,35 @@ def test_anti_join_with_bloom_equals_exact(spark):
     assert len(exact) == 500
 
 
-def _python_eval_leaves(df):
-    """Leaf node names under each ArrowEvalPython node of ``df``'s
-    physical plan (before AQE wraps it)."""
+_PY_EVAL = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas")
 
-    def leaves(node):
-        kids = node.children()
-        if kids.size() == 0:
-            return [node.nodeName()]
-        return [x for i in range(kids.size()) for x in leaves(kids.apply(i))]
 
-    def walk(node):
-        out = [leaves(node)] if node.nodeName() == "ArrowEvalPython" else []
-        kids = node.children()
-        return out + [x for i in range(kids.size()) for x in walk(kids.apply(i))]
+def _plan_nodes_of(node):
+    """``node`` and every node below it."""
+    kids = node.children()
+    return [node] + [x for i in range(kids.size()) for x in _plan_nodes_of(kids.apply(i))]
 
-    return walk(df._jdf.queryExecution().sparkPlan())
+
+def _plan_nodes(df):
+    """Every node of ``df``'s physical plan (before AQE wraps it)."""
+    return _plan_nodes_of(df._jdf.queryExecution().sparkPlan())
+
+
+def _leaf_names(node):
+    return {n.nodeName() for n in _plan_nodes_of(node) if n.children().size() == 0}
+
+
+def _is_probe_join(node):
+    return node.nodeName() == "BroadcastNestedLoopJoin" and "__filter" in node.simpleString(100)
 
 
 def test_anti_join_never_probes_url_seen(spark):
     """The bloom is built from url_seen, so probing url_seen's own rows is
-    pure waste: every probe answers True. Only the candidates are probed
-    (once per union branch), and the result equals the exact anti-join."""
+    pure waste: every probe answers True. The JVM probe joins only the
+    candidates (once per union branch), the exact anti-join's candidate
+    input is probe-filtered under a broadcast and a sort-merge anti-join
+    alike, the filter words go no further than the probe joins, no Python
+    runs, and the result equals the exact anti-join."""
     from mcp_crawl4ai_rag_spark import local_ckpt
 
     cand = spark.range(0, 1000, 1, 4).select(
@@ -107,13 +155,106 @@ def test_anti_join_never_probes_url_seen(spark):
         F.xxhash64(F.concat(F.lit("u"), (F.col("id") * 3))).alias("url_hash"),
     ))
     bloom = build_bloom(seen, "url_hash", expected=600)
-    fresh = anti_join_seen(cand, seen, bloom)
-    probed = _python_eval_leaves(fresh)
-    assert len(probed) == 2
-    assert all(set(ls) == {"Range"} for ls in probed), probed
-    key = lambda df: sorted(r[0] for r in df.select("canonical_url").collect())
-    assert key(fresh) == key(anti_join_seen(cand, seen, None))
-    assert len(key(fresh)) == 1000 - 334
+    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        for thresh in (old_thresh, "-1"):
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
+            fresh = anti_join_seen(cand, seen, bloom)
+            nodes = _plan_nodes(fresh)
+            assert not [n for n in nodes if n.nodeName() in _PY_EVAL]
+            probes = [n for n in nodes if _is_probe_join(n)]
+            assert len(probes) == 2
+            assert all(_leaf_names(p) == {"Range", "LocalTableScan"} for p in probes)
+            # the words stop at the probe joins: rows that carry them on
+            # cost several times the probe's CPU
+            carriers = {"BroadcastNestedLoopJoin", "BroadcastExchange", "LocalTableScan"}
+            assert not [
+                n.nodeName() for n in nodes
+                if "__filter" in n.simpleString(100) and n.nodeName() not in carriers
+            ]
+            (anti,) = [n for n in nodes if "LeftAnti" in n.simpleString(100)]
+            left, right = anti.children().apply(0), anti.children().apply(1)
+            assert any(_is_probe_join(n) for n in _plan_nodes_of(left))
+            assert "__filter" not in right.toString()
+            key = lambda df: sorted(r[0] for r in df.select("canonical_url").collect())
+            assert key(fresh) == key(anti_join_seen(cand, seen, None))
+            assert len(key(fresh)) == 1000 - 334
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
+
+
+def test_probe_value_refuses_an_oversized_filter(spark, monkeypatch):
+    """A filter too large for one broadcast value fails when the anti-join
+    is built, with the sizes in the message, before any job runs."""
+    from mcp_crawl4ai_rag_spark.operators import urlseen as us
+
+    bloom = BloomFilter.sized_for(10_000, 0.01)
+    monkeypatch.setattr(us, "MAX_PROBE_BYTES", bloom.words().nbytes - 1)
+    cand = spark.range(0, 10).select(
+        F.col("id").cast("string").alias("canonical_url"), F.col("id").alias("url_hash")
+    )
+    with pytest.raises(ValueError, match="broadcast probe value"):
+        anti_join_seen(cand, cand, bloom)
+
+
+def test_dedup_and_pop_job_runs_no_python(spark, monkeypatch):
+    """The frontier epoch's bloom-prefiltered anti_join_seen ->
+    attach_budgets -> pop_per_host runs in the pop's one checkpoint job,
+    and that job's plan holds no Python evaluation: the fold is the only
+    Python-touching job of an epoch."""
+    import mcp_crawl4ai_rag_spark as pkg
+    from mcp_crawl4ai_rag_spark.operators.politeness import attach_budgets, pop_per_host
+
+    def urls(ids):
+        u = F.concat(F.lit("https://h"), (F.col("id") % 7), F.lit(".x/p/"), F.col("id"))
+        return ids.select(
+            u.alias("canonical_url"),
+            F.xxhash64(u).alias("url_hash"),
+            F.concat(F.lit("h"), (F.col("id") % 7), F.lit(".x")).alias("host"),
+            (F.col("id") % 3).cast("int").alias("depth"),
+            F.lit(0).alias("priority"),
+            F.col("id").alias("seq"),
+        )
+
+    frontier = urls(spark.range(0, 3000, 1, 8))
+    seen = urls(spark.range(0, 3000, 3, 8)).select("url_hash", "canonical_url")
+    bloom = build_bloom(seen, "url_hash", expected=1000)
+    checkpointed = []
+    real = pkg.local_ckpt
+
+    def spy(df, *a, **kw):
+        checkpointed.append(df)
+        return real(df, *a, **kw)
+
+    monkeypatch.setattr(pkg, "local_ckpt", spy)
+    fresh = anti_join_seen(frontier, seen, bloom)
+    popped, deferred = pop_per_host(attach_budgets(fresh, None, None, epoch_seconds=200.0), None)
+    (job,) = checkpointed
+    for df in (job, popped, deferred):
+        assert not [n.nodeName() for n in _plan_nodes(df) if n.nodeName() in _PY_EVAL]
+    assert any(_is_probe_join(n) for n in _plan_nodes(job))
+    assert popped.count() + deferred.count() == 2000
+
+
+def test_one_shard_fold_runs_one_wave(spark):
+    """A one-shard build folds in at most one task per slot: over an
+    8-partition input on the 4-slot session it runs 4 fold tasks (the
+    fold coalesced to 16, so it ran all 8), and the filter is unchanged."""
+    sc = spark.sparkContext
+    df = spark.range(0, 4000, 1, 8).select(F.xxhash64("id").alias("url_hash"))
+    group = "one-shard-fold"
+    sc.setJobGroup(group, "one-shard bloom fold")
+    try:
+        bloom = build_bloom(df, "url_hash", expected=4000)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    (job,) = st.getJobIdsForGroup(group)
+    tasks = [st.getStageInfo(s).numTasks for s in st.getJobInfo(job).stageIds]
+    assert sc.defaultParallelism == 4 and tasks == [4]
+    ref = BloomFilter.sized_for(4000)
+    ref.add_hashes(np.array([r[0] for r in df.collect()], dtype=np.int64))
+    assert np.array_equal(bloom.bits, ref.bits)
 
 
 def test_cuckoo_insert_contains_delete():
@@ -192,7 +333,7 @@ def test_sharded_build_probe_and_antijoin(spark):
     )
     sb = build_bloom_sharded(seen, "url_hash", n_shards=8, expected=500)
     assert sb.n_shards == 8
-    hits = seen.withColumn("hit", maybe_contains(sb, F.col("url_hash")))
+    hits = _probed(seen, sb)
     assert hits.where(~F.col("hit")).count() == 0  # zero false negatives
     exact = set(
         r[0] for r in anti_join_seen(cand, seen, None).select("canonical_url").collect()
@@ -310,6 +451,29 @@ def test_sharded_cuckoo_fpp_matches_one_shard(n_shards, ref_buckets):
     assert fpp_sharded <= 2 * fpp_one, (fpp_sharded, fpp_one)
 
 
+@pytest.mark.parametrize("n_shards", [8, 6])
+def test_sharded_bloom_fpp_matches_one_shard(n_shards):
+    """Sharding must not cost accuracy: a sharded bloom sized for the same
+    keys and target FPP stays within 2x of the one-shard filter's false-
+    positive rate. Within a shard every key shares ``pmod(h, S)``, so the
+    low hash bits (which feed the probe stride) are partly fixed there;
+    this guards the index derivation against that correlation."""
+    rng = np.random.default_rng(23)
+    xs = np.unique(rng.integers(-(2**63), 2**63 - 1, 100_000, dtype=np.int64))
+    probes = np.setdiff1d(
+        rng.integers(-(2**63), 2**63 - 1, 2_000_000, dtype=np.int64), xs
+    )
+    one = BloomFilter.sized_for(len(xs), 0.01)
+    sharded = BloomFilter.sized_for(len(xs), 0.01, n_shards=n_shards)
+    one.add_hashes(xs)
+    sharded.add_hashes(xs)
+    assert sharded.contains_hashes(xs).all()
+    fpp_one = one.contains_hashes(probes).mean()
+    fpp_sharded = sharded.contains_hashes(probes).mean()
+    assert fpp_one < 0.015
+    assert fpp_sharded <= 2 * fpp_one, (fpp_sharded, fpp_one)
+
+
 def test_sharded_cuckoo_distributed_build_and_antijoin(spark):
     from mcp_crawl4ai_rag_spark.operators.urlseen import build_cuckoo_sharded
 
@@ -324,9 +488,7 @@ def test_sharded_cuckoo_distributed_build_and_antijoin(spark):
     sc = build_cuckoo_sharded(seen, "url_hash", n_shards=8)
     assert isinstance(sc, CuckooFilter) and sc.n_shards == 8
     # zero false negatives through the distributed build + sharded probe
-    misses = seen.withColumn(
-        "hit", maybe_contains(sc, F.col("url_hash"))
-    ).where(~F.col("hit"))
+    misses = _probed(seen, sc).where(~F.col("hit"))
     assert misses.count() == 0
     exact = set(
         r[0] for r in anti_join_seen(cand, seen, None).select("canonical_url").collect()
@@ -453,7 +615,7 @@ def test_build_bloom_auto_shards_above_driver_budget(spark, monkeypatch):
     # ~1500-key bitset is ~1.8 kB → ceil(1.8k/32) ≈ 57 shards ≥ the floor of 8
     assert auto.n_shards >= 8
     assert len(auto.bits) == auto.n_shards * auto.bytes_per_shard
-    hits = seen.withColumn("hit", maybe_contains(auto, F.col("url_hash")))
+    hits = _probed(seen, auto)
     assert hits.where(~F.col("hit")).count() == 0  # zero false negatives
     exact = set(
         r[0] for r in anti_join_seen(cand, seen, None).select("canonical_url").collect()
@@ -494,7 +656,7 @@ def test_build_cuckoo_auto_shards_above_driver_budget(spark, monkeypatch):
     auto = us.build_cuckoo(seen, "url_hash")
     assert auto.n_shards >= 8
     assert auto.table.shape == (auto.n_shards * auto.n_buckets, 4)
-    hits = seen.withColumn("hit", maybe_contains(auto, F.col("url_hash")))
+    hits = _probed(seen, auto)
     assert hits.where(~F.col("hit")).count() == 0  # zero false negatives
     exact = set(
         r[0] for r in anti_join_seen(cand, seen, None).select("canonical_url").collect()

@@ -29,6 +29,35 @@ def formatted(df) -> str:
     return buf.getvalue()
 
 
+def _depth(line: str) -> int:
+    """Indent of a plan-tree line: where its node name starts."""
+    return len(line) - len(line.lstrip(" :|+-"))
+
+
+def subtrees(plan: str, name: str) -> list[list[str]]:
+    """The tree lines of each node of ``plan`` whose line contains
+    ``name``: the node's own line, then every line below it, each child's
+    subtree in order, until the tree returns to the node's depth."""
+    tree = plan.split("\n\n", 1)[0].splitlines()
+    out = []
+    for i, line in enumerate(tree):
+        if name in line:
+            j = i + 1
+            while j < len(tree) and _depth(tree[j]) > _depth(line):
+                j += 1
+            out.append(tree[i:j])
+    return out
+
+
+def first_child(node: list[str]) -> list[str]:
+    """The first child's lines of a ``subtrees`` entry (its left side)."""
+    if len(node) < 2:
+        return []
+    d = _depth(node[1])
+    end = next((k for k in range(2, len(node)) if _depth(node[k]) == d), len(node))
+    return node[1:end]
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
@@ -953,7 +982,8 @@ def main():
         [
             ("ExistingRDD", "popped reads the pop's checkpointed lane-ranked frame"),
             ("row_number", "phase-2 per-host pop window"),
-            ("!ArrowEvalPython", "the bloom probe ran once, in the pop's own job"),
+            ("!BroadcastNestedLoopJoin", "the bloom probe ran once, in the pop's own job"),
+            ("!ArrowEvalPython", "no Python probe"),
             # pagerank's own contrib-join/aggregate shape is audited in the
             # "PageRank round" section — its iterations sit behind a
             # localCheckpoint, so they are not part of this composed plan
@@ -961,9 +991,11 @@ def main():
     ))
 
     # frontier epoch: bloom-prefiltered anti_join_seen -> attach_budgets ->
-    # pop_per_host. The probe runs over the candidates only (never over
-    # url_seen, whose rows all probe True), and only inside the pop's one
-    # checkpoint job — neither popped nor deferred re-runs it.
+    # pop_per_host. The probe is a JVM join of the candidates against one
+    # broadcast filter row (never of url_seen, whose rows all probe True),
+    # the exact anti-join reads only probe-positive candidates, no Python
+    # runs, and all of it runs inside the pop's one checkpoint job —
+    # neither popped nor deferred re-runs it.
     from mcp_crawl4ai_rag_spark import local_ckpt
     from mcp_crawl4ai_rag_spark.operators.politeness import pop_per_host
     from mcp_crawl4ai_rag_spark.operators.urlseen import anti_join_seen, build_bloom
@@ -976,11 +1008,18 @@ def main():
     )
     aj_plan = formatted(ep_fresh)
     checks = [
-        ("ArrowEvalPython", "bloom prefilter is an Arrow-batched probe"),
+        ("BroadcastNestedLoopJoin", "bloom probe: candidates x one broadcast filter row"),
         ("LeftAnti", "maybe-seen rows take the exact anti-join"),
+        ("!ArrowEvalPython", "the probe is a JVM expression, no Python worker"),
+        ("!BatchEvalPython", "no Python UDF anywhere in the dedup"),
+        ("!MapInPandas", "no Python batch pass anywhere in the dedup"),
     ]
-    if _re.search(r"ArrowEvalPython \(\d+\)\n[ :|]*\+- Scan ExistingRDD", aj_plan):
+    probes = subtrees(aj_plan, "BroadcastNestedLoopJoin")
+    if any("Scan ExistingRDD" in line for node in probes for line in node):
         checks.append(("never", "PROBE OVER url_seen — its rows all probe True"))
+    for anti in subtrees(aj_plan, "LeftAnti"):
+        if not any("BroadcastNestedLoopJoin" in line for line in first_child(anti)):
+            checks.append(("never", "UNPROBED CANDIDATES ENTER THE EXACT ANTI-JOIN"))
     sections.append((
         "Bloom-prefiltered URL-seen anti-join (probe over the candidates only)",
         aj_plan,
@@ -994,7 +1033,7 @@ def main():
         formatted(ep_popped) + "\n" + formatted(ep_deferred),
         [
             ("ExistingRDD", "both sides read the pop's checkpointed lane-ranked frame"),
-            ("!ArrowEvalPython", "neither side re-runs the bloom probe"),
+            ("!BroadcastNestedLoopJoin", "neither side re-runs the bloom probe"),
             ("!LeftAnti", "neither side re-runs the anti-join"),
         ],
     ))
