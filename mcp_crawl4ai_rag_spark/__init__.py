@@ -8,7 +8,9 @@ pandas UDFs; there is no per-row Python in any hot path.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import Observation, SparkSession
+from pyspark.sql import functions as F
 
 __version__ = "0.1.0"
 
@@ -47,15 +49,9 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def _ser_ckpt_level():
-    from pyspark import StorageLevel
-
-    return StorageLevel.MEMORY_AND_DISK
-
-
-#: THE serialized checkpoint level — every module's ``_SER_LEVEL`` aliases
-#: this single definition, so a storage-level change is one edit.
-SER_CKPT_LEVEL = _ser_ckpt_level()
+#: THE serialized checkpoint level — :func:`local_ckpt` is the only
+#: caller, so a storage-level change is one edit.
+SER_CKPT_LEVEL = StorageLevel.MEMORY_AND_DISK
 
 
 def local_ckpt(df, eager: bool = True):
@@ -74,3 +70,14 @@ def local_ckpt(df, eager: bool = True):
     the few-row ones (backoff tables, centroids) don't care either way.
     """
     return df.localCheckpoint(eager=eager, storageLevel=SER_CKPT_LEVEL)
+
+
+def local_ckpt_observed(df, *aggs):
+    """:func:`local_ckpt` of ``df`` plus the named aggregates ``aggs``
+    (default: the row count as ``n``), returned as ``(checkpoint, row)``.
+
+    The aggregates are an ``Observation`` collected while the eager
+    checkpoint job runs, so the counts cost no job of their own."""
+    obs = Observation()
+    out = local_ckpt(df.observe(obs, *(aggs or (F.count(F.lit(1)).alias("n"),))))
+    return out, obs.get

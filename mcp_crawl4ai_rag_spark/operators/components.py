@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import SER_CKPT_LEVEL as _SER_LEVEL  # single engine-wide definition
+from .. import local_ckpt
 
 
 def connected_components(
@@ -77,7 +77,7 @@ def connected_components(
     )
     # reused by the propagate join every round; distinct also drops
     # duplicate pairs coming from multiple LSH bands
-    und = und.distinct().localCheckpoint(eager=True, storageLevel=_SER_LEVEL)
+    und = local_ckpt(und.distinct())
 
     endpoints = und.select(F.col("src").alias(id_col)).distinct()
     if vertices is not None:
@@ -86,9 +86,9 @@ def connected_components(
         )
     else:
         all_vertices = endpoints
-    labels = all_vertices.select(
-        F.col(id_col), F.col(id_col).alias("component_id")
-    ).localCheckpoint(eager=True, storageLevel=_SER_LEVEL)
+    labels = local_ckpt(
+        all_vertices.select(F.col(id_col), F.col(id_col).alias("component_id"))
+    )
 
     prev_sum = None
     for _ in range(max_rounds):
@@ -118,7 +118,7 @@ def connected_components(
                     "component_id"
                 ),
             )
-        labels = labels.localCheckpoint(eager=True, storageLevel=_SER_LEVEL)
+        labels = local_ckpt(labels)
         # coalesce: SUM over zero rows is NULL, which would never equal
         # itself round-to-round and spin an empty graph through max_rounds
         cur = labels.agg(

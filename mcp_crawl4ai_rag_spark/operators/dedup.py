@@ -30,7 +30,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import SER_CKPT_LEVEL as _SER_LEVEL  # single engine-wide definition
+from .. import local_ckpt
 
 from ..functions.hashing import md5int64
 from ..functions.text import fingerprint_expr, word_shingles_expr, words_expr
@@ -152,7 +152,7 @@ def minhash_lsh_pairs(
     # signatures are one compact row per doc — materialize them so the band
     # self-join below doesn't recompute the whole shingle+hash pipeline twice
     sigs = minhash_signatures(docs, text_col, id_col, num_perms, shingle_k)
-    sigs = sigs.localCheckpoint(eager=True, storageLevel=_SER_LEVEL)
+    sigs = local_ckpt(sigs)
     bk = lsh_band_keys(sigs, id_col, bands, rows_per_band)
 
     left = bk.select(
@@ -168,9 +168,11 @@ def minhash_lsh_pairs(
         .distinct()
     )
 
-    sets = docs.select(
-        F.col(id_col), word_shingles_expr(F.col(text_col), shingle_k).alias("sh")
-    ).localCheckpoint(eager=True, storageLevel=_SER_LEVEL)  # reused by both sides of the pair join
+    sets = local_ckpt(  # reused by both sides of the pair join
+        docs.select(
+            F.col(id_col), word_shingles_expr(F.col(text_col), shingle_k).alias("sh")
+        )
+    )
     out = (
         cand.join(sets.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
         .join(sets.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
@@ -257,8 +259,6 @@ def minhash_pairs_incremental(
     # full-corpus text kernels (a semi-join the optimizer cannot derive
     # from the inner join below on its own). cand is read twice (id
     # pruning + the verify join) — pin it or the band join re-runs
-    from .. import local_ckpt
-
     cand = local_ckpt(cand)
     cand_ids = cand.select(F.col("id_a").alias(id_col)).distinct()
     old_sets = (
@@ -341,8 +341,6 @@ def repeated_spans(
     # consumed twice (count aggregate + semi-join probe) — without the
     # pin, the dominant cost (one md5 per k-token window over the whole
     # corpus) executes twice
-    from .. import local_ckpt
-
     windows = local_ckpt(windows)
     dup_h = (
         windows.groupBy("wh")
@@ -390,8 +388,6 @@ def remove_spans(
     documents without spans pass through byte-identical. Per-doc work is an
     equi-join on the doc id plus a range predicate — span tables are tiny
     relative to the corpus."""
-    from .. import local_ckpt
-
     toks = local_ckpt(
         docs.select(
             F.col(id_col),
@@ -482,7 +478,7 @@ def simhash_pairs(
     """
     # one compact row per doc; materialize so the chunk self-join below
     # doesn't recompute the token+hash aggregation on both sides
-    sims = simhash_docs(docs, text_col, id_col, bits).localCheckpoint(eager=True, storageLevel=_SER_LEVEL)
+    sims = local_ckpt(simhash_docs(docs, text_col, id_col, bits))
     return hamming_pairs(
         sims, id_col, "simhash", bits=bits, n_chunks=n_chunks, max_hamming=max_hamming
     )
@@ -839,8 +835,6 @@ def neardup_recall(
     recall = n_found / n_true; sample docs with zero true neighbors are
     excluded (no defined recall).
     """
-    from .. import local_ckpt
-
     # both sides are consumed twice below (n_true agg + the found∩truth
     # semi-join; the two direction-normalized selects) — pin them or the
     # shingle equi-join and the candidate verify join each run twice

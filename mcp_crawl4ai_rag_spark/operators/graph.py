@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import SER_CKPT_LEVEL as _SER_LEVEL  # single engine-wide definition
+from .. import local_ckpt
 
 PR_SCALE = 1_000_000_000  # fixed-point: rank 1.0 == 10^9
 
@@ -49,9 +49,9 @@ def pagerank(
     damping 0.85, uniform start at ``scale``. Edge multiplicity counts
     (parallel edges contribute twice)."""
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    e = e.localCheckpoint(eager=True, storageLevel=_SER_LEVEL)  # reused every round
+    e = local_ckpt(e)  # reused every round
     deg = e.groupBy("src").agg(F.count("*").alias("__deg"))
-    e_deg = e.join(deg, "src").localCheckpoint(eager=True, storageLevel=_SER_LEVEL)
+    e_deg = local_ckpt(e.join(deg, "src"))
 
     v = vertices.select(F.col(id_col).alias("id"))
     pr = v.select("id", F.lit(scale).cast("long").alias("pr"))
@@ -71,7 +71,7 @@ def pagerank(
         # 100 — algebraically identical (85s = 8500q + 85r) but free of the
         # 85× intermediate, so a hub vertex whose summed contributions
         # approach 2^63 cannot overflow int64.
-        pr = (
+        pr = local_ckpt(
             v.join(contribs, "id", "left")
             .select(
                 "id",
@@ -83,6 +83,5 @@ def pagerank(
                     )
                 ).cast("long").alias("pr"),
             )
-            .localCheckpoint(eager=True, storageLevel=_SER_LEVEL)
         )
     return pr

@@ -25,7 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import SER_CKPT_LEVEL as _SER_LEVEL  # single engine-wide definition
+from .. import local_ckpt
 
 
 def distributed_cumsum(
@@ -50,7 +50,7 @@ def distributed_cumsum(
     ranged = ranged.sortWithinPartitions(*cols).withColumn(
         "__pid", F.spark_partition_id()
     )
-    ranged = ranged.localCheckpoint(eager=True, storageLevel=_SER_LEVEL)  # sums + final pass share it
+    ranged = local_ckpt(ranged)  # sums + final pass share it
 
     sums = {
         r["__pid"]: r["s"]
@@ -163,10 +163,9 @@ def dfs_preorder(
     assigned via distributed_rank (never a single-task window).
     """
     limit = max_iters if max_iters is not None else 4 * max_depth
-    seed_claims = (
+    seed_claims = local_ckpt(
         seeds.select(F.col("id").cast("long").alias("id"), _seg(F.col("pos")).alias("key"))
         .groupBy("id").agg(F.min("key").alias("key"))
-        .localCheckpoint(eager=True, storageLevel=_SER_LEVEL)
     )
     e = edges.select(
         F.col("src").cast("long").alias("src"),
@@ -191,11 +190,10 @@ def dfs_preorder(
                 F.concat(F.col("key"), F.lit("/"), F.col("pseg")).alias("key"),
             )
         )
-        new_keys = (
+        new_keys = local_ckpt(
             seed_claims.unionByName(cand)
             .groupBy("id")
             .agg(F.min("key").alias("key"))
-            .localCheckpoint(eager=True, storageLevel=_SER_LEVEL)
         )
         # fixed point ⇔ the claim MAPS are identical — both directions
         # (dropped phantom nodes count as changes too)

@@ -322,7 +322,7 @@ def robots_denied_rfc_expr():
     LONGEST one governs; an Allow/Disallow tie resolves to Allow; no
     matching rule means allowed. The deny-only ``robots_denied_expr``
     stays the engine default (strictly more conservative); this variant is
-    selected automatically when the robots table carries an
+    selected by :func:`robots_denied_for` when the robots table carries an
     ``allow_prefixes`` column — e.g. from sources/robots.parse_robots_rules."""
     return _longest_match_len("disallow_prefixes") > _longest_match_len(
         "allow_prefixes"
@@ -361,7 +361,7 @@ def robots_denied_wildcard_expr(target: "F.Column | None" = None):
     sources/robots.compile_rule_patterns; strictly subsumes
     robots_denied_rfc_expr on wildcard-free tables (a prefix rule
     compiles to its anchored-prefix regex with identical specificity).
-    The crawl engine auto-selects this gate when its robots table
+    :func:`robots_denied_for` selects this gate when the robots table
     carries ``disallow_pats``.
 
     ``target`` is the RFC match target: the path INCLUDING the query
@@ -376,6 +376,22 @@ def robots_denied_wildcard_expr(target: "F.Column | None" = None):
     return _longest_pattern_match_len(
         "disallow_pats", target
     ) > _longest_pattern_match_len("allow_pats", target)
+
+
+def robots_denied_for(robots: DataFrame, target: "F.Column | None" = None):
+    """The deny predicate matching the shape of the ``robots`` table:
+    wildcard rules govern when it carries ``disallow_pats``
+    (sources/robots.compile_rule_patterns); else RFC 9309 longest match
+    when it carries Allow rules (``allow_prefixes``,
+    sources/robots.parse_robots_rules); else the deny-only prefix gate
+    (strictly more conservative). ``target`` is the wildcard gate's match
+    target (:func:`robots_denied_wildcard_expr`); the prefix gates match
+    ``path``."""
+    if "disallow_pats" in robots.columns:
+        return robots_denied_wildcard_expr(target)
+    if "allow_prefixes" in robots.columns:
+        return robots_denied_rfc_expr()
+    return robots_denied_expr()
 
 
 def py_robots_denied_wildcard(

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import SER_CKPT_LEVEL as _SER_LEVEL  # single engine-wide definition
+from .. import local_ckpt
 
 from ..functions.hashing import py_md5int64
 from ..functions.vectors import cosine_expr, vector_lit
@@ -422,7 +422,7 @@ def train_centroids(
     h = md5int64(
         F.concat(F.lit(KM_SAMPLE_SALT), F.col(id_col).cast("string"))
     )
-    sample = (
+    sample = local_ckpt(
         embs.select(
             F.col(id_col).alias("__id"),
             F.col(vec_col).cast("array<double>").alias("__v"),
@@ -430,7 +430,6 @@ def train_centroids(
         )
         .orderBy("__h", "__id")
         .limit(sample_n)
-        .localCheckpoint(eager=True, storageLevel=_SER_LEVEL)
     )
     seed_rows = sorted(sample.collect(), key=lambda r: (r["__h"], r["__id"]))[:k]
     cents: list[tuple[int, list[float]]] = [

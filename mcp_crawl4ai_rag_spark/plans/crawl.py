@@ -2,14 +2,23 @@
 
 Re-expresses the reference's ``crawl_recursive_internal_links``
 (src/crawl4ai_mcp.py:955-1067) as a driver-side epoch loop over DataFrame
-operations (the Pregel pattern):
+operations (the Pregel pattern), one private stage method each:
 
-    seeds → [epoch: binary-filter → bloom+anti-join URL-seen (J1)
-             → politeness pop (J4, salted) → mark visited AT SCHEDULE TIME
-             → robots gate (D4) → fetch-join corpus (S1/S2)
-             → success filter (F11) → link explode + resolve (F7)
-             → boundary filters (F1/F4/F5/F6) → next-level anti-join (J2)
-             → seq assignment → union frontier (U1) → snapshot (S7)] × depth
+    seeds → [epoch: membership — bloom+anti-join URL-seen (J1)
+             → schedule — budgeted pop (J4), max_pages cut, per-key
+                          counters; mark visited AT SCHEDULE TIME
+             → gate — robots (D4), redirect hops
+             → fetch — fetch-join corpus (S1/S2), success filter (F11),
+                       backoff
+             → expand — link explode + resolve (F7), boundary filters
+                        (F1/F4/F5/F6), first discoverer, next-level
+                        anti-join (J2), seq assignment
+             → next frontier — leftovers ∪ discoveries (U1), materialized
+             → commit — lineage + snapshot (S7)] × epochs
+
+Each mode variant is chosen once per engine — the pop by frontier
+storage, the robots gate by the robots table's shape, the budget key by
+the politeness grain — not re-tested inside the loop.
 
 Semantics faithfully reproduced from the reference:
 - URLs are marked visited when *scheduled*, not on completion
@@ -46,8 +55,7 @@ from urllib.parse import urlparse
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .. import SER_CKPT_LEVEL as _SER_LEVEL  # single engine-wide definition
-
+from .. import local_ckpt, local_ckpt_observed
 from ..config import BLOOM_MIN_SEEN
 from ..functions.urls import (
     canonical_url,
@@ -67,9 +75,7 @@ from ..operators.politeness import (
     attach_budgets,
     pop_per_host,
     pop_per_host_threshold,
-    robots_denied_expr,
-    robots_denied_rfc_expr,
-    robots_denied_wildcard_expr,
+    robots_denied_for,
     update_backoff,
 )
 from ..operators.urlseen import anti_join_seen, build_bloom
@@ -100,6 +106,45 @@ class CrawlRunResult:
     frontier_remaining: DataFrame
     epochs_run: int = 0
     stats: dict = field(default_factory=dict)
+
+
+@dataclass(frozen=True)
+class _RunSpec:
+    """A run's options: what run() takes and resume() reads back from the
+    snapshot's state.json."""
+
+    max_depth: int
+    politeness: bool
+    prefix: str | None
+    max_epochs: int | None
+    max_pages: int | None
+    max_pages_per_host: int | None
+
+    @property
+    def limit(self) -> int:
+        """The epoch cap: max_epochs, else one epoch per depth level (four
+        under politeness, where draining a level takes several)."""
+        if self.max_epochs is not None:
+            return self.max_epochs
+        return 4 * self.max_depth if self.politeness else self.max_depth
+
+
+def _count_fold(counter: DataFrame | None, rows: DataFrame, key: str) -> DataFrame:
+    """``counter`` (key, n) plus the per-``key`` row counts of ``rows``,
+    full-joined and checkpointed: the counter stays a |keys|-row table
+    that is never re-aggregated from url_seen. With no counter it is the
+    lazy counts themselves — the seed."""
+    counts = rows.groupBy(key).agg(F.count(F.lit(1)).alias("__d"))
+    if counter is None:
+        return counts.withColumnRenamed("__d", "n")
+    return local_ckpt(
+        counter.join(counts, key, "full").select(
+            key,
+            (
+                F.coalesce(F.col("n"), F.lit(0)) + F.coalesce(F.col("__d"), F.lit(0))
+            ).alias("n"),
+        )
+    )
 
 
 def _union_all(spark: SparkSession, parts: list[DataFrame], schema: str) -> DataFrame:
@@ -135,8 +180,14 @@ class CrawlEngine:
     politeness_grain : "host" or "domain" (registrable domain) budgets.
 
     The physical plan is the engine's own choice: the URL-seen anti-join is
-    bloom-prefiltered once url_seen reaches ``BLOOM_MIN_SEEN`` rows, and
-    the pop follows ``frontier_store_dir``.
+    bloom-prefiltered once url_seen reaches ``BLOOM_MIN_SEEN`` rows, the
+    pop and the frontier's materialization follow ``frontier_store_dir``,
+    and the robots gate follows the robots table's columns.
+
+    ``run()`` and ``resume()`` each build the initial epoch state and hand
+    it to one loop (``_crawl``) whose stages — ``_membership``,
+    ``_schedule``, ``_gate``, ``_fetch``, ``_expand``, ``_next_frontier``,
+    ``_commit`` — run in that order.
     """
 
     def __init__(
@@ -240,24 +291,42 @@ class CrawlEngine:
         # dual read and this epoch's next-frontier build share one run of
         # the probe, anti-join and lane exchange.
         self.frontier_store_dir = frontier_store_dir
+        self._pop = pop_per_host if frontier_store_dir is None else pop_per_host_threshold
         # Politeness GRAIN: "host" throttles per hostname (the reference's
         # RateLimiter grain); "domain" throttles per registrable domain
         # (eTLD+1 via functions/urls.registrable_domain) — the grain real
         # crawlers run at, because 'a.example.com' and 'b.example.com' are
         # one server farm and per-hostname budgets let a crawler hammer a
-        # domain N-subdomains fast. Implementation: the host column is
-        # MAPPED to its domain around the budget join + pop (and the
-        # backoff statuses fold at the same grain), then restored — robots
-        # gating, fetch, lineage, and url_seen stay hostname-grain. The
-        # max_pages_per_host quota follows the same grain (per DOMAIN
-        # under "domain"): counter fold, resume rebuild, and the clamp
-        # join all key identically, so the quota can never silently
-        # no-op on a key mismatch.
+        # domain N-subdomains fast. ``_grain`` maps a host column to its
+        # key (None: the hostname itself); _at_grain applies it. Budgets,
+        # the pop, the max_pages_per_host counter and the backoff statuses
+        # all key by it, so the quota can never silently no-op on a key
+        # mismatch. Robots gating, fetch, lineage and url_seen stay
+        # hostname-grain.
         if politeness_grain not in ("host", "domain"):
             raise ValueError(
                 f"politeness_grain must be host|domain, got {politeness_grain!r}"
             )
         self.politeness_grain = politeness_grain
+        self._grain = registrable_domain if politeness_grain == "domain" else None
+        # The budget dim is the robots crawl_delay at the grain: a domain
+        # paces at the slowest of its hosts' Crawl-delays. One partition
+        # lets the fold skip its exchange, so it adds no job per epoch.
+        self._budget_robots = robots
+        if robots is not None and self._grain is not None:
+            self._budget_robots = (
+                robots.coalesce(1)
+                .groupBy(self._grain(F.col("host")).alias("host"))
+                .agg(F.max("crawl_delay").alias("crawl_delay"))
+            )
+        # The robots gate follows the table's shape; the wildcard gate's
+        # RFC match target is path + query (a path-only match can never
+        # deny '/*?sessionid=*'-style rules).
+        self._robots_denied = (
+            robots_denied_for(robots, url_path_query(F.col("canonical_url")))
+            if robots is not None
+            else None
+        )
         if frontier_store_dir is not None:
             import hashlib
 
@@ -340,7 +409,7 @@ class CrawlEngine:
         # found is batch-bounded (≤ popped rows, ≪ corpus): checkpoint it so
         # the corpus is scanned ONCE per epoch — without this, the not-found
         # recovery below re-derives `found` and re-scans the corpus.
-        found = found.localCheckpoint(eager=True, storageLevel=_SER_LEVEL)
+        found = local_ckpt(found)
         missing = batch.join(
             F.broadcast(found.select("canonical_url")), "canonical_url", "left_anti"
         ).select(
@@ -378,101 +447,42 @@ class CrawlEngine:
         return df
 
     def _redirect_targets(self, red_src: DataFrame, prefix: str | None) -> DataFrame:
-        """Frontier rows for the redirect targets of this batch
+        """Discovery candidates for the redirect targets of this batch
         (``red_src``: the batch ⋈ redirects rows, carrying to_url +
-        depth/priority/seq), shaped like ``_expand`` output: SAME depth,
-        inherited priority, ordered before the source page's links
+        depth/priority/seq), shaped like out-link candidates: SAME depth,
+        the source's priority, ordered before the source page's links
         (__disc_pos -1)."""
         rt = red_src.select(
             canonical_url(F.col("to_url")).alias("next_url"),
-            F.col("depth").alias("parent_depth"),
-            F.col("priority").alias("parent_priority"),
-            F.col("seq").alias("parent_seq"),
-        )
-        rt = self._gate_next_urls(rt, prefix)
-        # best-first consistency: a scored engine scores the TARGET like
-        # any discovered URL (_expand's rule); otherwise inherit the source
-        prio = (
-            self.url_scorer(F.col("next_url")).cast("int")
-            if self.url_scorer is not None
-            else F.col("parent_priority").cast("int")
-        )
-        return rt.select(
-            F.col("next_url").alias("canonical_url"),
-            url_hash(F.col("next_url")).alias("url_hash"),
-            url_host(F.col("next_url")).alias("host"),
-            url_path(F.col("next_url")).alias("path"),
-            F.col("parent_depth").cast("int").alias("depth"),
-            prio.alias("priority"),
-            F.col("parent_seq").alias("__disc_seq"),
+            "depth",
+            "priority",
+            F.col("seq").alias("__disc_seq"),
             F.lit(-1).alias("__disc_pos"),
         )
+        return self._gate_next_urls(rt, prefix)
 
-    @staticmethod
-    def _first_discoverer(discovered: DataFrame) -> DataFrame:
-        """Collapse duplicate discoveries of one URL (link ∪ redirect) to
-        the min-(__disc_seq, __disc_pos) discoverer — the same rule
-        _expand applies among links."""
-        return discovered.groupBy("canonical_url").agg(
-            F.min(
-                F.struct(
-                    "__disc_seq", "__disc_pos", "depth", "priority",
-                    "url_hash", "host", "path",
-                )
-            ).alias("k")
-        ).select(
-            "canonical_url",
-            F.col("k.url_hash").alias("url_hash"),
-            F.col("k.host").alias("host"),
-            F.col("k.path").alias("path"),
-            F.col("k.depth").alias("depth"),
-            F.col("k.priority").alias("priority"),
-            F.col("k.__disc_seq").alias("__disc_seq"),
-            F.col("k.__disc_pos").alias("__disc_pos"),
-        )
-
-    def _expand(self, fetched_ok: DataFrame, prefix: str | None) -> DataFrame:
-        """Discovered-link expansion with all reference filters applied
-        (F1 binary, F4 prefix, F5 same-domain, F6 defrag, F7 resolve,
-        F8 shape)."""
-        links = fetched_ok.select(
-            F.col("canonical_url").alias("base_url"),
-            F.col("depth").alias("parent_depth"),
-            F.col("priority").alias("parent_priority"),
-            F.col("seq").alias("parent_seq"),
-            F.posexplode("out_links").alias("link_pos", "href"),
-        )
-        resolved = links.withColumn(
-            "next_url", canonical_url(resolve_href(F.col("base_url"), F.col("href")))
-        )
-        resolved = self._gate_next_urls(resolved, prefix)
-
-        # First-discoverer dedup: min (parent_seq, link_pos) per URL; depth/
-        # priority inherited from that discoverer (deterministic).
-        picked = resolved.groupBy("next_url").agg(
-            F.min(
-                F.struct(
-                    F.col("parent_seq"),
-                    F.col("link_pos"),
-                    F.col("parent_depth"),
-                    F.col("parent_priority"),
-                )
-            ).alias("k")
+    def _first_discoverer(self, candidates: DataFrame) -> DataFrame:
+        """One frontier row per discovered URL (link or redirect target),
+        from its min-(__disc_seq, __disc_pos) discoverer: depth and
+        priority are inherited from it, unless ``url_scorer`` scores the
+        URL (best-first: a redirect target is scored like any link)."""
+        picked = candidates.groupBy("next_url").agg(
+            F.min(F.struct("__disc_seq", "__disc_pos", "depth", "priority")).alias("k")
         )
         prio = (
-            self.url_scorer(F.col("next_url")).cast("int")
+            self.url_scorer(F.col("next_url"))
             if self.url_scorer is not None
-            else F.col("k.parent_priority").cast("int")
+            else F.col("k.priority")
         )
         return picked.select(
             F.col("next_url").alias("canonical_url"),
             url_hash(F.col("next_url")).alias("url_hash"),
             url_host(F.col("next_url")).alias("host"),
             url_path(F.col("next_url")).alias("path"),
-            (F.col("k.parent_depth") + 1).cast("int").alias("depth"),
-            prio.alias("priority"),
-            F.col("k.parent_seq").alias("__disc_seq"),
-            F.col("k.link_pos").alias("__disc_pos"),
+            F.col("k.depth").cast("int").alias("depth"),
+            prio.cast("int").alias("priority"),
+            F.col("k.__disc_seq").alias("__disc_seq"),
+            F.col("k.__disc_pos").alias("__disc_pos"),
         )
 
     # Above this many discovered rows the global row_number window (a
@@ -511,7 +521,7 @@ class CrawlEngine:
             .select(*_FRONTIER_COLS)
         )
 
-    # -- main loop ---------------------------------------------------------
+    # -- the epoch loop ----------------------------------------------------
 
     def run(
         self,
@@ -523,8 +533,6 @@ class CrawlEngine:
         max_epochs: int | None = None,
         max_pages: int | None = None,
         max_pages_per_host: int | None = None,
-        start_epoch: int = 0,
-        _resume_state: tuple | None = None,
     ) -> CrawlRunResult:
         """Crawl depth levels 0..max_depth-1.
 
@@ -550,464 +558,18 @@ class CrawlEngine:
         exhausted and their overflow stays in the frontier as deferrals.
         The per-host scheduled counter is a |hosts|-row table maintained
         incrementally from each popped batch (never a re-aggregation of
-        the full url_seen) and broadcast onto the frontier; on resume it
-        is rebuilt once from the checkpointed url_seen. A quota'd epoch
-        that pops nothing ends the run (the frontier holds only
+        the full url_seen) and broadcast onto the frontier. A quota'd
+        epoch that pops nothing ends the run (the frontier holds only
         quota-blocked hosts — no future epoch can progress).
         """
-        spark = self.spark
-        limit = max_epochs if max_epochs is not None else (max_depth if not politeness else 4 * max_depth)
-
-        # Action economy: every .count()/.isEmpty() is a full Spark job; at a
-        # politeness-bounded epoch the data is tiny and job overhead IS the
-        # epoch cost. Counts that are derivable are tracked in Python:
-        #   seen_count     += n_popped            (url_seen grows by popped)
-        #   frontier_count  = n_disc (+deferred)  (politeness-off: exact)
-        # so an epoch runs 4-6 jobs instead of ~14.
-        if _resume_state is not None:
-            frontier, url_seen, seq_offset, backoff = _resume_state
-            seen_count = url_seen.count()
-            frontier_count = frontier.count()
-        else:
-            frontier = self._seed_frontier(seeds)
-            url_seen = spark.createDataFrame([], _URL_SEEN_SCHEMA)
-            row = frontier.agg(
-                F.max("seq").alias("mx"), F.count("*").alias("n")
-            ).collect()[0]
-            seq_offset = (row["mx"] or 0) + 1
-            frontier_count = row["n"]
-            seen_count = 0
-            backoff = None
-        if self.frontier_store_dir is not None:
-            # stored mode: the frontier popped in epoch E lives in table
-            # ..._ep{E}; the initial (seed or resumed) frontier is stored
-            # under the first epoch it will be popped in
-            frontier = self._store_frontier(start_epoch, frontier)
-
-        fetched_parts: list[DataFrame] = []
-        lineage_parts: list[DataFrame] = []
-        observed_fetch: dict[int, dict[str, int]] = {}
-        epochs_run = start_epoch
-
-        host_counts = None  # (host, scheduled) — only when quota'd
-        # quota grain matches the politeness grain: under "domain" the
-        # counter keys by registrable domain (max_pages_per_host reads as
-        # max pages per DOMAIN), so the counter always joins the same key
-        # the pop rows carry
-        _quota_key = (
-            (lambda c: registrable_domain(c))
-            if self.politeness_grain == "domain"
-            else (lambda c: c)
+        frontier = self._seed_frontier(seeds)
+        row = frontier.agg(F.max("seq").alias("mx"), F.count("*").alias("n")).collect()[0]
+        spec = _RunSpec(
+            max_depth, politeness, prefix, max_epochs, max_pages, max_pages_per_host
         )
-        if max_pages_per_host is not None:
-            if _resume_state is not None:
-                host_counts = url_seen.groupBy(
-                    _quota_key(F.col("host")).alias("host")
-                ).agg(
-                    F.count(F.lit(1)).alias("scheduled")
-                ).localCheckpoint(eager=True, storageLevel=_SER_LEVEL)
-            else:
-                host_counts = spark.createDataFrame(
-                    [], "host string, scheduled long"
-                )
-        tpl_counts = None  # (template, n) — only when template-guarded
-        if self.template_guard_cap is not None:
-            if _resume_state is not None:
-                tpl_counts = url_seen.groupBy(
-                    url_template(F.col("canonical_url")).alias("template")
-                ).agg(F.count(F.lit(1)).alias("n")).localCheckpoint(
-                    eager=True, storageLevel=_SER_LEVEL
-                )
-            else:
-                tpl_counts = spark.createDataFrame([], "template string, n long")
-        prev_popped = None  # quota no-progress detection
-
-        for epoch in range(start_epoch, limit):
-            if frontier_count == 0:
-                break  # reference early exit :1006-1008
-            if max_pages is not None and seen_count >= max_pages:
-                break  # page budget exhausted (crawl4ai max_pages)
-            if max_pages_per_host is not None and prev_popped == 0:
-                break  # every frontier host is quota-blocked — no progress
-
-            # J1: visited membership — bloom prefilter + exact anti-join.
-            # The bloom only pays once the seen side is large (BLOOM_MIN_SEEN);
-            # below that the exact anti-join alone is cheaper.
-            bloom = (
-                build_bloom(url_seen, "url_hash", expected=max(seen_count, 1))
-                if seen_count >= BLOOM_MIN_SEEN
-                else None
-            )
-            cand_count = frontier_count
-            new_urls = anti_join_seen(frontier, url_seen, bloom)
-
-            # J4: politeness pop — schedule-time budget per host. Budgets
-            # attach per-row via broadcast dims (attach_budgets): the old
-            # distinct-hosts path shuffled the whole frontier per epoch.
-            if politeness or max_pages_per_host is not None:
-                # eTLD+1 grain: budgets join + pop partition on the
-                # registrable domain; original hostname parked in a side
-                # column and restored after the pop (robots/fetch/lineage
-                # never see the mapped value). The grain governs the
-                # max_pages_per_host quota too (counter fold + resume
-                # rebuild below use the same key) — a hostname-keyed
-                # counter joined onto domain-keyed rows would silently
-                # never clamp.
-                domain_grain = self.politeness_grain == "domain"
-                if domain_grain:
-                    new_urls = new_urls.withColumn(
-                        "__host_hostgrain", F.col("host")
-                    ).withColumn("host", registrable_domain(F.col("host")))
-                if politeness:
-                    with_b = attach_budgets(
-                        new_urls,
-                        self.robots,
-                        backoff,
-                        **({"epoch_seconds": self.epoch_seconds} if self.epoch_seconds else {}),
-                    )
-                else:
-                    # quota-only mode: unlimited epoch budget, quota clamps
-                    with_b = new_urls.withColumn(
-                        "budget", F.lit(2**31 - 1).cast("int")
-                    )
-                if max_pages_per_host is not None:
-                    rem = F.greatest(
-                        F.lit(0),
-                        F.lit(int(max_pages_per_host))
-                        - F.coalesce(F.col("scheduled"), F.lit(0)),
-                    )
-                    with_b = (
-                        with_b.join(F.broadcast(host_counts), "host", "left")
-                        .withColumn(
-                            "budget",
-                            F.least(F.col("budget").cast("long"), rem).cast("int"),
-                        )
-                        .drop("scheduled")
-                    )
-                # The pop follows storage (see __init__): a stored frontier
-                # is a bucketed table scan, so the threshold pop's dual read
-                # is two column-pruned scans and no row is shuffled; an
-                # in-memory frontier takes the two-phase pop.
-                if self.frontier_store_dir is not None:
-                    popped, deferred = pop_per_host_threshold(with_b, None)
-                else:
-                    popped, deferred = pop_per_host(with_b, None)
-                if domain_grain:
-                    popped = popped.withColumn(
-                        "host", F.col("__host_hostgrain")
-                    ).drop("__host_hostgrain")
-                    deferred = deferred.withColumn(
-                        "host", F.col("__host_hostgrain")
-                    ).drop("__host_hostgrain")
-            else:
-                popped, deferred = new_urls, new_urls.limit(0)
-            # count rides the checkpoint materialization (no separate job)
-            obs_pop = Observation(f"pop_epoch_{epoch}")
-            popped = popped.observe(
-                obs_pop, F.count(F.lit(1)).alias("n")
-            ).localCheckpoint(eager=True, storageLevel=_SER_LEVEL)
-            n_popped = int(obs_pop.get["n"])
-
-            # max_pages cap: truncate the final batch to the remaining
-            # budget in crawl order; squeezed-out rows go back to the
-            # frontier as deferrals. The limit is ≤ max_pages rows, so the
-            # ordered take never global-sorts the frontier.
-            cap_leftover = None
-            n_cap_deferred = 0
-            if max_pages is not None and seen_count + n_popped > max_pages:
-                remaining = max_pages - seen_count
-                taken = (
-                    popped.orderBy("depth", "priority", "seq")
-                    .limit(remaining)
-                    .localCheckpoint(eager=True, storageLevel=_SER_LEVEL)
-                )
-                cap_leftover = popped.join(
-                    taken.select("canonical_url"), "canonical_url", "left_anti"
-                ).select(*_FRONTIER_COLS)
-                n_cap_deferred = n_popped - remaining
-                popped, n_popped = taken, remaining
-            seen_count += n_popped
-            prev_popped = n_popped
-
-            # host-quota accounting: fold this batch's per-host counts into
-            # the |hosts|-row counter (incremental — never re-aggregate the
-            # full url_seen)
-            if max_pages_per_host is not None and n_popped:
-                delta = popped.groupBy(
-                    _quota_key(F.col("host")).alias("host")
-                ).agg(
-                    F.count(F.lit(1)).alias("__d")
-                )
-                host_counts = (
-                    host_counts.join(delta, "host", "full")
-                    .select(
-                        "host",
-                        (
-                            F.coalesce(F.col("scheduled"), F.lit(0))
-                            + F.coalesce(F.col("__d"), F.lit(0))
-                        ).alias("scheduled"),
-                    )
-                    .localCheckpoint(eager=True, storageLevel=_SER_LEVEL)
-                )
-
-            # trap-family accounting: fold this batch's per-family counts
-            # into the |families|-row counter (incremental, like
-            # host_counts)
-            if self.template_guard_cap is not None and n_popped:
-                tdelta = popped.groupBy(
-                    url_template(F.col("canonical_url")).alias("template")
-                ).agg(F.count(F.lit(1)).alias("__d"))
-                tpl_counts = (
-                    tpl_counts.join(tdelta, "template", "full")
-                    .select(
-                        "template",
-                        (
-                            F.coalesce(F.col("n"), F.lit(0))
-                            + F.coalesce(F.col("__d"), F.lit(0))
-                        ).alias("n"),
-                    )
-                    .localCheckpoint(eager=True, storageLevel=_SER_LEVEL)
-                )
-
-            # mark visited at SCHEDULE time (reference :1000-1004)
-            url_seen = url_seen.unionByName(
-                popped.select(
-                    "url_hash", "canonical_url", "host", "depth", "seq",
-                    F.lit(epoch).alias("epoch_seen"),
-                )
-            )
-
-            # D4: robots gate (denied URLs are consumed but not fetched)
-            if self.robots is not None:
-                gated = popped.join(F.broadcast(self.robots), "host", "left")
-                # wildcard rules ('*'/'$', compile_rule_patterns) govern
-                # when present; else RFC 9309 longest-match precedence iff
-                # the robots table carries Allow rules (parse_robots_rules);
-                # deny-only prefix gate (strictly more conservative)
-                # otherwise
-                if "disallow_pats" in self.robots.columns:
-                    # RFC match target = path + query (a path-only match
-                    # can never deny '/*?sessionid=*'-style rules)
-                    deny = robots_denied_wildcard_expr(
-                        url_path_query(F.col("canonical_url"))
-                    )
-                elif "allow_prefixes" in self.robots.columns:
-                    deny = robots_denied_rfc_expr()
-                else:
-                    deny = robots_denied_expr()
-                denied = gated.where(deny).select(*_FRONTIER_COLS)
-                allowed = gated.where(~deny).select(*_FRONTIER_COLS)
-            else:
-                denied = popped.limit(0)
-                allowed = popped
-
-            # 3xx hop: redirect sources are consumed without a fetch; their
-            # targets re-enter the frontier at the same depth (see __init__
-            # docs). Join shape mirrors _fetch_batch: the redirect table is
-            # corpus-sized at web scale (~10^8 rows of a 10^10 crawl), so
-            # the BATCH broadcasts into its scan — never the reverse — and
-            # the batch-bounded match set broadcasts back for the anti-join.
-            redirect_rows = None
-            n_redirect_src = 0
-            if self.redirects is not None:
-                obs_red = Observation(f"redir_epoch_{epoch}")
-                red_src = (
-                    self.redirects.join(
-                        F.broadcast(
-                            allowed.select(
-                                "canonical_url", "depth", "priority", "seq"
-                            )
-                        ),
-                        F.col("from_url") == F.col("canonical_url"),
-                        "inner",
-                    )
-                    .observe(obs_red, F.count(F.lit(1)).alias("n"))
-                    .localCheckpoint(eager=True, storageLevel=_SER_LEVEL)
-                )
-                n_redirect_src = int(obs_red.get["n"])
-                allowed = allowed.join(
-                    F.broadcast(red_src.select("canonical_url")),
-                    "canonical_url",
-                    "left_anti",
-                )
-                redirect_rows = self._redirect_targets(red_src, prefix)
-
-            # S1/S2: fetch. D6 in-flight metrics: an Observation on the
-            # fetch stage (reference heartbeat/report_progress,
-            # src/crawl4ai_mcp.py:541-559,789-797) — CollectMetrics
-            # accumulates while the checkpoint job materializes the batch,
-            # so allowed+success counts cost ZERO extra jobs (previously a
-            # separate agg action per epoch).
-            obs = Observation(f"fetch_epoch_{epoch}")
-            fetch = (
-                self._fetch_batch(allowed)
-                .observe(
-                    obs,
-                    F.count(F.lit(1)).alias("fetch_attempted"),
-                    F.sum(F.col("success").cast("long")).alias("fetch_succeeded"),
-                )
-                .localCheckpoint(eager=True, storageLevel=_SER_LEVEL)
-            )
-            m = obs.get
-            n_allowed = int(m["fetch_attempted"])
-            n_fetched_ok = int(m["fetch_succeeded"] or 0)
-            observed_fetch[epoch] = {
-                "fetch_attempted": n_allowed,
-                "fetch_succeeded": n_fetched_ok,
-            }
-            n_denied = n_popped - n_allowed - n_redirect_src
-            fetched_ok = fetch.where(F.col("success"))
-            fetched_parts.append(
-                fetched_ok.select(
-                    "canonical_url", "host", "depth", "seq", "markdown",
-                    "image_ids", F.lit(epoch).alias("epoch"),
-                )
-            )
-
-            # politeness backoff signal for the next epoch (same grain as
-            # the budgets it feeds)
-            if politeness:
-                statuses = fetch.select(
-                    "host", F.coalesce(F.col("status"), F.lit(404)).alias("status")
-                )
-                if self.politeness_grain == "domain":
-                    statuses = statuses.withColumn(
-                        "host", registrable_domain(F.col("host"))
-                    )
-                backoff = update_backoff(statuses, backoff).localCheckpoint(eager=True, storageLevel=_SER_LEVEL)
-
-            # F1-F8 + J2 expansion; links from the last depth level are never
-            # schedulable (reference loop ends first), so prune them here.
-            discovered = self._expand(fetched_ok, prefix)
-            if redirect_rows is not None:
-                # a URL both linked-to and redirected-to this epoch must
-                # keep ONE discoverer (the _expand-internal rule, applied
-                # across the union; redirect pos -1 beats its parent's
-                # links)
-                discovered = self._first_discoverer(
-                    discovered.unionByName(redirect_rows)
-                )
-            discovered = discovered.where(F.col("depth") <= max_depth - 1)
-            # dynamic trap-family guard: discoveries whose family already
-            # exceeded the cap never enter the frontier — ONE guard
-            # definition (operators/politeness.apply_template_guard; the
-            # flagged set is family-bounded, broadcast anti-join, wide
-            # rows don't move)
-            if self.template_guard_cap is not None:
-                discovered = apply_template_guard(
-                    discovered,
-                    tpl_counts.select(
-                        "template",
-                        (
-                            F.col("n") > F.lit(int(self.template_guard_cap))
-                        ).alias("exploded"),
-                    ),
-                )
-            discovered = anti_join_seen(discovered, url_seen, None)  # J2 exact
-            obs_disc = Observation(f"disc_epoch_{epoch}")
-            discovered = discovered.observe(
-                obs_disc, F.count(F.lit(1)).alias("n")
-            ).localCheckpoint(eager=True, storageLevel=_SER_LEVEL)
-            n_disc = int(obs_disc.get["n"])
-            discovered = self._assign_seq(discovered, seq_offset, n_rows=n_disc)
-            seq_offset += n_disc
-
-            frontier_ckpted = False
-            if politeness or max_pages_per_host is not None:
-                # deferred ∪ discovered may overlap → exact counts needed;
-                # BOTH ride one checkpoint job: the deferred-branch
-                # Observation fires inside the union plan, the frontier
-                # Observation on the dedup output (2 jobs saved per epoch)
-                obs_def = Observation(f"def_epoch_{epoch}")
-                obs_fr = Observation(f"frontier_epoch_{epoch}")
-                deferred_obs = deferred.select(*_FRONTIER_COLS).observe(
-                    obs_def, F.count(F.lit(1)).alias("n")
-                )
-                next_union = deferred_obs.unionByName(discovered)
-                if cap_leftover is not None:
-                    next_union = next_union.unionByName(cap_leftover)
-                fr_built = self._dedup_frontier(next_union).observe(
-                    obs_fr, F.count(F.lit(1)).alias("n")
-                )
-                if self.frontier_store_dir is not None:
-                    # stored mode: the table write IS the materialization
-                    # (observations fire during the write job) — no
-                    # full-width localCheckpoint anywhere in the epoch
-                    frontier = self._store_frontier(epoch + 1, fr_built)
-                else:
-                    frontier = fr_built.localCheckpoint(
-                        eager=True, storageLevel=_SER_LEVEL
-                    )
-                frontier_ckpted = True
-                n_deferred = int(obs_def.get["n"]) + n_cap_deferred
-                frontier_count = int(obs_fr.get["n"])
-            else:
-                n_deferred = n_cap_deferred
-                frontier = discovered
-                frontier_count = n_disc
-                if cap_leftover is not None:
-                    # cap-deferred rows re-enter; dedup in case a leftover
-                    # URL was also just re-discovered as a link
-                    frontier = self._dedup_frontier(
-                        discovered.unionByName(cap_leftover)
-                    ).localCheckpoint(eager=True, storageLevel=_SER_LEVEL)
-                    frontier_ckpted = True
-                    frontier_count = frontier.count()
-                if self.frontier_store_dir is not None:
-                    frontier = self._store_frontier(epoch + 1, frontier)
-                    frontier_ckpted = True
-
-            # S7: lineage metrics — all counts already known, no extra jobs
-            n_dedup_hits = cand_count - (n_popped + n_deferred)
-            lineage_parts.append(
-                spark.createDataFrame(
-                    [
-                        (
-                            epoch,
-                            int(n_popped),
-                            int(n_fetched_ok),
-                            int(n_dedup_hits),
-                            int(n_denied),
-                            int(n_deferred),
-                            int(n_disc),
-                        )
-                    ],
-                    _LINEAGE_SCHEMA,
-                )
-            )
-            epochs_run = epoch + 1
-
-            # S7: snapshot — truncates plan lineage; enables resume
-            if self.ckpt is not None:
-                state = {"seq_offset": seq_offset, "max_depth": max_depth,
-                         "politeness": politeness, "max_epochs": limit,
-                         "max_pages": max_pages,
-                         "max_pages_per_host": max_pages_per_host}
-                if politeness and backoff is not None:
-                    state["backoff"] = [
-                        [r["host"], r["backoff_level"]] for r in backoff.collect()
-                    ]
-                frontier, url_seen = self.ckpt.write_epoch(
-                    epoch, frontier, url_seen, fetched_parts[-1],
-                    lineage_parts[-1], state,
-                )
-            else:
-                if not frontier_ckpted:  # politeness path checkpointed above
-                    frontier = frontier.localCheckpoint(eager=True, storageLevel=_SER_LEVEL)
-                # url_seen is a union of ALREADY-checkpointed popped batches,
-                # so its recompute is a cheap concat — re-copying the whole
-                # (ever-growing) set every epoch is pure write amplification.
-                # Checkpoint on a cadence only to truncate very deep plans.
-                if (epoch - start_epoch) % 4 == 3:
-                    url_seen = url_seen.localCheckpoint(eager=True, storageLevel=_SER_LEVEL)
-
-        return CrawlRunResult(
-            url_seen=url_seen,
-            fetched=_union_all(spark, fetched_parts, _FETCHED_SCHEMA),
-            lineage=_union_all(spark, lineage_parts, _LINEAGE_SCHEMA),
-            frontier_remaining=frontier,
-            epochs_run=epochs_run,
-            stats={"observed_fetch": observed_fetch},
+        url_seen = self.spark.createDataFrame([], _URL_SEEN_SCHEMA)
+        return self._crawl(
+            spec, 0, frontier, row["n"], url_seen, 0, (row["mx"] or 0) + 1, None
         )
 
     def resume(
@@ -1027,21 +589,329 @@ class CrawlEngine:
                 [(h, int(l)) for h, l in state["backoff"]],
                 "host string, backoff_level int",
             )
-        result = self.run(
-            seeds=None,
-            max_depth=max_depth if max_depth is not None else state["max_depth"],
-            politeness=state.get("politeness", False),
-            max_epochs=max_epochs if max_epochs is not None else state.get("max_epochs"),
-            max_pages=state.get("max_pages"),
-            max_pages_per_host=state.get("max_pages_per_host"),
-            start_epoch=last + 1,
-            _resume_state=(frontier, url_seen, state["seq_offset"], backoff),
+        spec = _RunSpec(
+            max_depth if max_depth is not None else state["max_depth"],
+            state.get("politeness", False),
+            None,
+            max_epochs if max_epochs is not None else state.get("max_epochs"),
+            state.get("max_pages"),
+            state.get("max_pages_per_host"),
+        )
+        result = self._crawl(
+            spec, last + 1, frontier, frontier.count(), url_seen,
+            url_seen.count(), state["seq_offset"], backoff,
         )
         # stitch the full fetched/lineage logs back in
         upto = max(result.epochs_run - 1, last)
         result.fetched = self.ckpt.read_fetched(upto)
         result.lineage = self.ckpt.read_lineage(upto)
         return result
+
+    def _crawl(
+        self, spec, epoch0, frontier, frontier_count, url_seen, seen_count,
+        seq_offset, backoff,
+    ) -> CrawlRunResult:
+        """The epoch loop from ``epoch0``: membership → schedule → gate →
+        fetch → expand → next frontier → commit.
+
+        Action economy: every count is a Spark job, and at a
+        politeness-bounded epoch job overhead IS the epoch cost. So counts
+        ride the stages' eager checkpoints as Observations, or are tracked
+        in Python (url_seen grows by the popped count)."""
+        if self.frontier_store_dir is not None:
+            # the frontier popped in epoch E lives in table ..._ep{E}
+            frontier = self._store_frontier(epoch0, frontier)
+        # per-key scheduled counters (key, n), seeded from url_seen (empty
+        # on a fresh run): how a url_seen-shaped frame gets each key
+        keyed = {}
+        if spec.max_pages_per_host is not None:
+            keyed["host"] = self._at_grain
+        if self.template_guard_cap is not None:
+            keyed["template"] = lambda df: df.withColumn(
+                "template", url_template(F.col("canonical_url"))
+            )
+        counters = {k: _count_fold(None, at(url_seen), k) for k, at in keyed.items()}
+        fetched_parts: list[DataFrame] = []
+        lineage_parts: list[DataFrame] = []
+        observed_fetch: dict[int, dict[str, int]] = {}
+        epochs_run, n_popped = epoch0, None
+
+        for epoch in range(epoch0, spec.limit):
+            if frontier_count == 0:
+                break  # reference early exit :1006-1008
+            if spec.max_pages is not None and seen_count >= spec.max_pages:
+                break  # page budget exhausted (crawl4ai max_pages)
+            if spec.max_pages_per_host is not None and n_popped == 0:
+                break  # every frontier host is quota-blocked — no progress
+            n_candidates = frontier_count
+
+            new_urls = self._membership(frontier, url_seen, seen_count)
+            popped, n_popped, leftovers = self._schedule(
+                new_urls, spec, seen_count, backoff, counters.get("host")
+            )
+            seen_count += n_popped
+            if n_popped:
+                counters = {
+                    k: _count_fold(counters[k], at(popped), k) for k, at in keyed.items()
+                }
+            # mark visited at SCHEDULE time (reference :1000-1004)
+            url_seen = url_seen.unionByName(
+                popped.select(
+                    "url_hash", "canonical_url", "host", "depth", "seq",
+                    F.lit(epoch).alias("epoch_seen"),
+                )
+            )
+            allowed, red_src, n_redirected = self._gate(popped)
+            fetched_ok, observed_fetch[epoch], backoff = self._fetch(
+                allowed, backoff, spec.politeness
+            )
+            fetched_parts.append(
+                fetched_ok.select(
+                    "canonical_url", "host", "depth", "seq", "markdown",
+                    "image_ids", F.lit(epoch).alias("epoch"),
+                )
+            )
+            discovered, n_disc = self._expand(
+                fetched_ok, red_src, spec, url_seen, counters.get("template"),
+                seq_offset,
+            )
+            seq_offset += n_disc
+            frontier, frontier_count, n_deferred = self._next_frontier(
+                epoch + 1, discovered, n_disc, leftovers
+            )
+
+            # S7: lineage metrics — all counts already known, no extra jobs
+            m = observed_fetch[epoch]
+            lineage_parts.append(
+                self.spark.createDataFrame(
+                    [(
+                        epoch,
+                        n_popped,
+                        m["fetch_succeeded"],
+                        n_candidates - (n_popped + n_deferred),
+                        n_popped - m["fetch_attempted"] - n_redirected,
+                        n_deferred,
+                        n_disc,
+                    )],
+                    _LINEAGE_SCHEMA,
+                )
+            )
+            epochs_run = epoch + 1
+            frontier, url_seen = self._commit(
+                epoch, epoch0, spec, frontier, url_seen, fetched_parts[-1],
+                lineage_parts[-1], seq_offset, backoff,
+            )
+
+        return CrawlRunResult(
+            url_seen=url_seen,
+            fetched=_union_all(self.spark, fetched_parts, _FETCHED_SCHEMA),
+            lineage=_union_all(self.spark, lineage_parts, _LINEAGE_SCHEMA),
+            frontier_remaining=frontier,
+            epochs_run=epochs_run,
+            stats={"observed_fetch": observed_fetch},
+        )
+
+    def _at_grain(self, df: DataFrame) -> DataFrame:
+        """``df`` with ``host`` replaced by its politeness-grain key."""
+        if self._grain is None:
+            return df
+        return df.withColumn("host", self._grain(F.col("host")))
+
+    def _membership(self, frontier, url_seen, seen_count) -> DataFrame:
+        """J1: the frontier's URLs not yet seen — exact anti-join, bloom
+        prefiltered once url_seen reaches BLOOM_MIN_SEEN rows (below that
+        the exact anti-join alone is cheaper)."""
+        bloom = (
+            build_bloom(url_seen, "url_hash", expected=max(seen_count, 1))
+            if seen_count >= BLOOM_MIN_SEEN
+            else None
+        )
+        return anti_join_seen(frontier, url_seen, bloom)
+
+    def _schedule(self, new_urls, spec, seen_count, backoff, host_counts):
+        """J4: this epoch's batch — (popped, its count, leftovers).
+
+        A budgeted run (politeness or a host quota) pops at most
+        budget(key) URLs per grain key in (depth, priority, seq) order.
+        Budgets attach per row via broadcast dims (attach_budgets), never
+        a distinct-hosts shuffle; under domain grain the hostname is
+        parked aside around the pop. ``max_pages`` then truncates the
+        batch to the remaining page budget in crawl order (an ordered
+        take of ≤ max_pages rows). ``leftovers`` — deferred and truncated
+        rows, or None when there can be none — re-enter the frontier."""
+        popped, leftovers = new_urls, None
+        if spec.politeness or spec.max_pages_per_host is not None:
+            fr = new_urls
+            if self._grain is not None:
+                fr = self._at_grain(fr.withColumn("__hostname", F.col("host")))
+            if spec.politeness:
+                fr = attach_budgets(
+                    fr, self._budget_robots, backoff, self.epoch_seconds or None
+                )
+            else:  # quota only: unlimited epoch budget, the quota clamps
+                fr = fr.withColumn("budget", F.lit(2**31 - 1).cast("int"))
+            if spec.max_pages_per_host is not None:
+                rem = F.greatest(
+                    F.lit(0),
+                    F.lit(int(spec.max_pages_per_host)) - F.coalesce(F.col("n"), F.lit(0)),
+                )
+                fr = (
+                    fr.join(F.broadcast(host_counts), "host", "left")
+                    .withColumn("budget", F.least(F.col("budget").cast("long"), rem).cast("int"))
+                    .drop("n")
+                )
+            popped, deferred = self._pop(fr, None)
+            if self._grain is not None:
+                popped, deferred = (
+                    d.withColumn("host", F.col("__hostname")).drop("__hostname")
+                    for d in (popped, deferred)
+                )
+            leftovers = deferred.select(*_FRONTIER_COLS)
+        popped, m = local_ckpt_observed(popped)
+        n_popped = int(m["n"])
+        if spec.max_pages is not None and seen_count + n_popped > spec.max_pages:
+            n_popped = spec.max_pages - seen_count
+            taken = local_ckpt(popped.orderBy("depth", "priority", "seq").limit(n_popped))
+            cut = popped.join(
+                taken.select("canonical_url"), "canonical_url", "left_anti"
+            ).select(*_FRONTIER_COLS)
+            leftovers = cut if leftovers is None else leftovers.unionByName(cut)
+            popped = taken
+        return popped, n_popped, leftovers
+
+    def _gate(self, popped: DataFrame) -> tuple[DataFrame, DataFrame | None, int]:
+        """D4 robots gate and 3xx hops: (allowed, redirect sources, their
+        count). Denied URLs and redirect sources are consumed without a
+        fetch. The redirect join mirrors _fetch_batch: the redirect table
+        is corpus-sized at web scale, so the BATCH broadcasts into its
+        scan, and the batch-bounded matches broadcast back."""
+        allowed = popped
+        if self._robots_denied is not None:
+            allowed = (
+                popped.join(F.broadcast(self.robots), "host", "left")
+                .where(~self._robots_denied)
+                .select(*_FRONTIER_COLS)
+            )
+        if self.redirects is None:
+            return allowed, None, 0
+        red_src, m = local_ckpt_observed(
+            self.redirects.join(
+                F.broadcast(allowed.select("canonical_url", "depth", "priority", "seq")),
+                F.col("from_url") == F.col("canonical_url"),
+                "inner",
+            )
+        )
+        allowed = allowed.join(
+            F.broadcast(red_src.select("canonical_url")), "canonical_url", "left_anti"
+        )
+        return allowed, red_src, int(m["n"])
+
+    def _fetch(self, allowed, backoff, politeness):
+        """S1/S2 fetch: (successful rows, fetch counts, next backoff). The
+        D6 in-flight metrics (reference heartbeat/report_progress,
+        src/crawl4ai_mcp.py:541-559,789-797) ride the fetch checkpoint.
+        Under politeness the statuses fold into the next epoch's backoff
+        at the budgets' grain."""
+        fetch, m = local_ckpt_observed(
+            self._fetch_batch(allowed),
+            F.count(F.lit(1)).alias("fetch_attempted"),
+            F.sum(F.col("success").cast("long")).alias("fetch_succeeded"),
+        )
+        if politeness:
+            statuses = fetch.select(
+                "host", F.coalesce(F.col("status"), F.lit(404)).alias("status")
+            )
+            backoff = local_ckpt(update_backoff(self._at_grain(statuses), backoff))
+        counts = {
+            "fetch_attempted": int(m["fetch_attempted"]),
+            "fetch_succeeded": int(m["fetch_succeeded"] or 0),
+        }
+        return fetch.where(F.col("success")), counts, backoff
+
+    def _expand(self, fetched_ok, red_src, spec, url_seen, tpl_counts, seq_offset):
+        """F1-F8 + J2: the unseen discoveries with their seq, and their
+        count. Out-links pass all reference filters (F1 binary, F4
+        prefix, F5 same-domain, F6 defrag, F7 resolve, F8 shape), as do
+        redirect targets. Links from the last depth level are never
+        schedulable (the reference loop ends first); discoveries in a
+        template family past the guard cap never enter the frontier."""
+        links = fetched_ok.select(
+            F.col("canonical_url").alias("base_url"),
+            (F.col("depth") + 1).alias("depth"),
+            "priority",
+            F.col("seq").alias("__disc_seq"),
+            F.posexplode("out_links").alias("__disc_pos", "href"),
+        ).withColumn(
+            "next_url", canonical_url(resolve_href(F.col("base_url"), F.col("href")))
+        )
+        candidates = self._gate_next_urls(links, spec.prefix).select(
+            "next_url", "depth", "priority", "__disc_seq", "__disc_pos"
+        )
+        if red_src is not None:
+            candidates = candidates.unionByName(
+                self._redirect_targets(red_src, spec.prefix)
+            )
+        discovered = self._first_discoverer(candidates).where(
+            F.col("depth") <= spec.max_depth - 1
+        )
+        if tpl_counts is not None:
+            cap = F.lit(int(self.template_guard_cap))
+            discovered = apply_template_guard(
+                discovered,
+                tpl_counts.select("template", (F.col("n") > cap).alias("exploded")),
+            )
+        discovered, m = local_ckpt_observed(anti_join_seen(discovered, url_seen, None))
+        n_disc = int(m["n"])
+        return self._assign_seq(discovered, seq_offset, n_rows=n_disc), n_disc
+
+    def _next_frontier(self, epoch, discovered, n_disc, leftovers):
+        """U1: the frontier popped in ``epoch`` — (frontier, its count,
+        leftover count). Leftovers may overlap the discoveries, so their
+        union is deduped and both counts ride its materialization as
+        Observations; otherwise the frontier is the discoveries."""
+        if leftovers is None:
+            return self._materialize(epoch, discovered, False), n_disc, 0
+        obs_left, obs_fr = Observation(), Observation()
+        frontier = self._dedup_frontier(
+            leftovers.observe(obs_left, F.count(F.lit(1)).alias("n"))
+            .unionByName(discovered)
+        ).observe(obs_fr, F.count(F.lit(1)).alias("n"))
+        frontier = self._materialize(epoch, frontier, True)
+        return frontier, int(obs_fr.get["n"]), int(obs_left.get["n"])
+
+    def _materialize(self, epoch, frontier, observed):
+        """The frontier, materialized once: as its stored table, else as a
+        local checkpoint — which a checkpoint_dir run leaves to the
+        snapshot write unless an Observation must fire first."""
+        if self.frontier_store_dir is not None:
+            return self._store_frontier(epoch, frontier)
+        return local_ckpt(frontier) if observed or self.ckpt is None else frontier
+
+    def _commit(
+        self, epoch, epoch0, spec, frontier, url_seen, fetched, lineage,
+        seq_offset, backoff,
+    ) -> tuple[DataFrame, DataFrame]:
+        """S7: the epoch snapshot, which enables resume and whose re-read
+        truncates plan lineage — (frontier, url_seen). Without one,
+        url_seen is a union of ALREADY-checkpointed popped batches, so its
+        recompute is a cheap concat and re-copying the ever-growing set
+        each epoch would be pure write amplification: it is checkpointed
+        on a cadence only, to truncate very deep plans."""
+        if self.ckpt is None:
+            if (epoch - epoch0) % 4 == 3:
+                url_seen = local_ckpt(url_seen)
+            return frontier, url_seen
+        state = {"seq_offset": seq_offset, "max_depth": spec.max_depth,
+                 "politeness": spec.politeness, "max_epochs": spec.limit,
+                 "max_pages": spec.max_pages,
+                 "max_pages_per_host": spec.max_pages_per_host}
+        if spec.politeness and backoff is not None:
+            state["backoff"] = [
+                [r["host"], r["backoff_level"]] for r in backoff.collect()
+            ]
+        return self.ckpt.write_epoch(
+            epoch, frontier, url_seen, fetched, lineage, state
+        )
 
 
 def crawl_report(
@@ -1206,12 +1076,13 @@ def py_crawl_hardened(
     (the py_crawl_with_redirects precedent: epoch-bounded composed
     semantics are not a closed-form SQL recursion).
 
-    Engine lines replicated, in loop order (plans/crawl.py run()):
-    loop-top breaks; anti-join; domain-grain budget attach; per-domain
-    pop; max_pages truncation + cap_leftover; template fold; visited at
-    schedule time; robots gate; redirect consumption; fetch + statuses;
-    backoff update; link expansion + gates; first-discoverer; depth
-    filter; template guard; seq assignment; frontier dedup (min struct).
+    Engine stages replicated, in loop order (plans/crawl.py
+    CrawlEngine._crawl): loop-top breaks; membership (anti-join);
+    schedule (domain-grain budgets, per-domain pop, max_pages truncation,
+    template fold, visited at schedule time); gate (robots, redirect
+    consumption); fetch (statuses, backoff update); expand (link gates,
+    first discoverer, depth filter, template guard, seq assignment); next
+    frontier (dedup of leftovers ∪ discoveries, min struct).
     """
     from math import floor
 

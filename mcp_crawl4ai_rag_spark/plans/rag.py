@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .. import SER_CKPT_LEVEL as _SER_LEVEL
+from .. import local_ckpt
 
 from ..config import DEFAULT_MATCH_COUNT
 from ..functions.chunking import explode_chunks, with_section_info
@@ -316,22 +316,24 @@ def simulate_conditional_fetch(
         & F.col("__req_lm").eqNullSafe(F.col("__srv_lm"))
     )
     not_modified = etag_hit | lm_hit
-    found = j.select(
-        url_col,
-        F.when(not_modified, F.lit(304)).otherwise(F.lit(200)).alias("status"),
-        F.when(not_modified, F.lit(None).cast("string"))
-        .otherwise(F.md5(F.col("__srv_body")))
-        .alias("fp"),
-        F.when(not_modified, F.lit(None).cast("string"))
-        .otherwise(F.col("__srv_etag"))
-        .alias("etag"),
-        F.when(not_modified, F.lit(None).cast("string"))
-        .otherwise(F.col("__srv_lm"))
-        .alias("last_modified"),
-        F.when(not_modified, F.lit(None).cast("string"))
-        .otherwise(F.col("__srv_body"))
-        .alias("body"),
-    ).localCheckpoint(eager=True, storageLevel=_SER_LEVEL)
+    found = local_ckpt(
+        j.select(
+            url_col,
+            F.when(not_modified, F.lit(304)).otherwise(F.lit(200)).alias("status"),
+            F.when(not_modified, F.lit(None).cast("string"))
+            .otherwise(F.md5(F.col("__srv_body")))
+            .alias("fp"),
+            F.when(not_modified, F.lit(None).cast("string"))
+            .otherwise(F.col("__srv_etag"))
+            .alias("etag"),
+            F.when(not_modified, F.lit(None).cast("string"))
+            .otherwise(F.col("__srv_lm"))
+            .alias("last_modified"),
+            F.when(not_modified, F.lit(None).cast("string"))
+            .otherwise(F.col("__srv_body"))
+            .alias("body"),
+        )
+    )
     missing = req.join(
         F.broadcast(found.select(url_col)), url_col, "left_anti"
     ).select(

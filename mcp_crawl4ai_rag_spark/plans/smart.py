@@ -15,10 +15,10 @@ uniform.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .. import SER_CKPT_LEVEL as _SER_LEVEL  # single engine-wide definition
+from .. import local_ckpt_observed
 
 from ..config import DEFAULT_MAX_DEPTH, SITEMAP_MAX_DEPTH
 from ..functions.urls import (
@@ -96,11 +96,8 @@ def smart_crawl(
         # the count (picks window vs distributed seq assignment) rides the
         # checkpoint materialization; downstream seed/crawl scans then read
         # the checkpointed URL set instead of re-deriving the expansion
-        obs = Observation("sitemap_seed_count")
-        page_urls = page_urls.observe(
-            obs, F.count(F.lit(1)).alias("n")
-        ).localCheckpoint(eager=True, storageLevel=_SER_LEVEL)
-        seeds = _seed_df(spark, page_urls, n_rows=int(obs.get["n"]))
+        page_urls, m = local_ckpt_observed(page_urls)
+        seeds = _seed_df(spark, page_urls, n_rows=int(m["n"]))
         engine = CrawlEngine(spark, pages, robots=robots)
         return engine.run(seeds, max_depth=1)  # batch fetch, no link follow
 

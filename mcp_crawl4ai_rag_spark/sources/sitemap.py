@@ -24,7 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import SER_CKPT_LEVEL as _SER_LEVEL  # single engine-wide definition
+from .. import local_ckpt
 
 from ..config import SITEMAP_MAX_DEPTH
 
@@ -132,7 +132,7 @@ def expand_sitemaps(
         if pending.isEmpty():
             break
         fetched = sitemap_corpus.join(F.broadcast(pending), "url", "inner")
-        entries = parse_sitemap_bodies(fetched).localCheckpoint(eager=True, storageLevel=_SER_LEVEL)
+        entries = local_ckpt(parse_sitemap_bodies(fetched))
         page_cols = ["loc"]
         if with_lastmod:
             page_cols.append("lastmod")

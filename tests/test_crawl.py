@@ -25,11 +25,33 @@ def corpus(spark):
     return pages
 
 
-def test_url_seen_matches_oracle(spark, corpus):
+@pytest.fixture
+def n_ckpts(monkeypatch):
+    """How many eager local checkpoints have run so far: every
+    materialization a crawl mode pays for, pinned per mode so a refactor
+    cannot add one unnoticed."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    calls = []
+    real = DataFrame.localCheckpoint
+
+    def counting(self, *args, **kwargs):
+        calls.append(1)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", counting)
+    return lambda: len(calls)
+
+
+def test_url_seen_matches_oracle(spark, corpus, n_ckpts):
     eng = CrawlEngine(
         spark, corpus, robots=gen_robots(spark), allowed_host_suffix=".example.com"
     )
-    res = eng.run(gen_seeds(spark, N), max_depth=DEPTH)
+    seeds = gen_seeds(spark, N)
+    before = n_ckpts()
+    res = eng.run(seeds, max_depth=DEPTH)
+    # per epoch: pop, fetch-found, fetch, discovered, frontier; url_seen once
+    assert n_ckpts() - before == 21
     got = {
         r["canonical_url"]: r["depth"] for r in res.url_seen.collect()
     }
@@ -507,7 +529,9 @@ def test_pop_per_host_evaluates_its_input_once(spark):
     assert [key(s) for s in bloomed] == [key(s) for s in epoch(None)]
 
 
-def test_checkpoint_resume_politeness_bit_identical(spark, corpus, tmp_path):
+def test_checkpoint_resume_politeness_bit_identical(
+    spark, corpus, tmp_path, n_ckpts
+):
     """Kill/resume under politeness budgets + backoff: the resumed run must
     reproduce the uninterrupted schedule exactly, including which epoch each
     URL was popped in (backoff levels are part of the persisted state)."""
@@ -518,17 +542,23 @@ def test_checkpoint_resume_politeness_bit_identical(spark, corpus, tmp_path):
     kw = dict(
         robots=robots, allowed_host_suffix=".example.com", epoch_seconds=6.0
     )
+    before = n_ckpts()
     full = CrawlEngine(
         spark, corpus, checkpoint_dir=str(tmp_path / "pf"), **kw
     ).run(seeds, max_depth=DEPTH, politeness=True, max_epochs=6)
+    # per epoch: the pop's lane-ranked frame, popped batch, fetch-found,
+    # fetch, backoff, discovered, frontier
+    assert n_ckpts() - before == 42
 
     part_dir = str(tmp_path / "pp")
+    before = n_ckpts()
     CrawlEngine(spark, corpus, checkpoint_dir=part_dir, **kw).run(
         seeds, max_depth=DEPTH, politeness=True, max_epochs=2
     )
     resumed = CrawlEngine(spark, corpus, checkpoint_dir=part_dir, **kw).resume(
         max_epochs=6
     )
+    assert n_ckpts() - before == 42
 
     def key(df):
         return sorted(
@@ -738,7 +768,7 @@ def test_host_quality_prior_exact_integer_mean_and_pop_order(spark):
     )
 
 
-def test_max_pages_truncates_in_crawl_order(spark, corpus):
+def test_max_pages_truncates_in_crawl_order(spark, corpus, n_ckpts):
     """max_pages (crawl4ai's deep-crawl page budget) caps the visited set at
     exactly the first M rows of the UNCAPPED run's schedule order
     (epoch_seen asc, then depth/priority/seq within the truncated epoch),
@@ -751,7 +781,9 @@ def test_max_pages_truncates_in_crawl_order(spark, corpus):
             spark, corpus, robots=robots, allowed_host_suffix=".example.com"
         )
 
+    before = n_ckpts()
     full = eng().run(seeds, max_depth=DEPTH)
+    assert n_ckpts() - before == 21
     rows = full.url_seen.select(
         "canonical_url", "depth", "seq", "epoch_seen"
     ).collect()
@@ -765,7 +797,10 @@ def test_max_pages_truncates_in_crawl_order(spark, corpus):
     m = first_of_last + max(1, (total - first_of_last) // 2)
     assert first_of_last < m < total, "cap must bite mid-epoch"
 
+    before = n_ckpts()
     capped = eng().run(seeds, max_depth=DEPTH, max_pages=m)
+    # the cut epoch adds the truncated batch
+    assert n_ckpts() - before == 22
     got = {
         (r["canonical_url"], r["depth"], r["seq"], r["epoch_seen"])
         for r in capped.url_seen.collect()
@@ -1168,7 +1203,7 @@ def test_template_guard_cap_stops_mill_midcrawl(spark):
     } == {(r["canonical_url"], r["seq"]) for r in base.url_seen.collect()}
 
 
-def test_stored_frontier_engine_bit_identical(spark, corpus, tmp_path):
+def test_stored_frontier_engine_bit_identical(spark, corpus, tmp_path, n_ckpts):
     """The stored-frontier mode (frontier persisted per epoch as a
     host-bucketed parquet table; threshold pop popping FROM the table) is
     a pure physical choice: across a multi-epoch politeness crawl the
@@ -1177,15 +1212,21 @@ def test_stored_frontier_engine_bit_identical(spark, corpus, tmp_path):
     (plans/crawl.py:214 claim) executed end-to-end."""
     seeds = gen_seeds(spark, N)
     robots = gen_robots(spark)
+    before = n_ckpts()
     base = CrawlEngine(
         spark, corpus, robots=robots, allowed_host_suffix=".example.com",
         epoch_seconds=30.0,
     ).run(seeds, max_depth=3, politeness=True)
+    assert n_ckpts() - before == 21
+    before = n_ckpts()
     stored = CrawlEngine(
         spark, corpus, robots=robots, allowed_host_suffix=".example.com",
         epoch_seconds=30.0,
         frontier_store_dir=str(tmp_path / "frontier"),
     ).run(seeds, max_depth=3, politeness=True)
+    # the stored table is the frontier's materialization, and the
+    # threshold pop checkpoints nothing
+    assert n_ckpts() - before == 15
     assert stored.epochs_run >= 3, "the stored shape must span >=3 epochs"
     key = lambda res: {  # noqa: E731
         (r["canonical_url"], r["depth"], r["seq"], r["epoch_seen"])
@@ -1282,7 +1323,7 @@ def _hazard_engine(spark, m, tmp_path, store=None, ckpt=None, **over):
     return CrawlEngine(spark, HZ.gen_hazard_pages(spark, m), **kw)
 
 
-def test_hardened_composed_crawl_matches_twin(spark, tmp_path):
+def test_hardened_composed_crawl_matches_twin(spark, tmp_path, n_ckpts):
     """ONE engine run with EVERY hardening guard active — redirects +
     trap link_filter + in-crawl template guard + wildcard robots (query
     target) + eTLD+1 politeness with backoff + max_pages + threshold pop
@@ -1293,13 +1334,17 @@ def test_hardened_composed_crawl_matches_twin(spark, tmp_path):
     from mcp_crawl4ai_rag_spark.sources import hazard as HZ
 
     m, max_pages = 300, HZ.HAZ_MAX_PAGES
-    res = _hazard_engine(spark, m, tmp_path, store="fr").run(
-        HZ.gen_hazard_seeds(spark).select("url", "priority", "depth", "seq"),
+    eng = _hazard_engine(spark, m, tmp_path, store="fr")
+    seeds = HZ.gen_hazard_seeds(spark).select("url", "priority", "depth", "seq")
+    before = n_ckpts()
+    res = eng.run(
+        seeds,
         max_depth=HZ.HAZ_MAX_DEPTH,
         politeness=True,
         max_epochs=HZ.HAZ_MAX_EPOCHS,
         max_pages=max_pages,
     )
+    assert n_ckpts() - before == 88
     got = {
         r["canonical_url"]: (r["depth"], r["epoch_seen"], r["seq"])
         for r in res.url_seen.collect()
@@ -1379,7 +1424,8 @@ def test_quota_follows_politeness_grain(spark):
     """max_pages_per_host under politeness_grain="domain" clamps per
     registrable DOMAIN (counter fold, clamp join, and pop rows all key by
     domain — a grain mismatch would silently never clamp); under the
-    default host grain the same corpus yields the per-hostname quota."""
+    default host grain the same corpus yields the per-hostname quota.
+    Robots Crawl-delay budgets key by the grain the same way."""
     urls = [
         f"https://{sub}.shop-x.com/p{k}"
         for sub in ("a", "b") for k in range(8)
@@ -1398,17 +1444,29 @@ def test_quota_follows_politeness_grain(spark):
         "url string, priority int, depth int, seq long",
     )
 
-    def run(grain):
+    def run(grain, robots=None, **kw):
         res = CrawlEngine(
-            spark, pages, politeness_grain=grain,
-        ).run(seeds, max_depth=1, max_pages_per_host=5, max_epochs=4)
+            spark, pages, robots=robots, politeness_grain=grain,
+            epoch_seconds=10.0,
+        ).run(seeds, max_depth=1, **kw)
         from collections import Counter
         return Counter(r["host"] for r in res.url_seen.collect())
 
-    by_host = run("host")
+    quota = dict(max_pages_per_host=5, max_epochs=4)
+    by_host = run("host", **quota)
     assert by_host == {"a.shop-x.com": 5, "b.shop-x.com": 5}
-    by_dom = run("domain")
+    by_dom = run("domain", **quota)
     # one shared domain budget: exactly 5 TOTAL across both subdomains
     assert sum(by_dom.values()) == 5
+    # robots Crawl-delay follows the grain too: 60 s on both subdomains
+    # over a 10 s epoch is a budget of 1 per host, and 1 for their domain
+    # (the default 2 s delay would pop 5)
+    robots = spark.createDataFrame(
+        [("a.shop-x.com", [], 60.0), ("b.shop-x.com", [], 60.0)],
+        "host string, disallow_prefixes array<string>, crawl_delay double",
+    )
+    one_epoch = dict(robots=robots, politeness=True, max_epochs=1)
+    assert run("host", **one_epoch) == {"a.shop-x.com": 1, "b.shop-x.com": 1}
+    assert sum(run("domain", **one_epoch).values()) == 1
     with pytest.raises(ValueError):
         CrawlEngine(spark, pages, politeness_grain="bogus")
