@@ -671,7 +671,6 @@ def phash_pairs_incremental(
     n_chunks: int = 8,
     max_hamming: int = 4,
     dedupe_identical: bool = False,
-    broadcast_increment: bool | None = None,
 ) -> DataFrame:
     """(id_a=indexed, id_b=new, hamming): near-dup pairs BETWEEN the
     existing corpus (via its persisted chunk index — keys never recomputed)
@@ -685,10 +684,9 @@ def phash_pairs_incremental(
     shuffling the (much larger) index. But "typical" is a caller
     assumption, not an invariant — a huge recrawl batch (millions of
     images × n_chunks rows) can exceed driver/broadcast memory where a
-    shuffle join would succeed. ``broadcast_increment`` controls it:
-    True forces the broadcast hint, False leaves the join strategy to
-    Catalyst/AQE (runtime-sized), and None (default) auto-decides via a
-    cheap count on the increment (≤ ~1M chunk-key rows → broadcast).
+    shuffle join would succeed. So a cheap count on the increment decides:
+    ≤ ~1M chunk-key rows get the broadcast hint, larger increments leave
+    the join strategy to Catalyst/AQE (runtime-sized).
     Candidates are old×new only (never old×old), and verification is one
     popcount on columns already in hand. A re-crawled id present in both
     sides self-pairs and is filtered."""
@@ -719,12 +717,10 @@ def phash_pairs_incremental(
         "chunk_idx",
         "chunk_val",
     )
-    if broadcast_increment is None:
-        # one count over the (distinct-hash) increment decides; 1M
-        # chunk-key rows ≈ tens of MB — safely under default broadcast
-        # limits, while a mega-recrawl falls through to AQE's choice
-        broadcast_increment = probe.limit(1_000_001).count() <= 1_000_000
-    if broadcast_increment:
+    # one count over the (distinct-hash) increment decides; 1M chunk-key
+    # rows ≈ tens of MB — safely under default broadcast limits, while a
+    # mega-recrawl falls through to AQE's choice
+    if probe.limit(1_000_001).count() <= 1_000_000:
         probe = F.broadcast(probe)
     index = spark.read.parquet(index_path)
     out = (

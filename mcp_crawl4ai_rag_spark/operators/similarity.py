@@ -6,10 +6,14 @@ query LIMIT k``, crawled_pages.sql:49-61) plus the scale-path additions:
 - :func:`brute_topk` — exact cosine top-k. Spark plans it as
   TakeOrderedAndProject: each partition keeps only its local top-k, the
   driver merges k×partitions rows — no global sort, no full shuffle.
-- :func:`lsh_bucket_ann` — random-hyperplane LSH: ±1 hyperplanes (shared
-  constants from md5, reproducible in any engine), signature = sign
-  pattern of the dot products, search only the query's bucket. At 10^10
-  vectors the bucket join prunes the scan by ~2^n_planes.
+- ANN top-k, one shape for every family: a driver-chosen probe (the
+  query's LSH bucket ball, the ``n_probe`` nearest IVF cells), a pruned
+  candidate scan (partition-pruned on a written index; an int8 or PQ-ADC
+  shortlist), then one exact rescore through :func:`brute_topk`. LSH
+  (:func:`lsh_multiprobe_ann`) uses ±1 hyperplanes (shared constants from
+  md5, reproducible in any engine); radius 0 searches only the query's
+  bucket, pruning the scan by ~2^n_planes. IVF, PQ, IVF-PQ and int8
+  quantization follow below.
 - :func:`cosine_pairs` — near-duplicate pairs by embedding cosine.
 
 Exact arithmetic notes: all dot products fold left-to-right in float64 via
@@ -164,21 +168,22 @@ def quantized_topk(
     cands = approx.orderBy(
         F.desc("__approx"), F.col(id_col).asc()
     ).limit(rescore_factor * k)
-    return (
-        embs.join(cands.select(id_col), id_col, "left_semi")
-        .select(
-            F.col(id_col),
-            F.round(
-                cosine_expr(
-                    F.col(vec_col),
-                    vector_lit(query_vec),
-                ),
-                4,
-            ).alias("sim"),
-        )
-        .orderBy(F.desc("sim"), F.col(id_col).asc())
-        .limit(k)
-    )
+    return _rescore(embs, cands, query_vec, k, id_col, vec_col)
+
+
+def _rescore(
+    store: DataFrame,
+    shortlist: DataFrame,
+    query_vec: list[float],
+    k: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The exact rescore of a shortlist: its ids broadcast-semi-joined into
+    ``store`` (the store side streams, zero shuffle), then
+    :func:`brute_topk` over the fetched vectors."""
+    fetched = store.join(F.broadcast(shortlist.select(id_col)), id_col, "left_semi")
+    return brute_topk(fetched, query_vec, k, id_col, vec_col)
 
 
 def recall_at_k(
@@ -233,8 +238,9 @@ def lsh_multiprobe_ann(
 ) -> DataFrame:
     """(id, sim): exact cosine top-k restricted to buckets within hamming
     ``radius`` of the query's LSH bucket — multi-probe LSH. Single-bucket
-    probing misses neighbors that land one sign-flip away (the recall@k
-    harness measures ≈0 on isotropic vectors); probing the radius-1 ball
+    probing (``radius=0``) misses neighbors that land one sign-flip away
+    (the recall@k harness measures ≈0 on isotropic vectors); probing the
+    radius-1 ball
     (1 + n_planes buckets) recovers most of them for (1+n)× the scan of one
     bucket, still a tiny fraction of the corpus. The probe predicate is
     ``bit_count(bucket XOR q_bucket) <= radius`` — pure codegen, no bucket
@@ -254,27 +260,6 @@ def lsh_multiprobe_ann(
     return brute_topk(probed, query_vec, k, id_col=id_col, vec_col=vec_col)
 
 
-def lsh_bucket_ann(
-    embs: DataFrame,
-    query_vec: list[float],
-    k: int,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = DEFAULT_LSH_PLANES,
-) -> DataFrame:
-    """Approximate top-k: exact cosine restricted to the query's LSH bucket.
-
-    The bucket column is computable at write time and usable as a partition
-    key, turning ANN lookup into partition-pruned scan + local top-k.
-    """
-    q_bucket = query_bucket(query_vec, dim, n_planes)
-    bucketed = embs.withColumn("__bucket", bucket_expr(F.col(vec_col), dim, n_planes))
-    return brute_topk(
-        bucketed.where(F.col("__bucket") == q_bucket), query_vec, k, id_col, vec_col
-    )
-
-
 def l2sq_expr(a, b):
     """Squared L2 distance as a left fold in float64 (order-stable)."""
     return F.aggregate(
@@ -286,6 +271,47 @@ def l2sq_expr(a, b):
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
+
+
+def _py_l2sq(a, b) -> float:
+    """Left-to-right float64 squared-L2 fold — the Python twin of
+    :func:`l2sq_expr` / the oracle's list_reduce (identical IEEE op order,
+    so all three agree bit-for-bit)."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        d = float(x) - float(y)
+        acc = acc + d * d
+    return acc
+
+
+def _codebook(codebook: DataFrame) -> list:
+    """A (cid, ce) codebook's rows on the driver, sorted by cid. Codebooks
+    are O(K×D) small by construction; each public call collects its
+    codebook once and inlines it as literals."""
+    return sorted(codebook.select("cid", "ce").collect(), key=lambda r: r["cid"])
+
+
+def _assign_expr(centroid_rows, vec_col: str):
+    """The nearest-centroid cid of ``vec_col`` as one Column: an array of K
+    squared-L2 distances + ``array_position`` of its min."""
+    dists = F.array(
+        *[l2sq_expr(F.col(vec_col), vector_lit(r["ce"])) for r in centroid_rows]
+    )
+    cid_arr = vector_lit([r["cid"] for r in centroid_rows], "int")
+    # cids sorted ascending → array_position's first match IS the lowest-cid
+    # tie winner; min compares the exact doubles the array holds.
+    idx = F.array_position(dists, F.array_min(dists)).cast("int")
+    return F.element_at(cid_arr, idx)
+
+
+def _nearest_cids(centroid_rows, query_vec: list[float], n_probe: int) -> list[int]:
+    """The IVF probe: the ``n_probe`` centroids nearest the query, computed
+    on the driver with the same float64 left-fold as :func:`l2sq_expr`
+    (squared-L2 ascending, ties to the lowest cid)."""
+    scored = [
+        (_py_l2sq(query_vec, r["ce"]), r["cid"]) for r in centroid_rows
+    ]
+    return [cid for _, cid in sorted(scored)[:n_probe]]
 
 
 def ivf_assign(
@@ -306,17 +332,8 @@ def ivf_assign(
     time the assignment becomes a partition column → IVF probe =
     partition-pruned scan of n_probe inverted lists, never a full-corpus
     pass."""
-    rows = sorted(
-        centroids.select("cid", "ce").collect(), key=lambda r: r["cid"]
-    )
-    dists = F.array(*[l2sq_expr(F.col(vec_col), vector_lit(r["ce"])) for r in rows])
-    cid_arr = vector_lit([r["cid"] for r in rows], "int")
-    # cids sorted ascending → array_position's first match IS the lowest-cid
-    # tie winner; min compares the exact doubles the array holds.
-    idx = F.array_position(dists, F.array_min(dists)).cast("int")
-    return embs.select(
-        id_col, vec_col, F.element_at(cid_arr, idx).alias("cid")
-    )
+    cid = _assign_expr(_codebook(centroids), vec_col)
+    return embs.select(id_col, vec_col, cid.alias("cid"))
 
 
 def ivf_topk(
@@ -329,18 +346,13 @@ def ivf_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF approximate top-k: probe the ``n_probe`` centroids nearest the
-    query, exact cosine only within their inverted lists. ``centroids`` is
-    the trained codebook — deterministic here (tests/oracles pass fixed
-    rows); at scale it comes from k-means over a sample."""
-    q = vector_lit(query_vec)
-    probe = (
-        centroids.withColumn("__d", l2sq_expr(F.col("ce"), q))
-        .orderBy(F.col("__d").asc(), F.col("cid").asc())
-        .limit(n_probe)
-        .select("cid")
-    )
-    assigned = ivf_assign(embs, centroids, id_col, vec_col)
-    survivors = assigned.join(F.broadcast(probe), "cid").select(id_col, vec_col)
+    query (picked on the driver), exact cosine only within their inverted
+    lists. ``centroids`` is the trained codebook — deterministic here
+    (tests/oracles pass fixed rows); at scale it comes from k-means over a
+    sample."""
+    rows = _codebook(centroids)
+    probe = _nearest_cids(rows, query_vec, n_probe)
+    survivors = embs.where(_assign_expr(rows, vec_col).isin(probe))
     return brute_topk(survivors, query_vec, k, id_col, vec_col)
 
 
@@ -407,9 +419,10 @@ def train_centroids(
     Scale shape: the trainer never touches the full corpus — a bounded
     pseudo-random sample (the ``sample_n`` lowest md5-salted ids — a fixed,
     engine-independent draw) feeds Lloyd iterations expressed as DataFrame
-    ops: assignment is the shuffle-free per-row argmin of :func:`ivf_assign`,
-    the update is a per-(cid, dim) mean whose sum folds in ascending-id
-    order (``array_sort(collect_list(struct(id, val)))`` + ``F.aggregate``)
+    ops: assignment is the shuffle-free per-row argmin of :func:`ivf_assign`
+    over the driver-held centroids (no codebook round-trip), the update is
+    a per-(cid, dim) mean whose sum folds in ascending-id order
+    (``array_sort(collect_list(struct(id, val)))`` + ``F.aggregate``)
     so the result is BIT-IDENTICAL to the pure-Python twin
     :func:`py_train_centroids` — which is what lets the DuckDB gate oracle
     receive the trained centroids as literals and still catch a trainer
@@ -439,10 +452,10 @@ def train_centroids(
 
     body = sample.select("__id", "__v")
     for _ in range(iters):
-        cents_df = spark.createDataFrame(cents, "cid int, ce array<double>")
-        assigned = ivf_assign(body, cents_df, id_col="__id", vec_col="__v")
+        rows = [{"cid": cid, "ce": ce} for cid, ce in cents]
         sums = (
-            assigned.select(
+            body.withColumn("cid", _assign_expr(rows, "__v"))
+            .select(
                 "cid", "__id", F.posexplode(F.col("__v")).alias("d", "val")
             )
             .groupBy("cid", "d")
@@ -538,10 +551,8 @@ def ivf_query_index(
     (`cid IN (...)` prunes at the parquet layer — visible as
     PartitionFilters in the plan), exact cosine within them. Identical
     results to :func:`ivf_topk` over the same codebook."""
-    rows = sorted(centroids.select("cid", "ce").collect(), key=lambda r: r["cid"])
-    probe_cids = _nearest_cids(rows, query_vec, n_probe)
-
-    lists = spark.read.parquet(path).where(F.col("cid").isin(probe_cids))
+    probe = _nearest_cids(_codebook(centroids), query_vec, n_probe)
+    lists = spark.read.parquet(path).where(F.col("cid").isin(probe))
     return brute_topk(lists, query_vec, k, id_col, vec_col)
 
 
@@ -554,28 +565,10 @@ def lsh_write_index(
 ) -> None:
     """Materialize the LSH buckets: vectors written partitioned by their
     hyperplane-signature bucket — the write-time contract behind
-    :func:`lsh_bucket_ann`'s pruning claim."""
+    :func:`lsh_query_index_multiprobe`'s pruning claim."""
     embs.withColumn(
         "bucket", bucket_expr(F.col(vec_col), dim, n_planes)
     ).write.mode("overwrite").partitionBy("bucket").parquet(path)
-
-
-def lsh_query_index(
-    spark,
-    path: str,
-    query_vec: list[float],
-    k: int,
-    dim: int,
-    n_planes: int = DEFAULT_LSH_PLANES,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Query a written LSH index: compute the query's bucket on the driver,
-    scan ONLY that partition (bucket PartitionFilter), exact cosine within.
-    Identical results to :func:`lsh_bucket_ann` over the same planes."""
-    q_bucket = query_bucket(query_vec, dim, n_planes)
-    lists = spark.read.parquet(path).where(F.col("bucket") == q_bucket)
-    return brute_topk(lists, query_vec, k, id_col, vec_col)
 
 
 def lsh_query_index_multiprobe(
@@ -591,7 +584,8 @@ def lsh_query_index_multiprobe(
 ) -> DataFrame:
     """Multi-probe over a written LSH index: enumerate the hamming-ball
     buckets around the query's bucket ON THE DRIVER (``sum_{i<=radius}
-    C(n_planes, i)`` ids — 1 + n_planes for radius 1) and probe them with
+    C(n_planes, i)`` ids — 1 + n_planes for radius 1, the query's bucket
+    alone for radius 0) and probe them with
     ``bucket IN (...)``, which prunes at the parquet partition layer
     (PartitionFilters in the plan). Identical results to
     :func:`lsh_multiprobe_ann` over the same planes, but the scan touches
@@ -745,17 +739,6 @@ def semdedup(
     )
 
 
-def _py_l2sq(a, b) -> float:
-    """Left-to-right float64 squared-L2 fold — the Python twin of
-    :func:`l2sq_expr` / the oracle's list_reduce (identical IEEE op order,
-    so all three agree bit-for-bit)."""
-    acc = 0.0
-    for x, y in zip(a, b):
-        d = float(x) - float(y)
-        acc = acc + d * d
-    return acc
-
-
 def pq_encode(
     embs: DataFrame,
     codebooks: DataFrame,
@@ -775,17 +758,16 @@ def pq_encode(
     is a single zero-shuffle projection — at 10^9 vectors the codes (n_sub
     bytes/vector vs 4·D) are the 100-TB-store serving representation.
     """
-    rows = sorted(codebooks.select("cid", "ce").collect(), key=lambda r: r["cid"])
+    rows = _codebook(codebooks)
     return embs.select(
         id_col, vec_col, pq_codes_expr(rows, n_sub, vec_col).alias("codes")
     )
 
 
 def pq_codes_expr(codebook_rows, n_sub: int, vec_col: str = "embedding"):
-    """The PQ encode as a single Column over pre-collected codebook rows —
-    shared by every encode site so the codebook is collected ONCE per job
-    (pq_topk and the index writers previously paid a second driver
-    round-trip via pq_encode's own collect)."""
+    """The PQ encode as a single Column over pre-collected codebook rows
+    (:func:`_codebook`) — shared by every encode site, so each call
+    collects its codebook once."""
     rows = codebook_rows
     dim = len(rows[0]["ce"])
     assert dim % n_sub == 0, (dim, n_sub)
@@ -833,25 +815,24 @@ def pq_topk(
     Python and inlined as literals — bit-identical to the same fold done
     in Spark or DuckDB — and candidate ties break on id.
     """
-    rows = sorted(codebooks.select("cid", "ce").collect(), key=lambda r: r["cid"])
+    rows = _codebook(codebooks)
     encoded = embs.select(
         id_col, vec_col, pq_codes_expr(rows, n_sub, vec_col).alias("codes")
     )
-    score = _pq_adc_expr(rows, query_vec, n_sub)
-    cand = (
-        encoded.select(id_col, vec_col, score.alias("__adc"))
-        .orderBy(F.col("__adc").asc(), F.col(id_col).asc())
-        .limit(rerank)
-        .select(id_col, vec_col)
-    )
+    cand = _adc_shortlist(encoded, rows, query_vec, n_sub, rerank, id_col, vec_col)
     return brute_topk(cand, query_vec, k, id_col, vec_col)
 
 
-def _pq_adc_expr(codebook_rows, query_vec: list[float], n_sub: int):
-    """ADC score Column over a ``codes`` column: sum over subspaces of the
-    literal query→centroid LUT entry each code selects. LUT entries are
-    float64 left-fold distances computed in Python (:func:`_py_l2sq`) —
-    bit-identical to the same fold in Spark or SQL."""
+def _adc_shortlist(
+    codes: DataFrame, codebook_rows, query_vec: list[float], n_sub: int,
+    rerank: int, id_col: str, *carry: str,
+) -> DataFrame:
+    """The PQ shortlist: the ``rerank`` rows of ``codes`` with the lowest
+    ADC score (ties to the lowest id), as (id, *carry). The score sums,
+    over subspaces, the literal query→centroid LUT entry each code
+    selects. LUT entries are float64 left-fold distances computed in
+    Python (:func:`_py_l2sq`) — bit-identical to the same fold in Spark or
+    SQL."""
     dim = len(codebook_rows[0]["ce"])
     assert dim % n_sub == 0, (dim, n_sub)
     sub = dim // n_sub
@@ -865,7 +846,12 @@ def _pq_adc_expr(codebook_rows, query_vec: list[float], n_sub: int):
         )
         term = F.element_at(lut, F.element_at(F.col("codes"), j + 1))
         score = term if score is None else score + term
-    return score
+    return (
+        codes.select(id_col, *carry, score.alias("__adc"))
+        .orderBy(F.col("__adc").asc(), F.col(id_col).asc())
+        .limit(rerank)
+        .select(id_col, *carry)
+    )
 
 
 def pq_write_index(
@@ -902,26 +888,11 @@ def pq_query_index(
     ``rerank`` ids, fetch only those vectors from ``store`` via a broadcast
     semi-join (store side streams, zero shuffle), exact-cosine rescore.
     Row-identical to :func:`pq_topk` over the same data (pinned in tests)."""
-    rows = sorted(codebooks.select("cid", "ce").collect(), key=lambda r: r["cid"])
-    codes = spark.read.parquet(path)
-    short = (
-        codes.select(id_col, _pq_adc_expr(rows, query_vec, n_sub).alias("__adc"))
-        .orderBy(F.col("__adc").asc(), F.col(id_col).asc())
-        .limit(rerank)
-        .select(id_col)
+    short = _adc_shortlist(
+        spark.read.parquet(path), _codebook(codebooks), query_vec, n_sub,
+        rerank, id_col,
     )
-    fetched = store.join(F.broadcast(short), id_col, "left_semi")
-    return brute_topk(fetched, query_vec, k, id_col, vec_col)
-
-
-def _nearest_cids(centroid_rows, query_vec: list[float], n_probe: int) -> list[int]:
-    """The ``n_probe`` coarse centroids nearest the query, computed on the
-    driver with the same float64 left-fold as :func:`l2sq_expr` (ties to
-    lowest cid) — the codebook is O(K×D) tiny, so probing is free."""
-    scored = [
-        (_py_l2sq(query_vec, r["ce"]), r["cid"]) for r in centroid_rows
-    ]
-    return [cid for _, cid in sorted(scored)[:n_probe]]
+    return _rescore(store, short, query_vec, k, id_col, vec_col)
 
 
 def ivfpq_write_index(
@@ -939,13 +910,12 @@ def ivfpq_write_index(
     4·D/n_sub compression multiply. Full vectors never land in the index;
     the rescore fetches them from the store by id."""
     assigned = ivf_assign(embs, coarse_centroids, id_col, vec_col)
-    pq_rows = sorted(
-        pq_codebooks.select("cid", "ce").collect(), key=lambda r: r["cid"]
-    )
     # one projection carries codes AND cid: no self-join back on id (which
     # evaluated the ivf_assign argmin twice and shuffled N x N rows)
     assigned.select(
-        id_col, pq_codes_expr(pq_rows, n_sub, vec_col).alias("codes"), "cid"
+        id_col,
+        pq_codes_expr(_codebook(pq_codebooks), n_sub, vec_col).alias("codes"),
+        "cid",
     ).write.mode("overwrite").partitionBy("cid").parquet(path)
 
 
@@ -968,22 +938,12 @@ def ivfpq_query_index(
     ADC shortlist → broadcast-semi vector fetch from ``store`` → exact
     rescore. Equals the eager composition (IVF survivors → PQ shortlist →
     rescore) row-for-row; pinned in tests."""
-    coarse_rows = sorted(
-        coarse_centroids.select("cid", "ce").collect(), key=lambda r: r["cid"]
-    )
-    pq_rows = sorted(
-        pq_codebooks.select("cid", "ce").collect(), key=lambda r: r["cid"]
-    )
-    probe = _nearest_cids(coarse_rows, query_vec, n_probe)
+    probe = _nearest_cids(_codebook(coarse_centroids), query_vec, n_probe)
     codes = spark.read.parquet(path).where(F.col("cid").isin(probe))
-    short = (
-        codes.select(id_col, _pq_adc_expr(pq_rows, query_vec, n_sub).alias("__adc"))
-        .orderBy(F.col("__adc").asc(), F.col(id_col).asc())
-        .limit(rerank)
-        .select(id_col)
+    short = _adc_shortlist(
+        codes, _codebook(pq_codebooks), query_vec, n_sub, rerank, id_col
     )
-    fetched = store.join(F.broadcast(short), id_col, "left_semi")
-    return brute_topk(fetched, query_vec, k, id_col, vec_col)
+    return _rescore(store, short, query_vec, k, id_col, vec_col)
 
 
 # ---------------------------------------------------------------------------

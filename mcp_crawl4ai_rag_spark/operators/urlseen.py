@@ -607,8 +607,9 @@ def write_bucketed(
 ) -> None:
     """Persist a frontier/url_seen-shaped table bucketed AND sorted on
     (url_hash, canonical_url) — the layout that makes the exact anti-join
-    shuffle-free: both sides arrive hash-clustered on the join keys, so the
-    sort-merge join needs no Exchange (asserted in tests). At 10^10 rows the
+    shuffle-free: :func:`anti_join_seen` over two such tables (no filter)
+    gets both sides hash-clustered on the join keys, so the sort-merge join
+    needs no Exchange (asserted in tests). At 10^10 rows the
     anti-join shuffle is the single biggest data movement in an epoch; the
     bucketed layout removes it entirely as long as frontier and seen share
     one bucket count (Iceberg: a shared bucket partition transform)."""
@@ -618,14 +619,4 @@ def write_bucketed(
         .sortBy("url_hash", "canonical_url")
         .format("parquet")
         .saveAsTable(table)
-    )
-
-
-def bucketed_anti_join_seen(spark, frontier_table: str, seen_table: str) -> DataFrame:
-    """J1 over two bucketed tables: candidates not present in the seen set,
-    with zero shuffle on either side."""
-    return spark.table(frontier_table).join(
-        spark.table(seen_table).select("url_hash", "canonical_url"),
-        on=["url_hash", "canonical_url"],
-        how="left_anti",
     )

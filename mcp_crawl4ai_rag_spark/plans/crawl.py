@@ -909,9 +909,14 @@ class CrawlEngine:
             state["backoff"] = [
                 [r["host"], r["backoff_level"]] for r in backoff.collect()
             ]
-        return self.ckpt.write_epoch(
+        reread, url_seen = self.ckpt.write_epoch(
             epoch, frontier, url_seen, fetched, lineage, state
         )
+        # a stored frontier is already a table scan: keep its host
+        # bucketing for the next pop (the snapshot copy serves resume())
+        if self.frontier_store_dir is not None:
+            return frontier, url_seen
+        return reread, url_seen
 
 
 def crawl_report(

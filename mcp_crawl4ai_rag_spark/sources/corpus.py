@@ -4,8 +4,9 @@ This module is the SINGLE SOURCE OF TRUTH for the graph formulas. Three
 independent consumers reproduce them exactly:
 
 1. Spark generation here (pure column expressions over ``spark.range``);
-2. the DuckDB recursive-CTE oracle in ``__spark_entry__.py`` (SQL fragments
-   rendered from the same constants via :func:`oracle_edges_sql`);
+2. the DuckDB recursive-CTE oracle in ``__spark_entry__.py`` (its edge step
+   is rendered from EDGE_A/EDGE_B/EDGE_C/OUT_DEGREE, its fetch/robots
+   predicate via :func:`oracle_expandable_sql`);
 3. the plain-Python BFS oracle in tests (:func:`py_graph`).
 
 Graph contract for page id ``i`` in ``[0, n)``:
@@ -572,15 +573,6 @@ def gen_robots_bodies(spark: SparkSession, n_hosts: int = N_HOSTS) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Oracle SQL fragments (DuckDB) — rendered from the same constants
 # ---------------------------------------------------------------------------
-
-
-def oracle_edges_sql(id_expr: str = "r.id", n_expr: str = "p.n") -> str:
-    """List literal of the OUT_DEGREE logical edge targets of ``id_expr``."""
-    terms = ", ".join(
-        f"({EDGE_A}*{id_expr} + {EDGE_B * j + EDGE_C}) % {n_expr}"
-        for j in range(OUT_DEGREE)
-    )
-    return f"[{terms}]"
 
 
 def oracle_url_sql(id_expr: str) -> str:

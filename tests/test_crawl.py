@@ -1256,6 +1256,10 @@ def test_stored_frontier_resume_identity(spark, corpus, tmp_path):
         )
 
     full = eng("f_full", "c_full").run(seeds, max_depth=3, politeness=True)
+    # the frontier an epoch hands on is the host-bucketed stored table (its
+    # scan carries the bucket spec), not the snapshot's parquet re-read
+    plan = full.frontier_remaining._jdf.queryExecution().executedPlan().toString()
+    assert "Bucketed:" in plan and "spark_catalog" in plan, plan[:1500]
     # killed run: stop after 2 epochs, then resume to completion
     eng("f_kill", "c_kill").run(seeds, max_depth=3, politeness=True, max_epochs=2)
     resumed = eng("f_kill", "c_kill").resume(max_epochs=full.epochs_run)

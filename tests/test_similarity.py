@@ -204,11 +204,13 @@ def test_ivf_written_index_prunes_partitions_and_matches(spark, tmp_path):
 
 
 def test_lsh_written_index_prunes_and_matches(spark, tmp_path):
+    """Single-bucket (radius 0) probe of the written index: equal to the
+    full-scan radius-0 multiprobe and pruned by a bucket PartitionFilter."""
     from pyspark.sql import functions as F
 
     from mcp_crawl4ai_rag_spark.operators.similarity import (
-        lsh_bucket_ann,
-        lsh_query_index,
+        lsh_multiprobe_ann,
+        lsh_query_index_multiprobe,
         lsh_write_index,
     )
 
@@ -221,8 +223,8 @@ def test_lsh_written_index_prunes_and_matches(spark, tmp_path):
     q = [float(((5 + d) * 37) % 23 - 11) for d in range(6)]
     path = str(tmp_path / "lsh_index")
     lsh_write_index(embs, path, dim=6)
-    got = lsh_query_index(spark, path, q, 5, dim=6)
-    want = lsh_bucket_ann(embs, q, 5, dim=6)
+    got = lsh_query_index_multiprobe(spark, path, q, 5, dim=6, radius=0)
+    want = lsh_multiprobe_ann(embs, q, 5, dim=6, radius=0)
     assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want.collect()]
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "bucket" in plan.split("PartitionFilters")[1][:120]

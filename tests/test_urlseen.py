@@ -505,7 +505,7 @@ def test_bucketed_anti_join_has_no_exchange(spark, tmp_path):
     plan with ZERO Exchange — both sides pre-clustered on the join keys —
     and return the exact set difference."""
     from mcp_crawl4ai_rag_spark.operators.urlseen import (
-        bucketed_anti_join_seen,
+        anti_join_seen,
         write_bucketed,
     )
 
@@ -526,7 +526,7 @@ def test_bucketed_anti_join_has_no_exchange(spark, tmp_path):
     try:
         write_bucketed(cand, "t_frontier_bkt", n_buckets=8)
         write_bucketed(seen, "t_seen_bkt", n_buckets=8)
-        out = bucketed_anti_join_seen(spark, "t_frontier_bkt", "t_seen_bkt")
+        out = anti_join_seen(spark.table("t_frontier_bkt"), spark.table("t_seen_bkt"))
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, plan[:800]
         got = {r["canonical_url"] for r in out.collect()}

@@ -166,7 +166,7 @@ def main():
 
     # 7. bucketed URL-seen anti-join: zero Exchange on either side
     from mcp_crawl4ai_rag_spark.operators.urlseen import (
-        bucketed_anti_join_seen,
+        anti_join_seen,
         write_bucketed,
     )
 
@@ -182,7 +182,7 @@ def main():
         write_bucketed(c2, "plans_frontier_bkt", n_buckets=8)
         write_bucketed(c2.limit(2000), "plans_seen_bkt", n_buckets=8)
         bkt_plan = formatted(
-            bucketed_anti_join_seen(spark, "plans_frontier_bkt", "plans_seen_bkt")
+            anti_join_seen(spark.table("plans_frontier_bkt"), spark.table("plans_seen_bkt"))
         )
         ok_no_exchange = "Exchange" not in bkt_plan
         sections.append((
@@ -998,7 +998,7 @@ def main():
     # neither popped nor deferred re-runs it.
     from mcp_crawl4ai_rag_spark import local_ckpt
     from mcp_crawl4ai_rag_spark.operators.politeness import pop_per_host
-    from mcp_crawl4ai_rag_spark.operators.urlseen import anti_join_seen, build_bloom
+    from mcp_crawl4ai_rag_spark.operators.urlseen import build_bloom
 
     ep_seen = local_ckpt(
         fr.where(F.col("seq") % 3 == 0).select("url_hash", "canonical_url")

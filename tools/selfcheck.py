@@ -4,7 +4,7 @@ Runs each ``__spark_entry__.queries()`` entry on Spark and its
 ``oracle_sql()`` twin on DuckDB over the same sf dir, then compares
 row-count, column names, and order-insensitive values. Usage:
 
-    python tools/check_entry.py [sf_dir] [query ...]
+    python tools/selfcheck.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
